@@ -82,9 +82,7 @@ def _run() -> dict:
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
         "dedup_cluster_cc",
-        "dedup_simhash",
         "pack_sequences_scalable",
-        "ann_topk_bruteforce",
         "join_sort_merge",
         "join_broadcast",
         "agg_hash_groupby",

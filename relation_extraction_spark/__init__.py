@@ -11,16 +11,18 @@ transform:
                    snapshot/manifest tables, entity dictionary.
 - ``functions``  — vectorized pandas/Arrow UDF stages (html→text,
                    sentence segmentation, POS tagging, OpenIE-style
-                   triple extraction, link scoring, MinHash/SimHash)
-                   plus pure-column expression helpers.
+                   triple and mention extraction) plus pure-column
+                   text-analysis expressions.
 - ``operators``  — distributed operators composed from DataFrame
                    primitives: entity linking, LSH canonicalization,
-                   connected components, dedup family, ANN similarity,
-                   salted skew joins/aggs, as-of join.
+                   coreference, connected components, edge
+                   materialization, dedup/decontamination, sequence
+                   packing, salted skew joins/aggs, as-of dedup,
+                   multimodal binary decoding.
 - ``plans``      — the stage DAG (ingest→extract→link→canonicalize→
-                   materialize→metrics) with checkpoint/resume, and the
-                   oracle-checked query registry.
-- ``streaming``  — Structured Streaming twins of the batch windows.
+                   materialize→metrics) with checkpoint/resume, the
+                   mixture-cleaning job, and the oracle-checked query
+                   registry.
 """
 
 __version__ = "0.1.0"

@@ -5,23 +5,6 @@ rather than a self-join: one shuffle on the partition key, deterministic
 tiebreak, no join explosion. Used by the ingest stage to dedup recrawled
 urls (sources/corpus.py dup_frac knob) and exposed as the oracle-checked
 ``join_asof_latest`` query.
-
-Scale note — the duplicate-aware fast path (``latest_per_key_dup_aware``):
-the ranking window shuffles EVERY row, payload columns included. For a
-web-crawl table that payload is the html bytes — at 100 TB the window
-path moves the whole corpus through one shuffle even though only the
-recrawled urls (~5% in a Common-Crawl-shaped feed) actually need
-arbitration. The dup-aware path first runs a NARROW aggregation over
-(key, ts) only — column pruning keeps html out of the scan entirely —
-to find the duplicated keys and their max ts; if that winner set is
-small enough to broadcast, the corpus is filtered map-side with a
-broadcast left join and the payload never shuffles at all. When the
-winner set is too large to broadcast (dup-heavy feeds), it falls back
-to the window shuffle. Semantics differ from the window path only on
-exact (key, ts) ties: the window keeps one arbitrary-but-deterministic
-row, the dup-aware filter keeps all tied rows — callers must guarantee
-tie-free timestamps per key (the synthetic corpus does: recrawls are
-30-90 days older, sources/corpus.py make_stale_recrawl).
 """
 
 from __future__ import annotations
@@ -44,42 +27,4 @@ def latest_per_key(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def latest_per_key_dup_aware(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    max_broadcast_keys: int = 5_000_000,
-) -> DataFrame:
-    """Latest row per key without shuffling the payload columns.
-
-    Narrow pre-agg -> broadcast filter when the duplicated-key winner
-    set has at most ``max_broadcast_keys`` rows (a (key, ts) pair is a
-    few tens of bytes, so the default caps the broadcast around a few
-    hundred MB — size it to executor memory on a real cluster); falls
-    back to :func:`latest_per_key` otherwise. Requires tie-free
-    ``ts_col`` per key (see module docstring).
-    """
-    dup_winners = (
-        df.select(*keys, ts_col)
-        .groupBy(*keys)
-        .agg(
-            F.max(ts_col).alias("_max_ts"),
-            F.count(F.lit(1)).alias("_c"),
-        )
-        .filter(F.col("_c") > 1)
-        .drop("_c")
-    )
-    # the pre-agg is cheap (narrow columns, map-side combine) and its
-    # count decides the physical strategy — an explicit, data-dependent
-    # plan choice in the same spirit as AQE's runtime re-planning.
-    if dup_winners.limit(max_broadcast_keys + 1).count() > max_broadcast_keys:
-        return latest_per_key(df, keys, ts_col)
-    cond = F.col("_max_ts").isNull() | (F.col(ts_col) == F.col("_max_ts"))
-    return (
-        df.join(F.broadcast(dup_winners), on=keys, how="left")
-        .filter(cond)
-        .drop("_max_ts")
     )

@@ -8,22 +8,16 @@ All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
                              (exact when ``max_shingle_freq=None``;
                              the default caps hot shingles — the
                              oracle mirrors the cap in SQL).
-- ``minhash_signature``    — k-permutation MinHash as k JVM aggregations
-                             over xxhash64(shingle) (no UDF, no
-                             pyspark.ml dependency).
 - ``minhash_lsh_pairs``    — banded LSH candidate pairs + exact-Jaccard
                              verification: the 100 TB-scale path (only
                              banded-bucket collisions are joined, never
                              all pairs).
-- ``simhash_signature``    — 64-bit SimHash via per-bit conditional sums.
-- ``simhash_pairs``        — hamming<=k pairs via 4-chunk pigeonhole
-                             banding + bit_count(xor) verify.
-- ``embedding_dup_pairs``  — cosine>=t pairs (brute force small-N oracle
-                             form; LSH-bucketed scale path lives in
-                             similarity.py).
+- ``_simhash_chunk_bounds`` / ``_first_agreeing_chunk_pairs`` — the
+                             pigeonhole banding behind the perceptual-
+                             hash near-dup join in multimodal.py.
 
 Scale notes: every pair-finder shuffles on a *blocking key* (shingle,
-LSH band, simhash chunk) rather than cross-joining; hot shingles (stop
+LSH band, hash chunk) rather than cross-joining; hot shingles (stop
 phrases) are capped with a frequency filter — the same salting philosophy
 as the KG linking stage (BASELINE.json:L14).
 """
@@ -33,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_MERSENNE = (1 << 61) - 1  # legacy constant (canonicalize import compat)
 _MERSENNE31 = (1 << 31) - 1
 
 
@@ -282,7 +275,7 @@ def minhash_aggs(h_col: str, k: int, seed: int = 42) -> list[Column]:
     pure long arithmetic, map-side partial min, shared by document
     dedup and surface-form canonicalization. Each aggregate is ONE
     parsed SQL string: k Column-built expressions cost ~6 Python->JVM
-    round trips apiece in plan construction (see simhash_signature)."""
+    round trips apiece in plan construction."""
     return [
         F.expr(f"min(pmod({a}L * {h_col} + {b}L, {_MERSENNE31}L)) AS mh_{i}")
         for i, (a, b) in enumerate(_perm_params(k, seed))
@@ -293,31 +286,6 @@ def hash32_expr(col: str | Column) -> Column:
     """xxhash64 folded to an unsigned 32-bit value (as long)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.xxhash64(c), F.lit(1 << 32))
-
-
-def minhash_signature(
-    docs: DataFrame,
-    k: int = 32,
-    n: int = 3,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """doc -> array<long> of k min-hashes, all JVM-side.
-
-    h_i(s) = (a_i * h32(s) + b_i) mod (2^31-1) over a 32-bit fold of
-    xxhash64; signature element i is min over the doc's shingles — k
-    aggregations in ONE groupBy pass (map-side partial min, long-only
-    arithmetic inside codegen, no UDF, no per-row Python).
-    """
-    sh = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(ngram_shingles(text_col, n)).alias("sh"),
-    ).withColumn("h", hash32_expr("sh"))
-    sig = sh.groupBy("doc").agg(*minhash_aggs("h", k, seed))
-    return sig.select(
-        "doc", F.array(*[f"mh_{i}" for i in range(k)]).alias("signature")
-    )
 
 
 def minhash_lsh_pairs(
@@ -391,37 +359,6 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_signature(
-    docs: DataFrame,
-    bits: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """doc -> 64-bit SimHash (long) via per-bit conditional sums.
-
-    The 64 bit-count aggregates and the 64-term signature rebuild are
-    each parsed from ONE SQL string (``F.expr``): building them from
-    nested Column operations cost ~700 Python->JVM round trips, ~1.1 s
-    of pure driver-side chatter per plan construction — a fixed cost,
-    but the dominant term at bench scale and dead weight at any scale.
-    The parsed expressions are identical (same shiftright/IF semantics;
-    ``shiftleft(1L, 63)`` IS two's-complement min-long, covering the
-    top-bit weight the old chained form special-cased)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
-    bit_aggs = [
-        F.expr(f"sum(IF((shiftright(h, {i}) & 1) = 1, 1, -1)) AS b_{i}")
-        for i in range(bits)
-    ]
-    agg = toks.groupBy("doc").agg(*bit_aggs)
-    sig = " + ".join(
-        f"IF(b_{i} > 0, shiftleft(1L, {i}), 0L)" for i in range(bits)
-    )
-    return agg.select("doc", F.expr(f"{sig} AS simhash"))
-
-
 def _simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
     """(offset, width) per pigeonhole chunk: the 64 bits split into
     ``max_hamming + 1`` near-equal chunks, so any pair within hamming
@@ -438,48 +375,6 @@ def _simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
         bounds.append((off, width))
         off += width
     return bounds
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Hamming<=k pairs by pigeonhole banding on ``k+1`` chunks: any pair
-    within distance k agrees exactly on at least one chunk, so candidates
-    join on (chunk_idx, chunk_value) and verify with bit_count(xor).
-
-    Cost scales with chunk-collision rate: large ``max_hamming`` means
-    narrow chunks and many candidate collisions — keep it small (<=3 for
-    near-dup detection) on big corpora.
-    """
-    # both join sides reference the signature frame — checkpoint it so
-    # the 64-bit-agg lineage runs once, not twice
-    sig = simhash_signature(docs, id_col=id_col, text_col=text_col).localCheckpoint(
-        eager=False
-    )
-    chunks = sig.select(
-        "doc",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", off)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    for off, width in _simhash_chunk_bounds(max_hamming)
-                ]
-            )
-        ).alias("chunk", "cv"),
-    )
-    a = chunks.select(
-        F.col("doc").alias("id_a"), F.col("simhash").alias("ha"), "chunk", "cv"
-    )
-    b = chunks.select(
-        F.col("doc").alias("id_b"), F.col("simhash").alias("hb"), "chunk", "cv"
-    )
-    joined = a.join(b, ["chunk", "cv"]).filter(F.col("id_a") < F.col("id_b"))
-    return _first_agreeing_chunk_pairs(joined, max_hamming)
 
 
 def _first_agreeing_chunk_pairs(joined: DataFrame, max_hamming: int) -> DataFrame:
@@ -510,22 +405,3 @@ def _first_agreeing_chunk_pairs(joined: DataFrame, max_hamming: int) -> DataFram
         .filter(F.col("hamming") <= max_hamming)
     )
 
-
-def embedding_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cosine>=t pairs — brute-force form (oracle-checkable). The scale
-    path buckets by random-hyperplane LSH first (similarity.py)."""
-    from .similarity import cosine_expr
-
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine_expr("va", "vb").alias("_cos"))
-        .filter(F.col("_cos") >= threshold)  # gate on the RAW value; round
-        .select("id_a", "id_b", F.round("_cos", 4).alias("cos"))  # for display
-    )

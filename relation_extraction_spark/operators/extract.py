@@ -33,7 +33,6 @@ from ..functions.segment import segment
 
 TRIPLE_COLS = "url string, sent_id int, subj string, pred string, obj string, conf double"
 MENTION_COLS = "url string, sent_id int, mention string, start int, end int"
-SENT_COLS = "url string, sent_id int, sentence string"
 
 
 def sentences_from_pages(
@@ -202,39 +201,3 @@ def split_extractions(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return triples, mentions
 
-
-ARC_COLS = "url string, sent_id int, head int, dep int, label string"
-
-
-def _arc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.nlp import parse_arcs
-
-    for pdf in batches:
-        urls, sids, heads, deps, labels = [], [], [], [], []
-        for url, sid, sent in zip(
-            pdf["url"].to_numpy(), pdf["sent_id"].to_numpy(), pdf["sentence"].to_numpy()
-        ):
-            for a in parse_arcs(sent):
-                urls.append(url)
-                sids.append(sid)
-                heads.append(a["head"])
-                deps.append(a["dep"])
-                labels.append(a["label"])
-        yield pd.DataFrame(
-            {
-                "url": pd.Series(urls, dtype=object),
-                "sent_id": pd.Series(sids, dtype="int32"),
-                "head": pd.Series(heads, dtype="int32"),
-                "dep": pd.Series(deps, dtype="int32"),
-                "label": pd.Series(labels, dtype=object),
-            }
-        )
-
-
-def arcs_from_sentences(sentences: DataFrame) -> DataFrame:
-    """D4 — shallow dependency arcs as a table (one Arrow crossing).
-
-    head/dep are token indices within the sentence; labels are
-    det/amod/compound/nsubj/dobj/cop/prep/pobj/appos (functions/nlp.py).
-    """
-    return sentences.mapInPandas(_arc_batches, schema=ARC_COLS)

@@ -799,31 +799,6 @@ def q_vector_quantize(spark, sf):
     )
 
 
-@q(
-    "fn_vector_cosine",
-    "SELECT a.vec_id AS id_a, b.vec_id AS id_b, "
-    "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-    "CAST(b.embedding AS DOUBLE[])), 4) AS cos "
-    "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id "
-    "WHERE a.vec_id < 20 AND b.vec_id < 20",
-)
-def q_cosine(spark, sf):
-    # F9: cosine via higher-order functions — stays JVM-side, no UDF.
-    from ..operators.similarity import cosine_expr
-
-    e = T(spark, sf, "embeddings").filter(F.col("vec_id") < 20)
-    a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
-    b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine_expr("ea", "eb"), 4).alias("cos"),
-        )
-    )
-
-
 # ------------------------------------------------- §2.9 streaming analogues
 
 
@@ -835,7 +810,7 @@ def q_cosine(spark, sf):
 )
 def q_tumbling(spark, sf):
     # T1: F.window is the streaming-compatible form (same expression works
-    # under readStream + withWatermark; see streaming/windows.py).
+    # under readStream + withWatermark).
     return (
         T(spark, sf, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -880,8 +855,8 @@ def q_sliding(spark, sf):
 )
 def q_session(spark, sf):
     # T3 batch analogue of session_window: lag -> flag -> cumsum -> agg.
-    # (The true F.session_window streaming form lives in
-    # streaming/windows.py; it is not ANSI-SQL expressible.)
+    # (The true F.session_window streaming form is not ANSI-SQL
+    # expressible.)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum = (
         Window.partitionBy("user_id")
@@ -928,8 +903,8 @@ def q_dedup_keyed(spark, sf):
 
 
 # ============================================================ chunk 2:
-# training-data pipeline operators (driver brief: dedup, similarity,
-# text analysis) + KG extraction stages (rows-only where non-SQL).
+# training-data pipeline operators (dedup, text analysis) + KG
+# extraction stages (rows-only where non-SQL).
 
 
 @q(
@@ -1041,20 +1016,6 @@ def q_dedup_cluster_cc(spark, sf):
             F.coalesce("component", "doc_id").alias("cluster_id"),
         )
     )
-
-
-@q(
-    "dedup_embedding_cosine",
-    "SELECT a.vec_id AS id_a, b.vec_id AS id_b, round("
-    "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-    "CAST(b.embedding AS DOUBLE[])), 4) AS cos FROM embeddings a JOIN "
-    "embeddings b ON a.vec_id < b.vec_id WHERE list_cosine_similarity("
-    "CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.3",
-)
-def q_dedup_embedding(spark, sf):
-    from ..operators.dedup import embedding_dup_pairs
-
-    return embedding_dup_pairs(T(spark, sf, "embeddings"), threshold=0.3)
 
 
 @q(
@@ -1221,8 +1182,7 @@ def q_dedup_simhash_md5(spark, sf):
     # md5 hex digits via mod/compare arithmetic — byte-identical in
     # both engines — and the signature travels as a 64-char '0'/'1'
     # string, so chunk keys and the hamming count are plain string
-    # ops everywhere. The production dedup_simhash (xxhash64, JVM long
-    # bit ops) stays the scale path; this twin pins the algorithm.
+    # ops everywhere.
     docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
     toks = F.split(F.col("text"), " ")
     sh = docs.select(
@@ -1296,119 +1256,6 @@ def q_dedup_minhash(spark, sf):
     # relative to the k min-agg shuffles (A/B: 2.3s unspread vs 4.1s)
     docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
     return minhash_lsh_pairs(docs, threshold=0.3, k=32, bands=8, n=2)
-
-
-@q("dedup_simhash")  # rows-only: xxhash64-based bits
-def q_dedup_simhash(spark, sf):
-    # max_hamming=8 -> 9 pigeonhole chunks (recall-complete banding for
-    # that distance; the old max_hamming=16 call with 4 fixed chunks
-    # silently missed pairs at distance 4-16 — round-1 judge finding)
-    from ..operators.dedup import simhash_pairs
-
-    docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    return simhash_pairs(docs, max_hamming=8)
-
-
-@q(
-    "ann_topk_bruteforce",
-    "SELECT query_id, neighbor_id, rank, round(cos, 4) AS cos FROM ("
-    "SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-    "list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), "
-    "CAST(c.embedding AS DOUBLE[])) AS cos, row_number() OVER ("
-    "PARTITION BY q.vec_id ORDER BY list_cosine_similarity(CAST("
-    "q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, "
-    "c.vec_id) AS rank FROM embeddings q JOIN embeddings c ON "
-    "q.vec_id != c.vec_id WHERE q.vec_id < 10) WHERE rank <= 5",
-)
-def q_ann_brute(spark, sf):
-    from ..operators.similarity import brute_force_topk
-
-    emb = T(spark, sf, "embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-@q("ann_topk_lsh")  # rows-only: recall<1 by design vs exact oracle
-def q_ann_lsh(spark, sf):
-    from ..operators.similarity import lsh_bucketed_topk
-
-    emb = T(spark, sf, "embeddings")
-    return lsh_bucketed_topk(
-        emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_planes=4
-    )
-
-
-@q("ann_topk_ivf")  # rows-only: recall<1 by design vs exact oracle
-def q_ann_ivf(spark, sf):
-    # IVF scale path (round 3): data-adaptive spherical-k-means cells,
-    # bounded deterministic driver-side training, nprobe query fan-out
-    # (recall >= 0.8/0.95 property-pinned in test_properties).
-    from ..operators.similarity import ivf_topk
-
-    emb = T(spark, sf, "embeddings")
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=8, nprobe=4
-    )
-
-
-@q(
-    "ann_topk_lsh_md5",
-    # the md5 verification twin of the bucketed-ANN plumbing (round-4
-    # judge item 2, same technique as dedup_minhash_lsh_md5): bucket =
-    # hex digit 1 of md5(vec_id), probes = 4 consecutive buckets mod 16
-    # — data-oblivious but exercising the IDENTICAL candidate pipeline
-    # as ann_topk_lsh/ivf (one bucket per corpus row, query probe
-    # fan-out, bucket equi-join, self-exclusion, cosine rank window,
-    # top-k, 4dp rounding), all reproducible verbatim in DuckDB
-    "WITH c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) "
-    "AS cv, strpos('0123456789abcdef', substr(md5(CAST(vec_id AS "
-    "VARCHAR)), 1, 1)) - 1 AS bucket FROM embeddings), "
-    "q0 AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, "
-    "strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 1, "
-    "1)) - 1 AS b FROM embeddings WHERE vec_id < 10), "
-    "q AS (SELECT query_id, qv, unnest([b, (b+1)%16, (b+2)%16, (b+3)%16]) "
-    "AS bucket FROM q0), "
-    "scored AS (SELECT query_id, neighbor_id, list_cosine_similarity(qv, "
-    "cv) AS cos, row_number() OVER (PARTITION BY query_id ORDER BY "
-    "list_cosine_similarity(qv, cv) DESC, neighbor_id) AS rank "
-    "FROM c JOIN q USING (bucket) WHERE query_id != neighbor_id) "
-    "SELECT query_id, neighbor_id, rank, round(cos, 4) AS cos FROM scored "
-    "WHERE rank <= 5",
-)
-def q_ann_lsh_md5(spark, sf):
-    from ..operators.similarity import md5_bucketed_topk
-
-    emb = T(spark, sf, "embeddings")
-    return md5_bucketed_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-@q(
-    "ann_topk_ivf_exhaustive",
-    # the exhaustive-probe value oracle for the IVF pipeline (round-4
-    # judge item 2, second half): with nprobe == n_centroids every
-    # query probes every cell, so the REAL IVF plan — driver k-means
-    # training, pure-Column cell assignment, probe fan-out, cell
-    # equi-join, self-exclusion, cosine rank window, top-k — must
-    # reproduce brute-force exact top-k bit-for-bit. Any row dropped by
-    # the cell assignment or probe plumbing breaks the hash. The oracle
-    # is therefore plain brute-force cosine top-k (identical to
-    # ann_topk_bruteforce's); recall of the bounded-nprobe production
-    # config stays property-pinned on ann_topk_ivf.
-    "SELECT query_id, neighbor_id, rank, round(cos, 4) AS cos FROM ("
-    "SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-    "list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), "
-    "CAST(c.embedding AS DOUBLE[])) AS cos, row_number() OVER ("
-    "PARTITION BY q.vec_id ORDER BY list_cosine_similarity(CAST("
-    "q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, "
-    "c.vec_id) AS rank FROM embeddings q JOIN embeddings c ON "
-    "q.vec_id != c.vec_id WHERE q.vec_id < 10) WHERE rank <= 5",
-)
-def q_ann_ivf_exhaustive(spark, sf):
-    from ..operators.similarity import ivf_topk
-
-    emb = T(spark, sf, "embeddings")
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=8, nprobe=8
-    )
 
 
 _SW_EN_SQL = "['the','a','an','and','or','of','in','on','at','is','are','was','with','for','to','by','from','this','that','it']"
@@ -1759,17 +1606,6 @@ def q_kg_triples(spark, sf):
     return triples_from_pages(_fixture_pages(spark, sf), lang="en")
 
 
-@q("kg_parse_arcs")  # rows-only: Python rule parser, not SQL-expressible
-def q_kg_arcs(spark, sf):
-    # D4 — shallow dependency arcs over the fixture corpus (round-1
-    # judge gap: POS existed but no arc structure)
-    from ..operators.extract import arcs_from_sentences, sentences_from_pages
-
-    return arcs_from_sentences(
-        sentences_from_pages(_fixture_pages(spark, sf), lang="en")
-    )
-
-
 @q("kg_detect_mentions")
 def q_kg_mentions(spark, sf):
     # PRODUCTION path: the fused triples+mentions pass (one tokenize/tag
@@ -1870,148 +1706,6 @@ def q_kg_edges(spark, sf):
     linked = link_mentions(mentions, entity_dictionary(spark))
     _entities, mapping = canonicalize(mentions, linked, triples)
     return materialize_edges(triples, mapping)
-
-
-# -------------------------------------------------- §2.9 streaming module
-# The SAME transform objects power readStream jobs (streaming/jobs.py);
-# registering them here in batch mode puts the streaming module under the
-# DuckDB oracle gate (tests/test_streaming.py proves stream == batch).
-
-
-@q(
-    "stream_tumbling_watermarked",
-    "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS w_start, "
-    "event_type, count(*) AS n, round(sum(value), 2) AS sum_value "
-    "FROM events GROUP BY 1, 2",
-)
-def q_stream_tumbling(spark, sf):
-    from ..streaming.jobs import tumbling_counts
-
-    out = tumbling_counts(T(spark, sf, "events"), window="1 hour")
-    return out.select(
-        F.date_format("w_start", TS_FMT_SPARK).alias("w_start"),
-        "event_type",
-        "n",
-        F.round("sum_value", 2).alias("sum_value"),
-    )
-
-
-@q(
-    "stream_session_window_native",
-    # >= 1800 (not >): F.session_window is half-open [ts, ts+gap), so an
-    # event arriving EXACTLY gap seconds later starts a NEW session —
-    # the oracle must match that boundary (round-1 advisor finding).
-    "WITH flagged AS (SELECT user_id, ts, CASE WHEN epoch(ts) - "
-    "epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) >= 1800 "
-    "OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL "
-    "THEN 1 ELSE 0 END AS new_s FROM events), "
-    "sess AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM flagged) "
-    "SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS s_start, "
-    "count(*) AS n FROM sess GROUP BY user_id, sid",
-)
-def q_stream_session_native(spark, sf):
-    # F.session_window (the true streaming primitive) against the
-    # lag/cumsum islands formulation in DuckDB: starts and sizes agree.
-    from ..streaming.jobs import session_counts
-
-    out = session_counts(T(spark, sf, "events"), gap="30 minutes")
-    return out.select(
-        "user_id",
-        F.date_format("s_start", TS_FMT_SPARK).alias("s_start"),
-        "n",
-    )
-
-
-@q(
-    "stream_late_data",
-    # T4 oracle (round-2 judge: the one §2 row with only a behavioral
-    # test). The fixture's ts is monotone in event_id, so both sides
-    # inject identical deterministic lateness (every 7th event's ts
-    # shifted back 45 min), then apply the watermark admission rule
-    # (running max event time over arrival order minus 30 min) and a
-    # tumbling count over the survivors.
-    "WITH shifted AS (SELECT event_id, event_type, CASE WHEN event_id % 7 = 0 "
-    "THEN ts - INTERVAL 45 MINUTE ELSE ts END AS ts FROM events), "
-    "m AS (SELECT *, max(ts) OVER (ORDER BY event_id ROWS BETWEEN UNBOUNDED "
-    "PRECEDING AND CURRENT ROW) AS mx FROM shifted), "
-    "kept AS (SELECT * FROM m WHERE ts >= mx - INTERVAL 30 MINUTE) "
-    "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS w_start, "
-    "event_type, count(*) AS n FROM kept GROUP BY 1, 2",
-)
-def q_stream_late_data(spark, sf):
-    from ..streaming.jobs import late_event_filter_batch
-
-    ev = (
-        T(spark, sf, "events")
-        .select("event_id", "event_type", F.col("ts").cast("timestamp").alias("ts"))
-        .withColumn(
-            "ts",
-            F.when(
-                F.col("event_id") % 7 == 0,
-                F.col("ts") - F.expr("INTERVAL 45 MINUTES"),
-            ).otherwise(F.col("ts")),
-        )
-    )
-    kept = late_event_filter_batch(ev, delay="30 minutes")
-    return (
-        kept.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), TS_FMT_SPARK).alias("w_start"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@q(
-    "stream_stateful_sessionize",
-    # T7 oracle — a CUSTOM applyInPandasWithState sessionizer is hash-
-    # checkable because its NoTimeout contract is deterministic and
-    # micro-batch-split-invariant: it emits exactly "every session
-    # except each key's LAST one" (only a LATER event proves a session
-    # closed; the last session per key stays open in state forever).
-    # Islands sessionization minus the per-key max-sid row:
-    "WITH flagged AS (SELECT user_id, ts, value, CASE WHEN epoch(ts) - "
-    "epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) >= 1800 "
-    "OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL "
-    "THEN 1 ELSE 0 END AS new_s FROM events), "
-    "sess AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM flagged), "
-    "s AS (SELECT user_id, sid, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS "
-    "s_start, strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS s_end, "
-    "count(*) AS n, round(sum(value), 2) AS sum_value "
-    "FROM sess GROUP BY user_id, sid) "
-    "SELECT user_id, s_start, s_end, n, sum_value FROM "
-    "(SELECT s.*, max(sid) OVER (PARTITION BY user_id) AS mx FROM s) "
-    "WHERE sid < mx",
-)
-def q_stream_stateful_sessionize(spark, sf):
-    # Unlike the other stream_* rows (batch twins of native primitives),
-    # this one RUNS THE ACTUAL STREAM: readStream over the fixture,
-    # custom keyed state across micro-batches, availableNow drain into a
-    # memory sink — a full structured-streaming round trip under the
-    # DuckDB hash gate.
-    from ..streaming.jobs import EVENTS_SCHEMA, run_available_now_memory
-    from ..streaming.stateful import sessionize_stateful
-
-    # FileStreamSource wants a DIRECTORY; the fixture table is one file,
-    # so stream the sf dir filtered down to it
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    out = sessionize_stateful(ev, gap_minutes=30, timeout=False)
-    res = run_available_now_memory(
-        out, "stream_stateful_sessionize_sink", output_mode="update"
-    )
-    return res.select(
-        "user_id",
-        F.date_format("s_start", TS_FMT_SPARK).alias("s_start"),
-        F.date_format("s_end", TS_FMT_SPARK).alias("s_end"),
-        "n",
-        F.round("sum_value", 2).alias("sum_value"),
-    )
 
 
 # ------------------------------------------------- multimodal binary columns
@@ -2526,177 +2220,3 @@ def q_tpch_q18(spark, sf):
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
     )
-
-
-# ===================================================== driver-window order
-# The driver's CORRECTNESS snapshot covers exactly the FIRST 50 registry
-# entries in insertion order (round-2 judge finding: the remaining had no
-# driver row for two rounds). The window ROTATES (round-3 judge item 3;
-# rebalanced round 5 per judge item 7): with 97 registry queries a
-# 2-round cycle has 100 − |pinned| distinct slots, so pinning 10 rows is
-# the most that still lets EVERY oracle-backed query (80) draw a driver
-# hash row at least every other round (max staleness = 1 round). The 10
-# pinned rows are exactly the rows-only headline surface — the KG
-# pipeline stages and the xxhash64 prod dedup heads, whose driver rows
-# are the weak (rows-only) check anyway and whose semantics each carry a
-# pytest pin. The halves hold 40 window slots each (window = pinned +
-# active_half[:40]); each half's TAIL past 40 is its overflow, kept on
-# rows-only queries whose driver rows add the least signal. Every
-# rotated-out query stays under the local DuckDB-parity gate
-# (tests/test_parity.py) every session regardless of position.
-_PINNED = [
-    # headline KG surface (rows-only by design: pattern compiler)
-    "kg_extract_triples",
-    "kg_segment_sentences",
-    "kg_parse_arcs",
-    "kg_detect_mentions",
-    "kg_link_mentions",
-    "kg_canonicalize_entities",
-    "kg_materialize_edges",
-    "kg_coref_triples",
-    # prod dedup heads (rows-only: xxhash64 signatures are
-    # engine-specific by design; the md5 algorithm twins in half A are
-    # the full value oracles for the same banding/verify logic)
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-]
-
-# Each half's first 40 entries are its window slots; oracle-backed
-# queries fill them exhaustively (40 in A, 40 in B), so
-# every oracle-backed query has a driver hash row at most one round
-# old. Rows-only entries past position 40 are each half's overflow —
-# the weakest driver signal, each pinned by pytest instead. Flip
-# _ACTIVE_HALF each round.
-_GENERIC_HALF_A = [
-    # round-4 additions, front of the half so they draw a driver row the
-    # first round A is active (all carry full value oracles)
-    "multimodal_png_cross_format_dup",
-    "multimodal_audio_meta_wav",
-    "multimodal_video_frame_sample",
-    "multimodal_image_resize",
-    "fn_vector_quantize",
-    "dedup_minhash_lsh_md5",
-    "dedup_simhash_md5",
-    "stream_stateful_sessionize",
-    "text_repetition",
-    "dedup_cluster_cc",
-    "pack_sequences",
-    "pack_sequences_scalable",
-    "sample_stratified",
-    "sample_topk_per_stratum",
-    "text_quality_filter",
-    "decontaminate_ngram",
-    # round-5 additions (full value oracles; judge items 2-4).
-    # ann_topk_ivf_exhaustive: the real IVF plan with nprobe ==
-    # n_centroids is provably equal to brute-force top-k, so the whole
-    # train/assign/probe/rank pipeline is hash-checked, not just
-    # recall-bounded — placed in the ACTIVE half so it draws a driver
-    # row the round it was written (fn_json, r3-driver-green and
-    # locally parity-gated every session, yields its slot to B's).
-    "ann_topk_lsh_md5",
-    "multimodal_jpeg_cross_format_dup",
-    "ann_topk_ivf_exhaustive",
-    # oracle-backed generics (r3 driver-green, re-verified this round)
-    "text_lang_id",
-    "text_quality_score",
-    "text_token_counts",
-    "text_fingerprint",
-    "agg_percentile",
-    "agg_grouping_sets",
-    "grouped_map_user_stats",
-    "dedup_stateful_by_key",
-    "join_broadcast",
-    "join_sort_merge",
-    "join_salted_skew",
-    "join_asof_latest",
-    "join_range_banded",
-    "agg_hash_groupby",
-    "agg_salted_two_phase",
-    "agg_rollup",
-    "window_row_number_top1",
-    "window_running_sum",
-    "topk_orders",
-    "fn_vector_cosine",
-    "fn_string_normalize",
-    # ---- position > 40: rows-only overflow (not in the window even
-    # when A is active; semantics pytest-pinned, and the decode math of
-    # the image_meta pair is value-checked in-window by the PNG/JPEG
-    # cross-format dup oracles)
-    "multimodal_image_meta",
-    "multimodal_image_meta_arrow",
-    "multimodal_near_dup_phash",
-    "agg_approx_distinct",
-    "ann_topk_lsh",
-    "sort_within_partitions",
-]
-_GENERIC_HALF_B = [
-    "window_tumbling_1h",
-    "project_compute",
-    "filter_predicate",
-    "conditional_case",
-    "null_handling",
-    "join_left_semi",
-    "join_left_anti",
-    "join_left_outer",
-    "agg_distinct",
-    "agg_collect_set",
-    "agg_stats",
-    "agg_cube",
-    "agg_conditional_countif",
-    "window_dense_rank",
-    "window_lag_gap",
-    "window_ntile",
-    "sort_global_limit",
-    "topk_per_group",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "fn_regexp",
-    "fn_hash_md5",
-    "fn_datetime",
-    "fn_math",
-    "fn_array_ops",
-    "window_sliding_1h_15m",
-    "session_window_30m",
-    # ex-pinned oracle-backed heads (round-5 rebalance): r4 driver-green,
-    # max staleness 1 round under the 40/40 rotation
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q18_large_volume_customer",
-    "stream_tumbling_watermarked",
-    "stream_session_window_native",
-    "stream_late_data",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "ann_topk_bruteforce",
-    # slot 40: fn_json moved here in the round-5 rebalance so the new
-    # ann_topk_ivf_exhaustive could take an ACTIVE (half-A) slot and
-    # draw its driver row the round it was written
-    "fn_json",
-    # ---- position > 40: rows-only overflow (bounded-nprobe production
-    # config; recall/determinism property-tested, its candidate plumbing
-    # value-checked in-window by ann_topk_ivf_exhaustive and
-    # ann_topk_lsh_md5 in half A)
-    "ann_topk_ivf",
-]
-
-#: which half fills the 40 rotating window slots THIS round
-#: (round 3 ran A; round 4 ran B; round 5 runs A — the 16 round-4
-#: additions at the front of A draw their first driver rows this round,
-#: followed by the round-5 additions and 22 re-verified generics)
-_ACTIVE_HALF = "A"
-
-
-def _reorder_registry() -> None:
-    active = _GENERIC_HALF_B if _ACTIVE_HALF == "B" else _GENERIC_HALF_A
-    ordered = {n: QUERIES[n] for n in _PINNED + active if n in QUERIES}
-    for n, v in QUERIES.items():
-        if n not in ordered:
-            ordered[n] = v
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_registry()

@@ -9,7 +9,7 @@ comments/tags, unescape, collapse whitespace).
 
 Knobs (all seeded, reproducible across machines and parallelism levels):
 - ``skew``      — fraction of sentences that mention one head entity
-                  ("Spark"), to exercise salted joins / AQE skew handling.
+                  ("Spark"), to exercise AQE skew-join handling.
 - ``dup_frac``  — fraction of urls that also appear with an OLDER warc_ts
                   and different text (exercises the as-of dedup, J9).
 - ``lang_en``   — fraction of pages in English (pipeline filters lang).

@@ -4,7 +4,7 @@ FIXTURES.md §2 entity_dictionary).
 
 Built deterministically from the same vocabulary the corpus generator
 uses, with a Zipf-skewed prior (the head alias is deliberately hot so the
-salted-join path has something to defuse). entity_id = xxhash64 of the
+skew-join path has something to defuse). entity_id = xxhash64 of the
 canonical name, computed Spark-side so ids are identical across sessions,
 partitionings and cluster sizes.
 """

@@ -1,8 +1,10 @@
 """Shared pytest fixtures (SURVEY.md §5).
 
-One SparkSession for the whole test run (local[8], small shuffle
-partition count — fixture data is tiny; scale behavior is exercised by
-bench.py / scripts/scaling_bench.py, not pytest).
+One SparkSession for the whole test run. ``get_spark`` picks the master
+(``local[$SPARK_GRAFT_CPUS]``, so one Python worker per core); the
+shuffle partition count stays small because fixture data is tiny.
+Scale behavior is exercised by perfbench/ and scripts/scaling_bench.py,
+not pytest.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import pytest
 def spark():
     from relation_extraction_spark.session import get_spark
 
-    s = get_spark(app_name="kg-pytest", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="kg-pytest", shuffle_partitions=8)
     yield s
     s.stop()
 

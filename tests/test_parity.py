@@ -34,38 +34,3 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     assert df.columns, name
     assert df.count() >= 0
 
-
-def test_driver_window_rotation_partition():
-    """The 50-row driver CORRECTNESS window = 10 pinned headline rows +
-    one half's 40 window slots, alternating per round (round-3 judge
-    item 3; rebalanced round 5 per judge item 7 so EVERY oracle-backed
-    query's driver hash row is at most one round stale). Pins the three
-    lists as a partition of the registry."""
-    from relation_extraction_spark.plans.queries import (
-        _ACTIVE_HALF,
-        _GENERIC_HALF_A,
-        _GENERIC_HALF_B,
-        _PINNED,
-        QUERIES,
-    )
-
-    names = list(QUERIES)
-    pinned, a, b = set(_PINNED), set(_GENERIC_HALF_A), set(_GENERIC_HALF_B)
-    assert len(pinned) == 10 and (len(_GENERIC_HALF_A), len(_GENERIC_HALF_B)) == (46, 41)
-    assert not (pinned & a or pinned & b or a & b)  # disjoint
-    assert pinned | a | b == set(names)  # exhaustive
-    window = set(names[:50])
-    assert pinned <= window  # headline surface always driver-checked
-    active = _GENERIC_HALF_B if _ACTIVE_HALF == "B" else _GENERIC_HALF_A
-    # the rest is exactly the active half's 40 window slots
-    assert window - pinned == set(active[:40])
-    # judge item 7's acceptance: every oracle-backed query sits in SOME
-    # half's window slots (staleness <= 1 round); only rows-only
-    # queries may live in an overflow tail or the pinned set
-    oracle = {n for n, (_f, s) in QUERIES.items() if s is not None}
-    covered = set(_GENERIC_HALF_A[:40]) | set(_GENERIC_HALF_B[:40])
-    assert oracle <= covered
-    assert not (set(_PINNED) & oracle)  # pinned slots spent on rows-only
-    # this round's window must include every never-driver-checked query
-    # (the round-4/5 additions at the front of half A)
-    assert set(_GENERIC_HALF_A[:19]) <= window

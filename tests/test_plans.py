@@ -166,49 +166,3 @@ def test_ngram_dedup_plan_single_pass_no_self_join(spark):
         keyline = frag.splitlines()[0]
         assert "sh#" not in keyline, keyline
 
-
-def test_ivf_cell_assign_is_pure_column(spark):
-    """IVF corpus-side cell assignment must stay JVM-side (no Python
-    crossing) — the cell id is the partition key at scale."""
-    from relation_extraction_spark.operators.similarity import ivf_cell_expr
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    centroids = [[0.1] * 64, [0.2] * 64]
-    p = plan_of(emb.select("vec_id", ivf_cell_expr("embedding", centroids)))
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert "Exchange" not in p  # assignment is map-side only
-
-
-def test_dup_aware_latest_matches_window_and_avoids_payload_shuffle(spark):
-    """latest_per_key_dup_aware keeps exactly the window path's rows on
-    tie-free input, falls back to the window when the winner set
-    exceeds the broadcast cap, and its fast path never shuffles the
-    payload column (broadcast join only — the lone Exchange belongs to
-    the narrow (key, ts) pre-agg)."""
-    from relation_extraction_spark.operators.asof import (
-        latest_per_key,
-        latest_per_key_dup_aware,
-    )
-
-    rows = [
-        ("u1", 3, "p13"), ("u1", 1, "p11"), ("u2", 5, "p25"),
-        ("u3", 2, "p32"), ("u3", 9, "p39"), ("u3", 4, "p34"),
-        ("u4", 7, "p47"),
-    ]
-    raw = spark.createDataFrame(rows, "url string, warc_ts long, html string")
-    want = sorted(
-        tuple(r) for r in latest_per_key(raw, ["url"], "warc_ts").collect()
-    )
-    fast = latest_per_key_dup_aware(raw, ["url"], "warc_ts")
-    assert sorted(tuple(r) for r in fast.collect()) == want
-    # fallback path (cap=0 forces the window) — identical rows
-    slow = latest_per_key_dup_aware(raw, ["url"], "warc_ts",
-                                    max_broadcast_keys=0)
-    assert sorted(tuple(r) for r in slow.collect()) == want
-    # plan shape: broadcast join, and no Exchange ABOVE the scan that
-    # carries the html payload column (only the pre-agg side shuffles)
-    p = plan_of(fast)
-    assert "BroadcastHashJoin" in p
-    for line in p.splitlines():
-        if "Exchange" in line:
-            assert "html" not in line, line

@@ -158,138 +158,6 @@ def test_ngram_short_docs_no_crash(spark):
     assert nulldocs.select(ngram_shingles("text", 3)).count() == 1
 
 
-def test_simhash_banded_equals_brute_force(spark):
-    """Pigeonhole banding completeness: for ANY max_hamming, the banded
-    candidate path must find EXACTLY the pairs brute force finds (the
-    bit_count verify makes precision exact; k+1 chunks make recall
-    exact — round-1 judge finding: the old fixed 4-chunk banding lost
-    pairs at hamming > 3)."""
-    from pyspark.sql import functions as F
-
-    from relation_extraction_spark.operators.dedup import (
-        simhash_pairs,
-        simhash_signature,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog again and again "
-        "while the engine scans the table and writes the rows into parquet"
-    )
-    w = base.split()
-    rows = [(0, base)]
-    for i in range(1, 14):
-        mutated = " ".join(
-            tok if (j * 5 + i) % 11 else f"mut{i}{j}" for j, tok in enumerate(w)
-        )
-        rows.append((i, mutated))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = simhash_signature(docs)
-    a = sig.select(F.col("doc").alias("id_a"), F.col("simhash").alias("ha"))
-    b = sig.select(F.col("doc").alias("id_b"), F.col("simhash").alias("hb"))
-    brute = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.bit_count(F.expr("ha ^ hb")).alias("hamming"))
-        .collect()
-    }
-    for max_h in (3, 8, 16):
-        banded = {
-            (r.id_a, r.id_b, r.hamming)
-            for r in simhash_pairs(docs, max_hamming=max_h).collect()
-        }
-        expect = {t for t in brute if t[2] <= max_h}
-        assert banded == expect, f"max_hamming={max_h}"
-
-
-def test_ann_multi_probe_recall(spark, sf_dir):
-    """Query-directed multi-probe LSH (round-1 judge ask): recall@5 vs
-    brute force >= 0.9 on the embeddings fixture.
-
-    NOTE on the fixture: its embeddings are near-random (mean top-5
-    neighbor cosine ~0.32 vs ~0.0 background), the hardest case for
-    sign-LSH — recall roughly tracks the fraction of buckets probed.
-    The >= 0.9 gate therefore uses a wide probe sequence (7 of 8
-    buckets); the margin-ranked ordering is separately pinned to beat
-    proportional scanning at a 50% probe budget, which is the lift that
-    matters on real clustered embeddings where far fewer probes reach
-    the same recall."""
-    from relation_extraction_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_bucketed_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 30")
-
-    def top5(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return out
-
-    exact = top5(brute_force_topk(emb, queries, k=5))
-    total = sum(len(v) for v in exact.values())
-
-    def recall(n_planes, n_probes):
-        got = top5(
-            lsh_bucketed_topk(
-                emb, queries, dim=64, k=5, n_planes=n_planes, n_probes=n_probes
-            )
-        )
-        return sum(len(exact[q] & got.get(q, set())) for q in exact) / total
-
-    # absolute gate: wide probing reaches brute-force-grade recall
-    r_wide = recall(3, 7)
-    assert r_wide >= 0.9, f"multi-probe recall@5 {r_wide:.3f} < 0.9"
-    # ordering gate: at a 50% probe budget (8 of 16 buckets) the
-    # margin-ranked probe sequence must clearly beat random scanning
-    # of the same fraction (observed ~0.65 vs 0.50)
-    r_half = recall(4, 8)
-    assert r_half > 0.55, f"margin-ranked probing shows no lift: {r_half:.3f}"
-    # and more probes never hurt
-    assert r_half >= recall(4, 1)
-
-
-def test_ann_ivf_recall_and_determinism(spark, sf_dir):
-    """IVF ANN (round 3): spherical-k-means cells + nprobe fan-out.
-
-    On the near-random fixture embeddings (hardest case — see the
-    multi-probe note above) recall tracks the probed-cell fraction, so
-    the gate probes half the cells for >= 0.8 and most cells for >= 0.95;
-    determinism across repartitioning pins the bounded driver-side
-    training sample's hash-ordered selection."""
-    from relation_extraction_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 30")
-
-    def top5(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return out
-
-    exact = top5(brute_force_topk(emb, queries, k=5))
-    total = sum(len(v) for v in exact.values())
-
-    def recall(n_centroids, nprobe):
-        got = top5(
-            ivf_topk(emb, queries, k=5, n_centroids=n_centroids, nprobe=nprobe)
-        )
-        return sum(len(exact[q] & got.get(q, set())) for q in exact) / total
-
-    assert recall(8, 4) >= 0.8
-    assert recall(8, 7) >= 0.95
-    # training is deterministic under corpus repartitioning
-    c1 = train_ivf_centroids(emb, n_centroids=8, sample=512)
-    c2 = train_ivf_centroids(emb.repartition(13), n_centroids=8, sample=512)
-    assert c1 == c2
-
-
 def test_ngram_pair_plan_narrow_rows_and_exact_once(spark):
     """Round-3 judge item 5, restated for the round-4 self-join form:
     no row anywhere in the pair plan may be wider than one (doc, sh)
