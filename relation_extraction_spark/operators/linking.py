@@ -1,18 +1,13 @@
-"""Entity linking: candidate generation + link-score + top-1 + NIL
-(SURVEY.md §2 J1/J5/J6/W1/D7; BASELINE.json:L6).
+"""Entity linking: one broadcast lookup of each mention's alias
+(SURVEY.md §2 J1/J6/W1/D7; BASELINE.json:L6).
 
-Pipeline: mentions -> normalize -> broadcast-join the alias dictionary
-(candidate generation; dictionary is small by design, so the mention
-side NEVER shuffles for this join) -> link-score as a PURE Column
-expression (char-trigram Jaccard x prior — JVM-side, whole-stage
-codegen, no Python crossing; round-1 judge finding replaced the
-previous pandas UDF) -> deterministic top-1 per mention via ranking
-window -> left-outer union with NIL mentions (no candidate).
-
-At 10^12 docs the only shuffle in this stage is the ranking window's
-hash partition on (url, sent_id, mention) — and head-entity skew there
-is bounded because a (url, sent_id, mention) key has at most
-|dictionary| candidates.
+The link score depends only on the normalized alias and the dictionary
+row, never on the mention's context. So the dictionary is scored once
+and reduced to its top-1 entity per ``alias_norm`` (ties to the smallest
+entity_id); every mention then takes that entry through ONE broadcast
+left-outer join. NIL is ``entity_id IS NULL``: the alias has no
+dictionary entry. The mention side never shuffles; the only shuffle is
+the ranking window over the dictionary, under its broadcast.
 """
 
 from __future__ import annotations
@@ -47,29 +42,20 @@ def link_score_expr(mention: str | Column, canonical: str | Column, prior: str |
 
 
 def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """mentions(url, sent_id, mention) x dict -> linked mentions with
-    entity_id (nullable: NIL = no dictionary candidate) and score."""
-    m = mentions.withColumn("alias_norm", normalize_text_expr("mention"))
-    cand = m.join(F.broadcast(dictionary), "alias_norm", "inner").withColumn(
-        "score",
-        F.round(link_score_expr("alias_norm", "canonical_name", "prior"), 6),
-    )
-    w = Window.partitionBy("url", "sent_id", "mention").orderBy(
-        F.desc("score"), F.asc("entity_id")
-    )
+    """mentions(url, sent_id, mention, start, end) x dict -> one row per
+    mention occurrence with entity_id and score (both NULL for NIL)."""
+    w = Window.partitionBy("alias_norm").orderBy(F.desc("score"), F.asc("entity_id"))
     top1 = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", "sent_id", "mention", "entity_id", "score")
-    )
-    nil = (
-        m.join(F.broadcast(dictionary.select("alias_norm")), "alias_norm", "left_anti")
-        .select(
-            "url",
-            "sent_id",
-            "mention",
-            F.lit(None).cast("long").alias("entity_id"),
-            F.lit(None).cast("double").alias("score"),
+        dictionary.withColumn(
+            "score",
+            F.round(link_score_expr("alias_norm", "canonical_name", "prior"), 6),
         )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("alias_norm", "entity_id", "score")
     )
-    return top1.unionByName(nil)
+    return (
+        mentions.withColumn("alias_norm", normalize_text_expr("mention"))
+        .join(F.broadcast(top1), "alias_norm", "left")
+        .select("url", "sent_id", "mention", "start", "end", "entity_id", "score")
+    )

@@ -3,18 +3,18 @@ materialize -> metrics (SURVEY.md §3.1; BASELINE.json:L6/L14).
 
 Each stage reads committed snapshots, computes one DataFrame expression,
 snapshot-commits its outputs (sources/lakehouse.py), and appends lineage
-(per-partition row counts) + metric rows. Resume: a stage whose output
-snapshot already exists is a no-op on re-run (checkpoint-resumable,
-BASELINE.json:L14); ingest additionally skips input partitions recorded
-as done (S5 anti-join semantics via the manifest's extra field).
+(per-file row counts from the manifest) + metric rows. Resume: a stage
+whose output snapshots already exist is a no-op on re-run
+(checkpoint-resumable, BASELINE.json:L14); a stage that runs recomputes
+all of its input.
 
 Scale shape per stage (the 1000-executor story):
 - ingest:       embarrassingly parallel generate/scan; one window shuffle
                 for as-of recrawl dedup, partitioned by url hash.
 - extract:      ZERO shuffles — scan -> filter -> segment -> extract is
                 one pipelined stage per input split.
-- link:         broadcast dictionary join (no fact shuffle) + one window
-                shuffle on (url, sent_id, mention).
+- link:         one broadcast left join against the dictionary's top-1
+                per alias — the mentions never shuffle.
 - canonicalize: shuffles on band-hash and node id only; CC iterations
                 localCheckpoint to cut lineage.
 - materialize:  two mapping joins (form-hash keys) + one hash agg.
@@ -45,7 +45,6 @@ from ..sources.dictionary import entity_dictionary
 from ..sources.lakehouse import SnapshotTable
 
 STAGES = ["ingest", "extract", "link", "canonicalize", "materialize", "metrics"]
-N_PART_KEYS = 64  # lineage granularity: pmod(xxhash64(url), 64)
 
 LINEAGE_SCHEMA = pa.schema(
     [
@@ -95,10 +94,6 @@ class PipelineConfig:
     extra_tables: dict = field(default_factory=dict)
 
 
-def _part_key(col: str = "url") -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(N_PART_KEYS)).cast("int")
-
-
 class Pipeline:
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
@@ -117,10 +112,10 @@ class Pipeline:
 
     def _append_lineage(self, manifest: dict, stage: str, wall_ms: int) -> None:
         """Per-FILE row counts straight from the committed manifest's
-        parquet footers (sources/lakehouse.py records them at write time)
-        — data tables are bucketed by url hash on write, so file == url
-        partition and this is per-partition lineage at ZERO extra cost:
-        no Spark job, no rescan. part_key is the file's bucket index."""
+        parquet footers (sources/lakehouse.py records them at write time):
+        lineage at ZERO extra cost — no Spark job, no rescan. A file is a
+        write task's output, not a url bucket (one file may hold rows of
+        every bucket); part_key is the file's index in sorted order."""
         rows = [
             {
                 "run_id": self.cfg.run_id,
@@ -181,7 +176,6 @@ class Pipeline:
         headline: tuple[str, float | str],
         t0: float,
         lineage_table: str | None = None,
-        lineage_key: str = "url",  # retained for API compat; file-level lineage ignores it
     ) -> dict:
         """Commit outputs, then derive lineage + the headline metric from
         the COMMITTED snapshots (manifest row counts / parquet rescans) so

@@ -153,15 +153,27 @@ def test_link_mentions_top1_and_nil(spark):
     sample = dictionary.limit(2).collect()
     assert sample, "dictionary must be non-empty"
     known = sample[0]["alias_norm"]
+    # the known alias and the unknown one each occur twice in sentence 0
+    inputs = [
+        ("u1", 0, known, 0, 5),
+        ("u1", 0, "zz unknown thing", 6, 20),
+        ("u1", 0, known, 21, 26),
+        ("u1", 0, "zz unknown thing", 27, 41),
+    ]
     mentions = spark.createDataFrame(
-        [("u1", 0, known, 0, 5), ("u1", 0, "zz unknown thing", 6, 20)],
-        "url string, sent_id int, mention string, start int, end int",
+        inputs, "url string, sent_id int, mention string, start int, end int"
     )
-    got = link_mentions(mentions, dictionary)
-    rows = {r.mention: r for r in got.collect()}
-    assert got.count() == 2  # exactly one row per input mention
-    assert rows[known].entity_id is not None and rows[known].score > 0
-    assert rows["zz unknown thing"].entity_id is None
+    got = link_mentions(mentions, dictionary).collect()
+    # exactly one row per input mention occurrence, offsets carried through
+    assert sorted((r.url, r.sent_id, r.mention, r.start, r.end) for r in got) == sorted(
+        inputs
+    )
+    for r in got:
+        if r.mention == known:
+            assert r.entity_id is not None and r.score > 0
+        else:
+            assert r.entity_id is None and r.score is None
+    assert len({(r.entity_id, r.score) for r in got if r.mention == known}) == 1
 
 
 def test_link_deterministic_tiebreak(spark):

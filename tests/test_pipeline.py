@@ -4,6 +4,9 @@ a killed run resumes to the same result as an uninterrupted one."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from relation_extraction_spark.plans.pipeline import (
@@ -12,7 +15,10 @@ from relation_extraction_spark.plans.pipeline import (
     Pipeline,
     run_pipeline,
 )
+from relation_extraction_spark.sources.dictionary import entity_dictionary
 from relation_extraction_spark.sources.lakehouse import SnapshotTable
+
+from .oracle import golden_mentions, golden_pages
 
 N = 120
 CFG = dict(pages=N, seed=42, skew=0.2, dup_frac=0.1, run_id="t")
@@ -20,6 +26,43 @@ CFG = dict(pages=N, seed=42, skew=0.2, dup_frac=0.1, run_id="t")
 
 def _table_rows(spark, out: str, name: str) -> list[tuple]:
     return sorted(map(tuple, SnapshotTable(out, name).read(spark).collect()))
+
+
+def _trigrams(s: str) -> set[str]:
+    # operators/canonicalize.char_trigrams_expr
+    padded = "  " + s + " "
+    return {padded[i : i + 3] for i in range(max(len(padded) - 2, 1))}
+
+
+def _python_link(alias: str, dictionary: list) -> tuple:
+    """Top-1 (entity_id, score) for one alias, NIL = (None, None):
+    trigram Jaccard x (0.5 + 0.5 * prior), ties to the smallest id."""
+    a = _trigrams(alias)
+    cands = []
+    for r in dictionary:
+        if r.alias_norm == alias:
+            b = _trigrams(r.canonical_name.lower())
+            score = len(a & b) / max(len(a | b), 1) * (0.5 + 0.5 * r.prior)
+            cands.append((-round(score, 6), r.entity_id, score))
+    if not cands:
+        return None, None
+    _, eid, score = min(cands)
+    return eid, score
+
+
+def _check_linked_against_python(spark, out: str) -> None:
+    linked = SnapshotTable(out, "linked_mentions").read(spark).collect()
+    gold = golden_mentions(golden_pages(N, seed=42, skew=0.2, dup_frac=0.1))
+    # one row per mention occurrence, offsets carried through
+    assert Counter(
+        (r.url, r.sent_id, r.mention, r.start, r.end) for r in linked
+    ) == Counter(gold)
+    dictionary = entity_dictionary(spark).collect()
+    for r in linked:
+        alias = re.sub(r"[ \t\n\x0b\f\r]+", " ", r.mention.strip(" ").lower())
+        eid, score = _python_link(alias, dictionary)
+        assert r.entity_id == eid, r
+        assert (r.score is None) if score is None else abs(r.score - score) <= 1e-6, r
 
 
 def test_full_pipeline_and_resume(spark, tmp_path):
@@ -47,6 +90,8 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     # lineage rows cover the extract stage's partitions
     lin = SnapshotTable(out, "lineage").read(spark)
     assert lin.filter(F.col("stage") == "extract").count() > 0
+    # linked_mentions matches the pure-Python path row for row
+    _check_linked_against_python(spark, out)
 
     # -------- resume over a COMPLETE run is a no-op for data stages
     info2 = run_pipeline(spark, PipelineConfig(out=out, **CFG))

@@ -34,18 +34,36 @@ def test_broadcast_join_is_broadcast(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_linking_candidate_join_never_shuffles_mentions(spark):
-    """Entity linking's candidate-gen join must be broadcast: at 10^12
-    docs the mention side cannot shuffle on alias_norm."""
+def test_linking_candidate_join_never_shuffles_mentions(spark, tmp_path):
+    """Entity linking is ONE broadcast left-outer lookup: at 10^12 docs
+    the mention side cannot shuffle, and NIL needs no second pass."""
     from relation_extraction_spark.operators.linking import link_mentions
     from relation_extraction_spark.sources.dictionary import entity_dictionary
 
-    mentions = spark.createDataFrame(
+    # mentions come from parquet, as in the pipeline, so any in-memory
+    # relation in the plan is the dictionary's
+    spark.createDataFrame(
         [("u", 0, "spark", 0, 5)],
         "url string, sent_id int, mention string, start int, end int",
-    )
+    ).write.parquet(str(tmp_path / "mentions"))
+    mentions = spark.read.parquet(str(tmp_path / "mentions"))
     p = plan_of(link_mentions(mentions, entity_dictionary(spark)))
-    assert "BroadcastHashJoin" in p
+    tree = p.split("\n\n")[0]
+    assert tree.count("BroadcastHashJoin LeftOuter") == 1
+    assert tree.count("BroadcastExchange") == 1
+    assert "LeftAnti" not in tree and "Union" not in tree
+    # the tree prints the mention side before the broadcast side: any
+    # shuffle (the dictionary's top-1 window) sits under the broadcast
+    mention_side, dictionary_side = tree.split("BroadcastExchange")
+    assert "Exchange" not in mention_side and "Window" not in mention_side
+    for line in p.splitlines():
+        if "hashpartitioning(" in line:
+            assert not any(
+                c in line for c in ("url#", "sent_id#", "mention#", "start#", "end#")
+            ), line
+    # the dictionary is JVM-local rows: no Python-fed RDD scan
+    assert "LocalTableScan" in dictionary_side
+    assert "ExistingRDD" not in p
     # link_score is a pure Column expression (trigram Jaccard x prior):
     # NO Python/Arrow crossing anywhere in the linking plan (round-1
     # judge finding replaced the pandas UDF)
