@@ -24,11 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.nlp import (
-    analyze_sentence_cached,
-    detect_mentions,
-    extract_from_sentence,
-)
+from ..functions.nlp import analyze_sentence_cached
 from ..functions.segment import segment
 
 TRIPLE_COLS = "url string, sent_id int, subj string, pred string, obj string, conf double"
@@ -52,74 +48,6 @@ def sentences_from_pages(
             F.posexplode(segment(F.col("text"))).alias("sent_id", "sentence"),
         )
         .select("url", F.col("sent_id").cast("int").alias("sent_id"), "sentence")
-    )
-
-
-def _triples_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused tag+chunk+match pass over Arrow batches of sentences."""
-    for pdf in batches:
-        urls, sids, subjs, preds, objs, confs = [], [], [], [], [], []
-        for url, sid, sent in zip(
-            pdf["url"].to_numpy(), pdf["sent_id"].to_numpy(), pdf["sentence"].to_numpy()
-        ):
-            for t in extract_from_sentence(sent):
-                urls.append(url)
-                sids.append(sid)
-                subjs.append(t["subj"])
-                preds.append(t["pred"])
-                objs.append(t["obj"])
-                confs.append(t["conf"])
-        yield pd.DataFrame(
-            {
-                "url": pd.Series(urls, dtype=object),
-                "sent_id": pd.Series(sids, dtype="int32"),
-                "subj": pd.Series(subjs, dtype=object),
-                "pred": pd.Series(preds, dtype=object),
-                "obj": pd.Series(objs, dtype=object),
-                "conf": pd.Series(confs, dtype="float64"),
-            }
-        )
-
-
-def triples_from_sentences(sentences: DataFrame) -> DataFrame:
-    """D5 — OpenIE-style pattern extraction (one Arrow crossing)."""
-    return sentences.mapInPandas(_triples_batches, schema=TRIPLE_COLS)
-
-
-def _mentions_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, sids, ments, starts, ends = [], [], [], [], []
-        for url, sid, sent in zip(
-            pdf["url"].to_numpy(), pdf["sent_id"].to_numpy(), pdf["sentence"].to_numpy()
-        ):
-            for m in detect_mentions(sent):
-                urls.append(url)
-                sids.append(sid)
-                ments.append(m["mention"])
-                starts.append(m["start"])
-                ends.append(m["end"])
-        yield pd.DataFrame(
-            {
-                "url": pd.Series(urls, dtype=object),
-                "sent_id": pd.Series(sids, dtype="int32"),
-                "mention": pd.Series(ments, dtype=object),
-                "start": pd.Series(starts, dtype="int32"),
-                "end": pd.Series(ends, dtype="int32"),
-            }
-        )
-
-
-def mentions_from_sentences(sentences: DataFrame) -> DataFrame:
-    """D6 — NP chunker over sentences."""
-    return sentences.mapInPandas(_mentions_batches, schema=MENTION_COLS)
-
-
-def triples_from_pages(
-    pages: DataFrame, text_col: str = "text", id_col: str = "url", lang: str | None = "en"
-) -> DataFrame:
-    """Library entry point: pages -> extracted triples (SURVEY.md §3.2)."""
-    return triples_from_sentences(
-        sentences_from_pages(pages, text_col=text_col, id_col=id_col, lang=lang)
     )
 
 
@@ -179,7 +107,7 @@ def extractions_from_sentences(sentences: DataFrame) -> DataFrame:
 
 def split_extractions(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(triples, mentions) flat views over a fused extractions frame --
-    JVM-side explodes, schema-identical to the single-purpose paths."""
+    JVM-side explodes with the TRIPLE_COLS / MENTION_COLS schemas."""
     triples = fused.select(
         "url", "sent_id", F.explode("triples").alias("_t")
     ).select(
@@ -200,4 +128,13 @@ def split_extractions(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("_m.end").alias("end"),
     )
     return triples, mentions
+
+
+def triples_from_pages(
+    pages: DataFrame, text_col: str = "text", id_col: str = "url", lang: str | None = "en"
+) -> DataFrame:
+    """Library entry point: pages -> extracted triples (SURVEY.md §3.2),
+    the triples side of the pipeline's fused extraction pass."""
+    sentences = sentences_from_pages(pages, text_col=text_col, id_col=id_col, lang=lang)
+    return split_extractions(extractions_from_sentences(sentences))[0]
 

@@ -1,12 +1,13 @@
 """The stage DAG: ingest -> extract -> link -> canonicalize ->
 materialize -> metrics (SURVEY.md §3.1; BASELINE.json:L6/L14).
 
-Each stage reads committed snapshots, computes one DataFrame expression,
-snapshot-commits its outputs (sources/lakehouse.py), and appends lineage
-(per-file row counts from the manifest) + metric rows. Resume: a stage
-whose output snapshots already exist is a no-op on re-run
-(checkpoint-resumable, BASELINE.json:L14); a stage that runs recomputes
-all of its input.
+Each stage reads committed snapshots, computes one DataFrame expression
+and snapshot-commits its outputs (sources/lakehouse.py); its last commit's
+manifest also carries the stage's metric rows. Resume: a stage whose
+output snapshots already exist is a no-op on re-run (checkpoint-resumable,
+BASELINE.json:L14); a stage that runs recomputes all of its input. The
+``metrics`` and ``lineage`` tables are derived from the manifests once per
+run (``flush_metrics``), so a killed run resumes to the same tables.
 
 Scale shape per stage (the 1000-executor story):
 - ingest:       embarrassingly parallel generate/scan; one window shuffle
@@ -18,7 +19,7 @@ Scale shape per stage (the 1000-executor story):
 - canonicalize: shuffles on band-hash and node id only; CC iterations
                 localCheckpoint to cut lineage.
 - materialize:  two mapping joins (form-hash keys) + one hash agg.
-- metrics:      tiny aggregates, appended to the metrics table.
+- metrics:      tiny aggregates, written with the metrics table.
 """
 
 from __future__ import annotations
@@ -45,6 +46,11 @@ from ..sources.dictionary import entity_dictionary
 from ..sources.lakehouse import SnapshotTable
 
 STAGES = ["ingest", "extract", "link", "canonicalize", "materialize", "metrics"]
+# the stages' output tables, in commit order
+DATA_TABLES = [
+    "web_pages", "sentences", "triples", "mentions",
+    "linked_mentions", "mapping", "entities", "edges",
+]
 
 LINEAGE_SCHEMA = pa.schema(
     [
@@ -94,109 +100,89 @@ class PipelineConfig:
     extra_tables: dict = field(default_factory=dict)
 
 
+def _ms_since(t0: float) -> int:
+    return int((time.time() - t0) * 1000)
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
         self.cfg = cfg
-        self._metric_buf: list[dict] = []
         self.tables = {
             name: SnapshotTable(cfg.out, name)
-            for name in [
-                "web_pages", "sentences", "triples", "mentions",
-                "linked_mentions", "entities", "mapping", "edges",
-                "lineage", "metrics",
-            ]
+            for name in DATA_TABLES + ["lineage", "metrics"]
         }
+        self._metrics_stage: dict[str, float] = {}
 
     # ------------------------------------------------------------- plumbing
 
-    def _append_lineage(self, manifest: dict, stage: str, wall_ms: int) -> None:
-        """Per-FILE row counts straight from the committed manifest's
-        parquet footers (sources/lakehouse.py records them at write time):
-        lineage at ZERO extra cost — no Spark job, no rescan. A file is a
-        write task's output, not a url bucket (one file may hold rows of
-        every bucket); part_key is the file's index in sorted order."""
-        rows = [
-            {
-                "run_id": self.cfg.run_id,
-                "stage": stage,
-                "part_key": i,
-                "file": f,
-                "n_rows": int(n),
-                "wall_ms": wall_ms,
-            }
-            for i, (f, n) in enumerate(sorted(manifest["file_rows"].items()))
-        ]
-        self.tables["lineage"].append_rows(rows, LINEAGE_SCHEMA, stage=stage)
-
-    def _append_metrics(self, rows: list[tuple[str, float]], stage: str) -> None:
-        """Buffer metric rows; ONE metrics-table commit per run() instead
-        of one per stage (round-1 judge finding: 6 tiny sequential
-        manifest publishes batched into 1). Metrics are derived values —
-        re-computable from the committed data tables on a crash — so
-        deferring them costs no durability the system relies on;
-        lineage, which resume logic reads, still commits per stage with
-        its producing table.
-
-        CONTRACT for direct ``stage_*`` callers (round-2 advisor
-        finding): metrics land in the table only at ``flush_metrics()``,
-        which ``run()`` invokes in a finally. A caller invoking stage
-        methods directly must call ``flush_metrics()`` itself (or use
-        the Pipeline as a context manager, which flushes on exit) or
-        buffered rows are dropped with the instance."""
-        self._metric_buf.extend(
-            {
-                "metric": name,
-                "value": float(value),
-                "stage": stage,
-                "run_id": self.cfg.run_id,
-            }
-            for name, value in rows
-        )
-
-    def flush_metrics(self) -> None:
-        if self._metric_buf:
-            self.tables["metrics"].append_rows(
-                self._metric_buf, METRICS_SCHEMA, stage="run"
-            )
-            self._metric_buf = []
-
-    # context-manager form: direct stage_* callers get the same
-    # flush-on-exit durability run() provides (see _append_metrics)
-    def __enter__(self) -> "Pipeline":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.flush_metrics()
-
-    def _commit_stage(
+    def _commit(
         self,
         stage: str,
-        outputs: dict[str, DataFrame],
-        headline: tuple[str, float | str],
-        t0: float,
-        lineage_table: str | None = None,
+        table: str,
+        df: DataFrame,
+        t0: float | None = None,
+        rows_metric: str | None = None,
+        **metrics: float,
     ) -> dict:
-        """Commit outputs, then derive lineage + the headline metric from
-        the COMMITTED snapshots (manifest row counts / parquet rescans) so
-        no stage plan executes more than once (SURVEY.md §4 "never
-        collect"; write-once-derive-from-files is also the only sane
-        pattern at 100 TB)."""
-        info = {}
-        for tname, df in outputs.items():
-            info[tname] = self.tables[tname].commit(df, stage=stage)
-        # headline value may reference a committed table's manifest count
-        name, value = headline
-        if isinstance(value, str):
-            value = info[value]["n_rows"]
-        wall_ms = int((time.time() - t0) * 1000)
-        if lineage_table is not None:
-            self._append_lineage(info[lineage_table], stage, wall_ms)
-        self._append_metrics(
-            [(name, value), (f"{stage}_wall_ms", wall_ms)], stage
-        )
-        info["wall_ms"] = wall_ms
-        return info
+        """Snapshot-commit one output table; its manifest records the run
+        that wrote it. A stage's LAST commit passes ``t0``: its manifest's
+        ``extra`` then also carries the stage's metric rows — ``metrics``,
+        ``rows_metric`` (named for the table's row count) and the stage's
+        wall time up to the write, to which flush_metrics() adds the
+        write's own ``wall_ms``. They are published atomically with the
+        data, so a killed run loses none of them."""
+        extra = {"run_id": self.cfg.run_id}
+        if t0 is not None:
+            extra["stage_metrics"] = {
+                "metrics": metrics,
+                "rows_metric": rows_metric,
+                "wall_ms": _ms_since(t0),
+            }
+        return self.tables[table].commit(df, stage=stage, extra=extra)
+
+    def flush_metrics(self) -> None:
+        """Replace-commit the ``metrics`` and ``lineage`` tables, derived
+        from the newest manifest of every data table plus the rows of the
+        metrics stage (if it ran): driver-side, no Spark job. A resumed
+        run derives the same rows as an uninterrupted one, whichever
+        stages it skipped. Lineage has one row per committed data file
+        (a write task's output), ``file`` relative to the pipeline root;
+        ``part_key`` is the file's index within its table."""
+        metrics, lineage = [], []
+        for name in DATA_TABLES:
+            m = self.tables[name].latest_manifest()
+            if m is None:
+                continue
+            run_id = m["extra"].get("run_id", self.cfg.run_id)
+            lineage += [
+                {
+                    "run_id": run_id,
+                    "stage": m["stage"],
+                    "part_key": i,
+                    "file": f"{name}/{f}",
+                    "n_rows": int(n),
+                    "wall_ms": m["wall_ms"],
+                }
+                for i, (f, n) in enumerate(sorted(m["file_rows"].items()))
+            ]
+            sm = m["extra"].get("stage_metrics")
+            if sm is None:
+                continue
+            rows = dict(sm["metrics"])
+            if sm["rows_metric"]:
+                rows[sm["rows_metric"]] = m["n_rows"]
+            rows[f"{m['stage']}_wall_ms"] = sm["wall_ms"] + m["wall_ms"]
+            metrics += [
+                {"metric": k, "value": float(v), "stage": m["stage"], "run_id": run_id}
+                for k, v in rows.items()
+            ]
+        metrics += [
+            {"metric": k, "value": v, "stage": "metrics", "run_id": self.cfg.run_id}
+            for k, v in self._metrics_stage.items()
+        ]
+        self.tables["metrics"].commit_rows(metrics, METRICS_SCHEMA, stage="run")
+        self.tables["lineage"].commit_rows(lineage, LINEAGE_SCHEMA, stage="run")
 
     def _done(self, *tables: str) -> bool:
         return all(self.tables[t].exists() for t in tables)
@@ -232,13 +218,12 @@ class Pipeline:
         pages = latest_per_key(
             raw.repartition(self.cfg.n_buckets, "url"), ["url"], "warc_ts"
         )
-        return self._commit_stage(
-            "ingest",
-            {"web_pages": pages},
-            ("pages_ingested", "web_pages"),
-            t0,
-            lineage_table="web_pages",
-        )
+        return {
+            "web_pages": self._commit(
+                "ingest", "web_pages", pages, t0, rows_metric="pages_ingested"
+            ),
+            "wall_ms": _ms_since(t0),
+        }
 
     def stage_extract(self) -> dict:
         if self.cfg.resume and self._done("sentences", "triples", "mentions"):
@@ -275,7 +260,7 @@ class Pipeline:
             extracted.filter(F.col("text_ok") & F.col("text").isNotNull()),
             lang="en",
         )
-        info = {"sentences": self.tables["sentences"].commit(sents, stage="extract")}
+        info = {"sentences": self._commit("extract", "sentences", sents)}
         n_mismatch = extracted.filter(~F.col("text_ok")).count()
         extracted.unpersist()
         committed_sents = self.tables["sentences"].read(self.spark)
@@ -295,24 +280,15 @@ class Pipeline:
             from ..operators.coref import coref_triples_from_fused
 
             triples = coref_triples_from_fused(fused)
-        info.update(
-            self._commit_stage(
-                "extract",
-                {"triples": triples, "mentions": mentions},
-                ("text_invariant_mismatches", n_mismatch),
-                t0,
-                lineage_table="triples",
-            )
-        )
-        fused.unpersist()
+        info["triples"] = self._commit("extract", "triples", triples)
+        metrics = {"text_invariant_mismatches": n_mismatch}
         if self.cfg.coref:
-            n_resolved = (
+            metrics["coref_resolved_triples"] = info["n_resolved"] = (
                 self.tables["triples"].read(self.spark).filter("resolved").count()
             )
-            self._append_metrics(
-                [("coref_resolved_triples", float(n_resolved))], "extract"
-            )
-            info["n_resolved"] = n_resolved
+        info["mentions"] = self._commit("extract", "mentions", mentions, t0, **metrics)
+        info["wall_ms"] = _ms_since(t0)
+        fused.unpersist()
         info["n_mismatch"] = n_mismatch
         return info
 
@@ -322,17 +298,16 @@ class Pipeline:
         t0 = time.time()
         mentions = self.tables["mentions"].read(self.spark)
         linked = link_mentions(mentions, entity_dictionary(self.spark))
-        info = self._commit_stage(
-            "link",
-            {"linked_mentions": linked},
-            ("linked_mentions_rows", "linked_mentions"),
-            t0,
-            lineage_table="linked_mentions",
-        )
-        return info
+        return {
+            "linked_mentions": self._commit(
+                "link", "linked_mentions", linked, t0,
+                rows_metric="linked_mentions_rows",
+            ),
+            "wall_ms": _ms_since(t0),
+        }
 
     def stage_canonicalize(self) -> dict:
-        if self.cfg.resume and self._done("entities", "mapping"):
+        if self.cfg.resume and self._done("mapping", "entities"):
             return {"skipped": True}
         t0 = time.time()
         mentions = self.tables["mentions"].read(self.spark)
@@ -345,20 +320,17 @@ class Pipeline:
         _entities, mapping = canonicalize(
             mentions, linked, triples, threshold=self.cfg.lsh_threshold
         )
-        info = {"mapping": self.tables["mapping"].commit(mapping, stage="canonicalize")}
+        info = {"mapping": self._commit("canonicalize", "mapping", mapping)}
         committed_mapping = self.tables["mapping"].read(self.spark)
         entities = (
             committed_mapping.groupBy("canonical_id")
             .agg(F.array_sort(F.collect_set("form")).alias("surface_forms"))
         )
-        info.update(
-            self._commit_stage(
-                "canonicalize",
-                {"entities": entities},
-                ("entities_canonical", "entities"),
-                t0,
-            )
+        info["entities"] = self._commit(
+            "canonicalize", "entities", entities, t0,
+            rows_metric="entities_canonical",
         )
+        info["wall_ms"] = _ms_since(t0)
         return info
 
     def stage_materialize(self) -> dict:
@@ -371,9 +343,12 @@ class Pipeline:
         edges = materialize_edges(triples, mapping).unionByName(
             cooccurrence_edges(linked, mapping, self.cfg.cooccur_window)
         )
-        return self._commit_stage(
-            "materialize", {"edges": edges}, ("edges_materialized", "edges"), t0
-        )
+        return {
+            "edges": self._commit(
+                "materialize", "edges", edges, t0, rows_metric="edges_materialized"
+            ),
+            "wall_ms": _ms_since(t0),
+        }
 
     def stage_metrics(self) -> dict:
         t0 = time.time()
@@ -383,27 +358,21 @@ class Pipeline:
             F.approx_count_distinct("url").alias("docs"),
             F.avg("conf").alias("avg_conf"),
         ).collect()[0]
-        wall_ms = int((time.time() - t0) * 1000)
-        self._append_metrics(
-            [
-                ("triples_total", float(stats["n"])),
-                ("docs_with_triples_approx", float(stats["docs"])),
-                ("avg_conf", float(stats["avg_conf"] or 0.0)),
-                ("metrics_wall_ms", float(wall_ms)),
-            ],
-            "metrics",
-        )
+        wall_ms = _ms_since(t0)
+        # written by flush_metrics(), with the rows the manifests carry
+        self._metrics_stage = {
+            "triples_total": float(stats["n"]),
+            "docs_with_triples_approx": float(stats["docs"]),
+            "avg_conf": float(stats["avg_conf"] or 0.0),
+            "metrics_wall_ms": float(wall_ms),
+        }
         return {"triples_total": stats["n"], "wall_ms": wall_ms}
 
     # ------------------------------------------------------------------ run
 
     def run(self, stages: list[str] | None = None) -> dict[str, dict]:
-        out = {}
-        try:
-            for s in stages or STAGES:
-                out[s] = getattr(self, f"stage_{s}")()
-        finally:
-            self.flush_metrics()
+        out = {s: getattr(self, f"stage_{s}")() for s in stages or STAGES}
+        self.flush_metrics()
         return out
 
 

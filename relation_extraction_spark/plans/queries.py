@@ -1609,8 +1609,7 @@ def q_kg_triples(spark, sf):
 @q("kg_detect_mentions")
 def q_kg_mentions(spark, sf):
     # PRODUCTION path: the fused triples+mentions pass (one tokenize/tag
-    # per sentence) with the triples side projected away JVM-side —
-    # round-2 bench measured the unfused standalone path instead.
+    # per sentence) with the triples side projected away JVM-side.
     from ..operators.extract import (
         extractions_from_sentences,
         sentences_from_pages,

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -65,7 +66,58 @@ class SnapshotTable:
     def exists(self) -> bool:
         return self.latest_manifest() is not None
 
-    def _publish(self, manifest: dict, token: str) -> dict:
+    def _next_snapshot(self) -> tuple[dict | None, int, str, str]:
+        """(parent manifest, next snapshot id, token, fresh data dir).
+
+        Ids advance only on publish, so an existing ``data/snap-<n>-*``
+        for the next id ``n`` can only be the leftover of a writer that
+        died before publishing (one writer per table): remove it, so
+        killed commits never leak data directories."""
+        parent = self.latest_manifest()
+        snap_id = (parent["snapshot_id"] + 1) if parent else 0
+        data = os.path.join(self.dir, "data")
+        if os.path.isdir(data):
+            for d in os.listdir(data):
+                if d.startswith(f"snap-{snap_id}-"):
+                    shutil.rmtree(os.path.join(data, d))
+        token = uuid.uuid4().hex[:8]
+        return parent, snap_id, token, os.path.join(data, f"snap-{snap_id}-{token}")
+
+    def _publish(
+        self,
+        parent: dict | None,
+        snap_id: int,
+        token: str,
+        new_files: list[tuple[str, int]],
+        t0: float,
+        operation: str,
+        stage: str,
+        schema_json: str | None = None,
+        partition_by: list[str] | None = None,
+        extra: dict | None = None,
+    ) -> dict:
+        """Atomically publish snapshot ``snap_id``: its files are
+        ``new_files`` for a replace, the parent's plus ``new_files`` for
+        an append."""
+        file_rows = dict(parent["file_rows"]) if parent and operation == "append" else {}
+        file_rows.update(new_files)
+        manifest = {
+            "table": self.name,
+            "snapshot_id": snap_id,
+            "parent_id": parent["snapshot_id"] if parent else None,
+            "partition_by": list(partition_by or []),
+            "schema_json": schema_json,
+            "files": sorted(file_rows),
+            # per-file row counts from the parquet footers: free
+            # file-level lineage, no Spark job (SURVEY.md §2.1 S6)
+            "file_rows": file_rows,
+            "n_rows": sum(file_rows.values()),
+            "stage": stage,
+            "operation": operation,
+            "wall_ms": int((time.time() - t0) * 1000),
+            "created_at_unix": int(time.time()),
+            "extra": extra or {},
+        }
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.manifest_dir, f".tmp-{token}.json")
         with open(tmp, "w") as fh:
@@ -73,24 +125,14 @@ class SnapshotTable:
             fh.flush()
             os.fsync(fh.fileno())
         # atomic publish: rename within the same directory/filesystem
-        os.rename(
-            tmp,
-            os.path.join(
-                self.manifest_dir, f"snapshot-{manifest['snapshot_id']}.json"
-            ),
-        )
+        os.rename(tmp, os.path.join(self.manifest_dir, f"snapshot-{snap_id}.json"))
         return manifest
 
     def _write_data(
-        self,
-        df: DataFrame,
-        snap_id: int,
-        token: str,
-        partition_by: list[str] | None,
-    ) -> tuple[list[str], int]:
+        self, df: DataFrame, data_dir: str, partition_by: list[str] | None
+    ) -> list[tuple[str, int]]:
         """Write df's files under a fresh snapshot dir; return (relative
-        file list, row count from parquet footers — no Spark job)."""
-        data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}-{token}")
+        path, row count from the parquet footer — no Spark job) per file."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -101,8 +143,7 @@ class SnapshotTable:
                 if n.endswith(".parquet"):
                     full = os.path.join(base, n)
                     files.append((os.path.relpath(full, self.dir), _footer_rows(full)))
-        files.sort()
-        return files, sum(r for _, r in files)
+        return files
 
     # ------------------------------------------------------------- write/read
 
@@ -114,95 +155,55 @@ class SnapshotTable:
         partition_by: list[str] | None = None,
     ) -> dict:
         """Full-replace snapshot: write data files, atomically publish."""
-        parent = self.latest_manifest()
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
-        token = uuid.uuid4().hex[:8]
+        parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
-        files, n_rows = self._write_data(df, snap_id, token, partition_by)
-        manifest = {
-            "table": self.name,
-            "snapshot_id": snap_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "partition_by": list(partition_by or []),
-            # data schema pinned at commit time: readers skip parquet
-            # footer-based schema inference entirely (~2s of driver-side
-            # planning per first read of a 64-file table — the dominant
-            # control-plane cost found in round 2). For a partitioned
-            # commit the partition columns are NOT in the data files'
-            # schema, so read() falls back to inference there.
-            "schema_json": None if partition_by else df.schema.json(),
-            "files": [f for f, _ in files],
-            # per-file row counts from the parquet footers: free
-            # file-level lineage, no Spark job (SURVEY.md §2.1 S6)
-            "file_rows": {f: r for f, r in files},
-            "n_rows": n_rows,
-            "stage": stage,
-            "operation": "replace",
-            "wall_ms": int((time.time() - t0) * 1000),
-            "created_at_unix": int(time.time()),
-            "extra": extra or {},
-        }
-        return self._publish(manifest, token)
+        files = self._write_data(df, data_dir, partition_by)
+        # data schema pinned at commit time: readers skip parquet
+        # footer-based schema inference entirely (~2s of driver-side
+        # planning per first read of a 64-file table — the dominant
+        # control-plane cost found in round 2). For a partitioned
+        # commit the partition columns are NOT in the data files'
+        # schema, so read() falls back to inference there.
+        schema_json = None if partition_by else df.schema.json()
+        return self._publish(
+            parent, snap_id, token, files, t0, "replace", stage,
+            schema_json, partition_by, extra,
+        )
 
     def append(self, df: DataFrame, stage: str = "") -> dict:
         """Fast-append snapshot: write ONLY the new rows' files; manifest
         = parent file list + new files. Previous data is never rewritten."""
-        parent = self.latest_manifest()
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
-        token = uuid.uuid4().hex[:8]
+        parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
-        new_files, new_rows = self._write_data(df, snap_id, token, None)
-        file_rows = dict(parent.get("file_rows", {})) if parent else {}
-        file_rows.update({f: r for f, r in new_files})
-        manifest = {
-            "table": self.name,
-            "snapshot_id": snap_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "schema_json": df.schema.json(),
-            "files": sorted(
-                (parent["files"] if parent else []) + [f for f, _ in new_files]
-            ),
-            "file_rows": file_rows,
-            "n_rows": (parent["n_rows"] if parent else 0) + new_rows,
-            "stage": stage,
-            "operation": "append",
-            "wall_ms": int((time.time() - t0) * 1000),
-            "created_at_unix": int(time.time()),
-            "extra": {},
-        }
-        return self._publish(manifest, token)
+        files = self._write_data(df, data_dir, None)
+        return self._publish(
+            parent, snap_id, token, files, t0, "append", stage, df.schema.json()
+        )
 
     def append_rows(self, rows: list[dict], schema: "pa.Schema", stage: str = "") -> dict:
         """Driver-side fast-append of a handful of rows (metrics/lineage):
         one pyarrow parquet write + manifest publish, zero Spark jobs.
         At cluster scale these tiny control-plane writes come from the
         driver anyway — routing them through executors is pure overhead."""
-        parent = self.latest_manifest()
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
-        token = uuid.uuid4().hex[:8]
+        return self.commit_rows(rows, schema, stage, operation="append")
+
+    def commit_rows(
+        self,
+        rows: list[dict],
+        schema: "pa.Schema",
+        stage: str = "",
+        operation: str = "replace",
+    ) -> dict:
+        """Driver-side snapshot of a handful of rows: a full replace, or
+        with ``operation="append"`` the parent's files plus the new one."""
+        parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
-        data_dir = os.path.join(self.dir, "data", f"snap-{snap_id}-{token}")
         os.makedirs(data_dir, exist_ok=True)
         path = os.path.join(data_dir, "part-00000.parquet")
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
         pq.write_table(pa.table(cols, schema=schema), path)
-        rel = os.path.relpath(path, self.dir)
-        file_rows = dict(parent.get("file_rows", {})) if parent else {}
-        file_rows[rel] = len(rows)
-        manifest = {
-            "table": self.name,
-            "snapshot_id": snap_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "files": sorted((parent["files"] if parent else []) + [rel]),
-            "file_rows": file_rows,
-            "n_rows": (parent["n_rows"] if parent else 0) + len(rows),
-            "stage": stage,
-            "operation": "append",
-            "wall_ms": int((time.time() - t0) * 1000),
-            "created_at_unix": int(time.time()),
-            "extra": {},
-        }
-        return self._publish(manifest, token)
+        new_files = [(os.path.relpath(path, self.dir), len(rows))]
+        return self._publish(parent, snap_id, token, new_files, t0, operation, stage)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Read the file list of the newest (or a pinned) snapshot."""

@@ -4,11 +4,15 @@ set operators the engine itself exposes (U2 intersect / U3 except)."""
 
 from __future__ import annotations
 
+from pyspark.sql.types import StructType
+
 from relation_extraction_spark.operators.asof import latest_per_key
 from relation_extraction_spark.operators.extract import (
-    mentions_from_sentences,
+    MENTION_COLS,
+    TRIPLE_COLS,
+    extractions_from_sentences,
     sentences_from_pages,
-    triples_from_sentences,
+    split_extractions,
 )
 from relation_extraction_spark.sources.corpus import synthetic_pages
 
@@ -23,6 +27,11 @@ def _pipeline_sentences(spark):
     return sentences_from_pages(pages, lang="en")
 
 
+def _extract(sents):
+    """(triples, mentions) from the pipeline's fused extraction pass."""
+    return split_extractions(extractions_from_sentences(sents))
+
+
 def _pr(pred: set, gold: set) -> tuple[float, float]:
     if not pred or not gold:
         return 0.0, 0.0
@@ -31,11 +40,9 @@ def _pr(pred: set, gold: set) -> tuple[float, float]:
 
 
 def test_triple_precision_recall(spark):
-    sents = _pipeline_sentences(spark)
-    pred = {
-        (r.url, r.sent_id, r.subj, r.pred, r.obj)
-        for r in triples_from_sentences(sents).collect()
-    }
+    triples, _ = _extract(_pipeline_sentences(spark))
+    assert triples.schema == StructType.fromDDL(TRIPLE_COLS)
+    pred = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in triples.collect()}
     gold = golden_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
     assert len(gold) > 200, "fixture too small to be meaningful"
@@ -46,11 +53,9 @@ def test_triple_precision_recall(spark):
 
 
 def test_mention_precision_recall(spark):
-    sents = _pipeline_sentences(spark)
-    pred = {
-        (r.url, r.sent_id, r.mention, r.start, r.end)
-        for r in mentions_from_sentences(sents).collect()
-    }
+    _, mentions = _extract(_pipeline_sentences(spark))
+    assert mentions.schema == StructType.fromDDL(MENTION_COLS)
+    pred = {(r.url, r.sent_id, r.mention, r.start, r.end) for r in mentions.collect()}
     gold = golden_mentions(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
     assert p == 1.0 and r == 1.0, f"P={p:.4f} R={r:.4f}"
@@ -61,8 +66,7 @@ def test_triple_pr_harness(spark):
     computation and reports P/R = 1.0 vs the golden oracle."""
     from relation_extraction_spark.evaluation import triple_pr
 
-    sents = _pipeline_sentences(spark)
-    pred = triples_from_sentences(sents)
+    pred, _ = _extract(_pipeline_sentences(spark))
     gold_rows = sorted(
         golden_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     )
@@ -77,9 +81,9 @@ def test_triple_pr_harness(spark):
 
 
 def test_extraction_deterministic_across_runs(spark):
-    sents = _pipeline_sentences(spark)
-    a = sorted(map(tuple, triples_from_sentences(sents).collect()))
-    b = sorted(map(tuple, triples_from_sentences(sents).collect()))
+    triples, _ = _extract(_pipeline_sentences(spark))
+    a = sorted(map(tuple, triples.collect()))
+    b = sorted(map(tuple, triples.collect()))
     assert a == b
 
 
@@ -91,11 +95,8 @@ def test_triple_pr_vs_independent_oracle(spark):
     evidence about extraction SEMANTICS, not just distribution."""
     from .oracle_independent import independent_triples
 
-    sents = _pipeline_sentences(spark)
-    pred = {
-        (r.url, r.sent_id, r.subj, r.pred, r.obj)
-        for r in triples_from_sentences(sents).collect()
-    }
+    triples, _ = _extract(_pipeline_sentences(spark))
+    pred = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in triples.collect()}
     gold = independent_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
     assert len(gold) > 200, "fixture too small to be meaningful"
@@ -105,11 +106,8 @@ def test_triple_pr_vs_independent_oracle(spark):
 def test_mention_pr_vs_independent_oracle(spark):
     from .oracle_independent import independent_mentions
 
-    sents = _pipeline_sentences(spark)
-    pred = {
-        (r.url, r.sent_id, r.mention, r.start, r.end)
-        for r in mentions_from_sentences(sents).collect()
-    }
+    _, mentions = _extract(_pipeline_sentences(spark))
+    pred = {(r.url, r.sent_id, r.mention, r.start, r.end) for r in mentions.collect()}
     gold = independent_mentions(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
     assert p >= 0.95 and r >= 0.95, f"P={p:.4f} R={r:.4f} vs independent oracle"
@@ -139,21 +137,3 @@ def test_independent_oracle_diverges_on_injected_bug():
     for fn in ("extract_from_sentence", "detect_mentions(", "segment_py", "tag_tokens"):
         assert fn not in src, fn
 
-
-def test_fused_extraction_equals_single_purpose_paths(spark):
-    """The fused nested-array extraction (one Arrow crossing) must be
-    row- and schema-identical to the single-purpose triples/mentions
-    paths it replaced in the pipeline's hot stage."""
-    from relation_extraction_spark.operators.extract import (
-        extractions_from_sentences,
-        split_extractions,
-    )
-
-    sents = _pipeline_sentences(spark).limit(500)
-    ft, fm = split_extractions(extractions_from_sentences(sents))
-    t1 = sorted(map(tuple, triples_from_sentences(sents).collect()))
-    m1 = sorted(map(tuple, mentions_from_sentences(sents).collect()))
-    assert sorted(map(tuple, ft.collect())) == t1
-    assert sorted(map(tuple, fm.collect())) == m1
-    assert ft.schema == triples_from_sentences(sents).schema
-    assert fm.schema == mentions_from_sentences(sents).schema

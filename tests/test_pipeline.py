@@ -1,15 +1,28 @@
 """End-to-end pipeline tests (SURVEY.md §5.2/5.3): full run produces all
 tables with the invariant intact; resume is a no-op on completed stages;
-a killed run resumes to the same result as an uninterrupted one."""
+a killed run — stopped cooperatively, hard-stopped in process, or
+SIGKILLed mid-commit — resumes to the same tables as an uninterrupted
+one, metrics and lineage included."""
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import json
+import os
 import re
+import shutil
+import signal
+import subprocess
+import sys
+import time
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from relation_extraction_spark.plans.pipeline import (
+    DATA_TABLES,
     STAGES,
     PipelineConfig,
     Pipeline,
@@ -22,10 +35,60 @@ from .oracle import golden_mentions, golden_pages
 
 N = 120
 CFG = dict(pages=N, seed=42, skew=0.2, dup_frac=0.1, run_id="t")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_run(spark, tmp_path_factory) -> tuple[str, dict]:
+    """One uninterrupted run of CFG — (root, per-stage infos) — shared
+    read-only by the tests below."""
+    out = str(tmp_path_factory.mktemp("uninterrupted") / "out")
+    return out, run_pipeline(spark, PipelineConfig(out=out, **CFG))
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(uninterrupted_run) -> str:
+    return uninterrupted_run[0]
 
 
 def _table_rows(spark, out: str, name: str) -> list[tuple]:
     return sorted(map(tuple, SnapshotTable(out, name).read(spark).collect()))
+
+
+def _metric_rows(spark, out: str) -> list[tuple]:
+    """(metric, stage, run_id, value); *_wall_ms values are timings."""
+    return sorted(
+        (r.metric, r.stage, r.run_id,
+         None if r.metric.endswith("_wall_ms") else r.value)
+        for r in SnapshotTable(out, "metrics").read(spark).collect()
+    )
+
+
+def _lineage_sums(spark, out: str) -> Counter:
+    """Σ n_rows per (stage, table); ``file`` is <table>/data/..."""
+    sums = Counter()
+    for r in SnapshotTable(out, "lineage").read(spark).collect():
+        sums[(r.stage, r.file.split("/")[0])] += r.n_rows
+    return sums
+
+
+def _orphan_data_dirs(out: str) -> list[str]:
+    """<table>/data/snap-* directories that no manifest of their table lists."""
+    listed = set()
+    for path in glob.glob(os.path.join(out, "*", "_manifests", "snapshot-*.json")):
+        table = path.split(os.sep)[-3]
+        with open(path) as fh:
+            # a file is data/snap-<n>-<token>/part-*.parquet
+            listed |= {f"{table}/{os.path.dirname(f)}" for f in json.load(fh)["files"]}
+    return sorted(set(glob.glob("*/data/*", root_dir=out)) - listed)
+
+
+def _assert_same_tables(spark, out: str, ref: str) -> None:
+    for t in DATA_TABLES:
+        assert _table_rows(spark, out, t) == _table_rows(spark, ref, t), t
+    assert _metric_rows(spark, out) == _metric_rows(spark, ref)
+    assert _lineage_sums(spark, out) == _lineage_sums(spark, ref)
+    assert _orphan_data_dirs(out) == []
 
 
 def _trigrams(s: str) -> set[str]:
@@ -65,9 +128,11 @@ def _check_linked_against_python(spark, out: str) -> None:
         assert (r.score is None) if score is None else abs(r.score - score) <= 1e-6, r
 
 
-def test_full_pipeline_and_resume(spark, tmp_path):
+def test_full_pipeline_and_resume(spark, tmp_path, uninterrupted_run):
+    ref, info = uninterrupted_run
+    # resumed below: work on a copy of the shared run
     out = str(tmp_path / "full")
-    info = run_pipeline(spark, PipelineConfig(out=out, **CFG))
+    shutil.copytree(ref, out)
     # every stage ran, nothing skipped
     assert set(info) == set(STAGES)
     assert not any(v.get("skipped") for v in info.values())
@@ -87,19 +152,25 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     }
     assert metrics["text_invariant_mismatches"] == 0.0
     assert metrics["triples_total"] > 0
-    # lineage rows cover the extract stage's partitions
-    lin = SnapshotTable(out, "lineage").read(spark)
-    assert lin.filter(F.col("stage") == "extract").count() > 0
+    # lineage: one row per committed data file of every table, each
+    # table's rows summing to its manifest row count
+    lineage = _lineage_sums(spark, out)
+    manifests = [SnapshotTable(out, t).latest_manifest() for t in DATA_TABLES]
+    assert lineage == Counter({(m["stage"], m["table"]): m["n_rows"] for m in manifests})
     # linked_mentions matches the pure-Python path row for row
     _check_linked_against_python(spark, out)
 
-    # -------- resume over a COMPLETE run is a no-op for data stages
+    # -------- resume over a COMPLETE run is a no-op for data stages and
+    # re-derives the same metrics and lineage
+    metric_rows = _metric_rows(spark, out)
     info2 = run_pipeline(spark, PipelineConfig(out=out, **CFG))
     for s in ["ingest", "extract", "link", "canonicalize", "materialize"]:
         assert info2[s].get("skipped"), s
+    assert _metric_rows(spark, out) == metric_rows
+    assert _lineage_sums(spark, out) == lineage
 
 
-def test_kill_resume_equals_uninterrupted(spark, tmp_path):
+def test_kill_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
     """Run stages 1-2, 'crash', resume all -> same outputs as a fresh
     uninterrupted run (checkpoint-resume contract, BASELINE.json:L14)."""
     out_a = str(tmp_path / "killed")
@@ -107,30 +178,67 @@ def test_kill_resume_equals_uninterrupted(spark, tmp_path):
     # resume: completed stages skip, remaining stages run
     info = run_pipeline(spark, PipelineConfig(out=out_a, **CFG))
     assert info["ingest"].get("skipped") and info["extract"].get("skipped")
-
-    out_b = str(tmp_path / "fresh")
-    run_pipeline(spark, PipelineConfig(out=out_b, **CFG))
-
-    for t in ["triples", "entities", "mapping", "edges"]:
-        assert _table_rows(spark, out_a, t) == _table_rows(spark, out_b, t), t
+    _assert_same_tables(spark, out_a, uninterrupted)
 
 
-def test_pipeline_deterministic_across_runs(spark, tmp_path):
-    a = str(tmp_path / "a")
+def test_hard_stop_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
+    """Stages called directly and never flushed — what a SIGKILL leaves:
+    the resumed run still derives every stage's metric and lineage rows
+    from the committed manifests."""
+    out = str(tmp_path / "hard")
+    p = Pipeline(spark, PipelineConfig(out=out, **CFG))
+    p.stage_ingest()
+    p.stage_extract()
+    p.stage_link()
+    assert not SnapshotTable(out, "metrics").exists()
+    info = run_pipeline(spark, PipelineConfig(out=out, **CFG))
+    assert all(info[s].get("skipped") for s in ["ingest", "extract", "link"])
+    _assert_same_tables(spark, out, uninterrupted)
+
+
+def test_sigkill_mid_commit_resumes_to_uninterrupted(spark, tmp_path, uninterrupted):
+    """A real main.py process SIGKILLed between the canonicalize
+    mapping commit's data write and its manifest publish, then resumed
+    by a second main.py: same tables, and the dead writer's data
+    directory is gone."""
+    out = str(tmp_path / "sigkill")
+    cmd = [
+        sys.executable, "main.py", "--out", out, "--pages", str(N),
+        "--seed", "42", "--skew", "0.2", "--dup-frac", "0.1", "--run-id", "t",
+        "--master", spark.sparkContext.master, "--shuffle-partitions", "8",
+    ]
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.Popen(cmd, cwd=ROOT, env=env, start_new_session=True,
+                            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    deadline = time.monotonic() + 600
+    try:
+        while not os.path.exists(os.path.join(out, "mapping", "data")):
+            assert proc.poll() is None, "main.py exited before canonicalize"
+            assert time.monotonic() < deadline, "main.py never reached canonicalize"
+            time.sleep(0.02)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=60)
+    assert SnapshotTable(out, "linked_mentions").exists()
+    assert not SnapshotTable(out, "mapping").exists()
+    subprocess.run(cmd, cwd=ROOT, env=env, check=True, timeout=900,
+                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    _assert_same_tables(spark, out, uninterrupted)
+
+
+def test_pipeline_deterministic_across_runs(spark, tmp_path, uninterrupted):
     b = str(tmp_path / "b")
-    run_pipeline(spark, PipelineConfig(out=a, **CFG))
     run_pipeline(spark, PipelineConfig(out=b, **CFG))
     for t in ["web_pages", "triples", "entities", "edges"]:
-        ra, rb = _table_rows(spark, a, t), _table_rows(spark, b, t)
+        ra, rb = _table_rows(spark, uninterrupted, t), _table_rows(spark, b, t)
         assert ra == rb, f"{t}: {len(ra)} vs {len(rb)} rows"
 
 
-def test_stage_outputs_flow(spark, tmp_path):
+def test_stage_outputs_flow(spark, uninterrupted):
     """Spot-check stage wiring: every triple's url is an ingested page,
     every edge endpoint is a canonical entity."""
-    out = str(tmp_path / "flow")
-    run_pipeline(spark, PipelineConfig(out=out, **CFG))
-    p = Pipeline(spark, PipelineConfig(out=out, **CFG))
+    p = Pipeline(spark, PipelineConfig(out=uninterrupted, **CFG))
     pages = p.tables["web_pages"].read(spark).select("url")
     triples = p.tables["triples"].read(spark)
     orphans = triples.join(pages, "url", "left_anti").count()
