@@ -126,6 +126,14 @@ def lsh_similarity_edges(
     )
 
 
+def entities_from_mapping(mapping: DataFrame) -> DataFrame:
+    """mapping(form, canonical_id) -> entities(canonical_id,
+    surface_forms): one row per component, forms sorted."""
+    return mapping.groupBy("canonical_id").agg(
+        F.array_sort(F.collect_set("form")).alias("surface_forms")
+    )
+
+
 def canonicalize(
     mentions: DataFrame,
     linked: DataFrame,
@@ -154,8 +162,4 @@ def canonicalize(
             F.coalesce("component", "form_id").alias("canonical_id"),
         )
     )
-    entities = (
-        mapping.groupBy("canonical_id")
-        .agg(F.array_sort(F.collect_set("form")).alias("surface_forms"))
-    )
-    return entities, mapping
+    return entities_from_mapping(mapping), mapping

@@ -114,12 +114,13 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(rows, schema)
 
 
+# safety bound on the large-star/small-star rounds; convergence takes
+# O(log n) rounds, so a graph that reaches it stops unconverged
+MAX_ROUNDS = 20
+
+
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    driver_threshold: int = 2_000_000,
+    edges: DataFrame, driver_threshold: int = 2_000_000
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
@@ -141,14 +142,12 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    e = _canonical_edges(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint()
+    e = _canonical_edges(edges).localCheckpoint()
     sig = _sig(e)
     if sig[0] <= driver_threshold:
         return _driver_union_find(e)
     prev = e
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         e2 = _small_star(_large_star(e)).localCheckpoint()
         # converged when the edge multiset is stable (both frames are
         # (node -> smaller node) maps after a small-star step). The

@@ -25,7 +25,7 @@ Scale shape per stage (the 1000-executor story):
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.htmltext import extract_text
 from ..operators.asof import latest_per_key
-from ..operators.canonicalize import canonicalize
+from ..operators.canonicalize import canonicalize, entities_from_mapping
 from ..operators.extract import (
     extractions_from_sentences,
     sentences_from_pages,
@@ -80,8 +80,6 @@ class PipelineConfig:
     skew: float = 0.1
     dup_frac: float = 0.05
     lang_en: float = 0.85
-    cooccur_window: int = 2
-    lsh_threshold: float = 0.7
     # file-level bucketing of big tables by url hash: keeps every
     # downstream scan splittable into >= n_buckets tasks (AQE's
     # coalescing would otherwise write few large single-row-group files
@@ -97,7 +95,6 @@ class PipelineConfig:
     resume: bool = True
     run_id: str = "run-0"
     input_parquet: str | None = None  # pre-generated corpus (bench path)
-    extra_tables: dict = field(default_factory=dict)
 
 
 def _ms_since(t0: float) -> int:
@@ -317,15 +314,9 @@ class Pipeline:
         # table — entities and mapping share the expensive forms+LSH+CC
         # lineage, and committing both from the lazy plans would execute
         # that chain twice (commit-then-derive, as everywhere else).
-        _entities, mapping = canonicalize(
-            mentions, linked, triples, threshold=self.cfg.lsh_threshold
-        )
+        _entities, mapping = canonicalize(mentions, linked, triples)
         info = {"mapping": self._commit("canonicalize", "mapping", mapping)}
-        committed_mapping = self.tables["mapping"].read(self.spark)
-        entities = (
-            committed_mapping.groupBy("canonical_id")
-            .agg(F.array_sort(F.collect_set("form")).alias("surface_forms"))
-        )
+        entities = entities_from_mapping(self.tables["mapping"].read(self.spark))
         info["entities"] = self._commit(
             "canonicalize", "entities", entities, t0,
             rows_metric="entities_canonical",
@@ -341,7 +332,7 @@ class Pipeline:
         linked = self.tables["linked_mentions"].read(self.spark)
         mapping = self.tables["mapping"].read(self.spark)
         edges = materialize_edges(triples, mapping).unionByName(
-            cooccurrence_edges(linked, mapping, self.cfg.cooccur_window)
+            cooccurrence_edges(linked, mapping)
         )
         return {
             "edges": self._commit(

@@ -70,9 +70,10 @@ class SnapshotTable:
         """(parent manifest, next snapshot id, token, fresh data dir).
 
         Ids advance only on publish, so an existing ``data/snap-<n>-*``
-        for the next id ``n`` can only be the leftover of a writer that
-        died before publishing (one writer per table): remove it, so
-        killed commits never leak data directories."""
+        for the next id ``n``, like any ``_manifests/.tmp-*.json``, can
+        only be the leftover of a writer that died before publishing (one
+        writer per table): remove them, so killed commits never leak data
+        directories or temp manifests."""
         parent = self.latest_manifest()
         snap_id = (parent["snapshot_id"] + 1) if parent else 0
         data = os.path.join(self.dir, "data")
@@ -80,6 +81,10 @@ class SnapshotTable:
             for d in os.listdir(data):
                 if d.startswith(f"snap-{snap_id}-"):
                     shutil.rmtree(os.path.join(data, d))
+        if os.path.isdir(self.manifest_dir):
+            for f in os.listdir(self.manifest_dir):
+                if f.startswith(".tmp-") and f.endswith(".json"):
+                    os.remove(os.path.join(self.manifest_dir, f))
         token = uuid.uuid4().hex[:8]
         return parent, snap_id, token, os.path.join(data, f"snap-{snap_id}-{token}")
 

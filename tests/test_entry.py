@@ -18,9 +18,6 @@ ROWS_ONLY = {
     "kg_link_mentions",
     "kg_materialize_edges",
     "kg_segment_sentences",
-    "multimodal_image_meta",
-    "multimodal_image_meta_arrow",
-    "multimodal_near_dup_phash",
     "sort_within_partitions",
 }
 

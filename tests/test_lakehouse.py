@@ -42,17 +42,23 @@ def test_snapshot_isolation_readers_see_committed_only(spark, tmp_path):
 
 def test_no_partial_manifest_visible(spark, tmp_path):
     """A crash before manifest publish leaves exists() false; the next
-    commit succeeds and removes the dead writer's data directory."""
+    commit succeeds and removes the dead writer's data directory and
+    temp manifest."""
     t = SnapshotTable(str(tmp_path), "t")
-    # simulate a crashed writer: data files exist, no manifest
+    # simulate a crashed writer: data files and a temp manifest exist,
+    # no published manifest (killed between the temp write and the rename)
     dead = os.path.join(t.dir, "data", "snap-0-dead")
     spark.range(3).write.parquet(dead)
+    os.makedirs(t.manifest_dir)
+    with open(os.path.join(t.manifest_dir, ".tmp-dead.json"), "w") as fh:
+        fh.write("{}")
     assert not t.exists()
     with pytest.raises(FileNotFoundError):
         t.read(spark)
     m = t.commit(spark.range(5), stage="s1")
     assert m["snapshot_id"] == 0 and t.read(spark).count() == 5
     assert not os.path.exists(dead)
+    assert os.listdir(t.manifest_dir) == ["snapshot-0.json"]
     assert os.listdir(os.path.join(t.dir, "data")) == [m["files"][0].split("/")[1]]
 
 

@@ -278,20 +278,6 @@ def test_png_perturbed_twin_is_hamming_near():
         assert ham <= 3, (i, ham)
 
 
-def test_cross_format_dup_query_matches_oracle_shape(spark):
-    """multimodal_png_cross_format_dup: 100 BMPs + 100 PNG re-encodes of
-    the same pixels -> exactly the pairs (i, 20000+i), deterministically
-    (also proves no accidental phash collisions among the 100 images)."""
-    from relation_extraction_spark.plans.queries import QUERIES
-
-    fn, sql = QUERIES["multimodal_png_cross_format_dup"]
-    rows = fn(spark, "unused").collect()
-    assert [(r.id_a, r.id_b) for r in rows] == [
-        (i, 20_000 + i) for i in range(100)
-    ]
-    assert sql is not None  # oracle-backed despite the Python decode
-
-
 # ----------------------------------------------------------------- real WAV
 
 
