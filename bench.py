@@ -79,7 +79,6 @@ def _run() -> dict:
         "kg_extract_triples",
         "kg_detect_mentions",
         "kg_link_mentions",
-        "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
         "dedup_cluster_cc",
         "pack_sequences_scalable",

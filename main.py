@@ -54,6 +54,13 @@ def main() -> None:
     # Validate before paying Spark session startup.
     if args.job == "mixture" and not args.input_parquet:
         ap.error("--job mixture requires --input-parquet")
+    stages = STAGES if args.stage == "all" else args.stage.split(",")
+    unknown = [s for s in stages if s not in STAGES]
+    if unknown:
+        ap.error(
+            f"unknown --stage {','.join(unknown)}; "
+            f"choose all or from {','.join(STAGES)}"
+        )
 
     spark = get_spark(
         app_name=f"{args.job}-pipeline",
@@ -98,7 +105,6 @@ def main() -> None:
         input_parquet=args.input_parquet,
         coref=args.coref,
     )
-    stages = STAGES if args.stage == "all" else args.stage.split(",")
     t0 = time.time()
     info = run_pipeline(spark, cfg, stages)
     wall = time.time() - t0

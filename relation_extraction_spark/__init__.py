@@ -17,8 +17,7 @@ transform:
                    primitives: entity linking, LSH canonicalization,
                    coreference, connected components, edge
                    materialization, dedup/decontamination, sequence
-                   packing, salted skew joins/aggs, as-of dedup,
-                   multimodal binary decoding.
+                   packing, salted skew joins/aggs, as-of dedup.
 - ``plans``      — the stage DAG (ingest→extract→link→canonicalize→
                    materialize→metrics) with checkpoint/resume, the
                    mixture-cleaning job, and the oracle-checked query

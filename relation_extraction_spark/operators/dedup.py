@@ -8,18 +8,13 @@ All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
                              (exact when ``max_shingle_freq=None``;
                              the default caps hot shingles — the
                              oracle mirrors the cap in SQL).
-- ``minhash_lsh_pairs``    — banded LSH candidate pairs + exact-Jaccard
-                             verification: the 100 TB-scale path (only
-                             banded-bucket collisions are joined, never
-                             all pairs).
-- ``_simhash_chunk_bounds`` / ``_first_agreeing_chunk_pairs`` — the
-                             pigeonhole banding behind the perceptual-
-                             hash near-dup join in multimodal.py.
+- ``minhash_aggs`` / ``hash32_expr`` — the MinHash signature pieces
+                             behind canonicalization's LSH blocking.
 
-Scale notes: every pair-finder shuffles on a *blocking key* (shingle,
-LSH band, hash chunk) rather than cross-joining; hot shingles (stop
-phrases) are capped with a frequency filter — the same salting philosophy
-as the KG linking stage (BASELINE.json:L14).
+Scale notes: the pair-finder shuffles on a *blocking key* (the shingle)
+rather than cross-joining; hot shingles (stop phrases) are capped with a
+frequency filter — the same salting philosophy as the KG linking stage
+(BASELINE.json:L14).
 """
 
 from __future__ import annotations
@@ -272,8 +267,8 @@ def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_aggs(h_col: str, k: int, seed: int = 42) -> list[Column]:
     """k min-hash aggregate expressions over a 32-bit hash column —
-    pure long arithmetic, map-side partial min, shared by document
-    dedup and surface-form canonicalization. Each aggregate is ONE
+    pure long arithmetic, map-side partial min, used by surface-form
+    canonicalization's LSH blocking. Each aggregate is ONE
     parsed SQL string: k Column-built expressions cost ~6 Python->JVM
     round trips apiece in plan construction."""
     return [
@@ -286,122 +281,3 @@ def hash32_expr(col: str | Column) -> Column:
     """xxhash64 folded to an unsigned 32-bit value (as long)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.xxhash64(c), F.lit(1 << 32))
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    k: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup pairs: banded-LSH blocking then exact-Jaccard verify.
-
-    Candidates = pairs agreeing on at least one band (rows = k/bands sig
-    values hashed together); each candidate is verified with the exact
-    n-gram Jaccard so output has no false positives — the LSH only
-    bounds recall/cost. Shuffles on band-hash only; never all-pairs.
-    """
-    rows = k // bands
-    # ONE shingle computation for the whole operator: the shingle-set
-    # frame is lazily checkpointed and feeds BOTH the signature branch
-    # (explode+hash+min-aggs) and the two exact-verify sides — the old
-    # formulation re-derived ngram_shingles three times (same class of
-    # defect as the round-2 n-gram regression).
-    texts = docs.select(
-        F.col(id_col).alias("doc"), ngram_shingles(text_col, n).alias("shset")
-    ).localCheckpoint(eager=False)
-    sh = texts.select("doc", F.explode("shset").alias("sh")).withColumn(
-        "h", hash32_expr("sh")
-    )
-    sig = sh.groupBy("doc").agg(*minhash_aggs("h", k, seed)).select(
-        "doc", F.array(*[f"mh_{i}" for i in range(k)]).alias("signature")
-    )
-    banded = sig.select(
-        "doc",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[F.col("signature")[i] for i in range(b * rows, (b + 1) * rows)]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
-    a = banded.select(F.col("doc").alias("id_a"), "band", "band_hash")
-    b = banded.select(F.col("doc").alias("id_b"), "band", "band_hash")
-    cand = (
-        a.join(b, ["band", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ta = texts.select(F.col("doc").alias("id_a"), F.col("shset").alias("sha"))
-    tb = texts.select(F.col("doc").alias("id_b"), F.col("shset").alias("shb"))
-    return (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sha", "shb"))
-                / F.size(F.array_union("sha", "shb")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
-    """(offset, width) per pigeonhole chunk: the 64 bits split into
-    ``max_hamming + 1`` near-equal chunks, so any pair within hamming
-    distance ``max_hamming`` has at least one chunk with ZERO differing
-    bits (pigeonhole) — banding is recall-complete for the requested
-    distance, whatever it is (round-1 judge finding: the old fixed
-    4-chunk split was only complete for hamming <= 3)."""
-    n_chunks = min(max_hamming + 1, 64)
-    base, extra = divmod(64, n_chunks)
-    bounds = []
-    off = 0
-    for c in range(n_chunks):
-        width = base + (1 if c < extra else 0)
-        bounds.append((off, width))
-        off += width
-    return bounds
-
-
-def _first_agreeing_chunk_pairs(joined: DataFrame, max_hamming: int) -> DataFrame:
-    """Dedupe multi-chunk collisions WITHOUT a shuffle: a pair appears
-    in the banded join once per agreeing chunk, and the set of agreeing
-    chunks is computable IN-ROW from ``ha ^ hb`` — keep the pair only at
-    its FIRST agreeing chunk. This replaces the old ``.distinct()`` (a
-    full shuffle of every collision row — the dominant shuffle at high
-    pair density) with a map-side filter; the output pair set is
-    identical since every qualifying pair meets at each agreeing chunk.
-
-    ``joined`` must carry columns (id_a, id_b, ha, hb, chunk).
-    """
-    x = F.expr("ha ^ hb")
-    agree_flags = F.array(
-        *[
-            (
-                F.shiftrightunsigned(x, off).bitwiseAND(F.lit((1 << width) - 1))
-                == 0
-            ).cast("int")
-            for off, width in _simhash_chunk_bounds(max_hamming)
-        ]
-    )
-    first_agree = F.array_position(agree_flags, 1) - 1
-    return (
-        joined.filter(F.col("chunk") == first_agree)
-        .select("id_a", "id_b", F.bit_count(x).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-

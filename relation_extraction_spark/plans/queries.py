@@ -1021,10 +1021,10 @@ def q_dedup_cluster_cc(spark, sf):
 @q(
     "dedup_minhash_lsh_md5",
     # the MinHash-LSH ALGORITHM under a full value oracle: the
-    # production variant (dedup_minhash_lsh below) hashes with JVM
-    # xxhash64 (no DuckDB equivalent -> rows-only), but the algorithm
-    # itself — k min-hashes, banded blocking, candidate self-join,
-    # exact-Jaccard verify — is hash-family-agnostic. This twin uses
+    # product's LSH (canonicalize.lsh_similarity_edges) hashes with JVM
+    # xxhash64 (no DuckDB equivalent), but the algorithm itself — k
+    # min-hashes, banded blocking, candidate self-join, exact-Jaccard
+    # verify — is hash-family-agnostic. This twin uses
     # min(md5(seed || shingle)) as the permutation family (md5 hex is
     # byte-identical across engines, string MIN is the min-hash), so
     # every step runs verbatim in DuckDB. k=8, 4 bands of 2 rows,
@@ -1246,16 +1246,6 @@ def q_dedup_simhash_md5(spark, sf):
         .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
-
-
-@q("dedup_minhash_lsh")  # rows-only: xxhash64 has no DuckDB equivalent
-def q_dedup_minhash(spark, sf):
-    from ..operators.dedup import minhash_lsh_pairs
-
-    # unspread: signature building on the single-split fixture is cheap
-    # relative to the k min-agg shuffles (A/B: 2.3s unspread vs 4.1s)
-    docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    return minhash_lsh_pairs(docs, threshold=0.3, k=32, bands=8, n=2)
 
 
 _SW_EN_SQL = "['the','a','an','and','or','of','in','on','at','is','are','was','with','for','to','by','from','this','that','it']"

@@ -98,7 +98,6 @@ class SnapshotTable:
         operation: str,
         stage: str,
         schema_json: str | None = None,
-        partition_by: list[str] | None = None,
         extra: dict | None = None,
     ) -> dict:
         """Atomically publish snapshot ``snap_id``: its files are
@@ -110,7 +109,6 @@ class SnapshotTable:
             "table": self.name,
             "snapshot_id": snap_id,
             "parent_id": parent["snapshot_id"] if parent else None,
-            "partition_by": list(partition_by or []),
             "schema_json": schema_json,
             "files": sorted(file_rows),
             # per-file row counts from the parquet footers: free
@@ -133,46 +131,31 @@ class SnapshotTable:
         os.rename(tmp, os.path.join(self.manifest_dir, f"snapshot-{snap_id}.json"))
         return manifest
 
-    def _write_data(
-        self, df: DataFrame, data_dir: str, partition_by: list[str] | None
-    ) -> list[tuple[str, int]]:
+    def _write_data(self, df: DataFrame, data_dir: str) -> list[tuple[str, int]]:
         """Write df's files under a fresh snapshot dir; return (relative
         path, row count from the parquet footer — no Spark job) per file."""
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         files = []
-        for base, _dirs, names in os.walk(data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    full = os.path.join(base, n)
-                    files.append((os.path.relpath(full, self.dir), _footer_rows(full)))
+        for n in os.listdir(data_dir):
+            if n.endswith(".parquet"):
+                full = os.path.join(data_dir, n)
+                files.append((os.path.relpath(full, self.dir), _footer_rows(full)))
         return files
 
     # ------------------------------------------------------------- write/read
 
-    def commit(
-        self,
-        df: DataFrame,
-        stage: str = "",
-        extra: dict | None = None,
-        partition_by: list[str] | None = None,
-    ) -> dict:
+    def commit(self, df: DataFrame, stage: str = "", extra: dict | None = None) -> dict:
         """Full-replace snapshot: write data files, atomically publish."""
         parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
-        files = self._write_data(df, data_dir, partition_by)
+        files = self._write_data(df, data_dir)
         # data schema pinned at commit time: readers skip parquet
         # footer-based schema inference entirely (~2s of driver-side
         # planning per first read of a 64-file table — the dominant
-        # control-plane cost found in round 2). For a partitioned
-        # commit the partition columns are NOT in the data files'
-        # schema, so read() falls back to inference there.
-        schema_json = None if partition_by else df.schema.json()
+        # control-plane cost found in round 2).
         return self._publish(
             parent, snap_id, token, files, t0, "replace", stage,
-            schema_json, partition_by, extra,
+            df.schema.json(), extra,
         )
 
     def append(self, df: DataFrame, stage: str = "") -> dict:
@@ -180,7 +163,7 @@ class SnapshotTable:
         = parent file list + new files. Previous data is never rewritten."""
         parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
-        files = self._write_data(df, data_dir, None)
+        files = self._write_data(df, data_dir)
         return self._publish(
             parent, snap_id, token, files, t0, "append", stage, df.schema.json()
         )
@@ -221,14 +204,7 @@ class SnapshotTable:
                 m = json.load(fh)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot for table {self.name}")
-        # basePath: partition columns of a `partition_by` commit live only
-        # in the `col=value` directory names between the snapshot dir and
-        # the leaf files; without a basePath a list-of-leaf-files read
-        # silently drops them (round-1 advisor finding). Spark's partition
-        # inference walks UP from each leaf and stops at the first
-        # non-`k=v` segment (the snap-<n>-<token> dir), so self.dir is a
-        # safe basePath for partitioned and unpartitioned snapshots alike.
-        reader = spark.read.option("basePath", self.dir)
+        reader = spark.read
         if m.get("schema_json"):
             from pyspark.sql.types import StructType
 

@@ -10,7 +10,6 @@ from relation_extraction_spark.plans.queries import QUERIES
 # registry entries with no DuckDB oracle (non-SQL-expressible ops)
 ROWS_ONLY = {
     "agg_approx_distinct",
-    "dedup_minhash_lsh",
     "kg_canonicalize_entities",
     "kg_coref_triples",
     "kg_detect_mentions",

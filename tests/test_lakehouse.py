@@ -6,7 +6,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from relation_extraction_spark.sources.lakehouse import SnapshotTable
 
@@ -73,28 +72,3 @@ def test_append_unions_previous(spark, tmp_path):
     # fast-append: old files are reused, never rewritten
     assert set(m0["files"]) < set(m1["files"])
     assert m1["n_rows"] == 5 and m1["operation"] == "append"
-
-
-def test_partitioned_commit_roundtrip(spark, tmp_path):
-    """A commit with partition_by encodes the partition column only in
-    directory names; read() must recover it via basePath (round-1
-    advisor finding)."""
-    t = SnapshotTable(str(tmp_path), "t")
-    df = spark.createDataFrame(
-        [(1, "en"), (2, "en"), (3, "de")], "id long, lang string"
-    )
-    m = t.commit(df, stage="s1", partition_by=["lang"])
-    assert m["partition_by"] == ["lang"]
-    assert any("lang=" in f for f in m["files"])
-    got = t.read(spark)
-    assert set(got.columns) == {"id", "lang"}
-    assert sorted((r.id, r.lang) for r in got.collect()) == [
-        (1, "en"), (2, "en"), (3, "de"),
-    ]
-    # partition pruning survives: a filter on the partition column only
-    # lists that partition's files
-    assert got.filter(F.col("lang") == "de").count() == 1
-    # second partitioned replace-commit: time travel keeps both readable
-    t.commit(df.filter(F.col("lang") == "en"), stage="s2", partition_by=["lang"])
-    assert t.read(spark).count() == 2
-    assert t.read(spark, snapshot_id=0).count() == 3

@@ -227,6 +227,19 @@ def test_sigkill_mid_commit_resumes_to_uninterrupted(spark, tmp_path, uninterrup
     _assert_same_tables(spark, out, uninterrupted)
 
 
+def test_main_rejects_unknown_stage_before_spark(tmp_path):
+    """An unknown --stage name is an argument error (exit 2) raised
+    before any Spark session starts or any output is written."""
+    out = tmp_path / "out"
+    proc = subprocess.run(
+        [sys.executable, "main.py", "--out", str(out), "--stage", "ingest,bogus"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 2, proc.stderr
+    assert "bogus" in proc.stderr
+    assert not out.exists()
+
+
 def test_pipeline_deterministic_across_runs(spark, tmp_path, uninterrupted):
     b = str(tmp_path / "b")
     run_pipeline(spark, PipelineConfig(out=b, **CFG))

@@ -1,5 +1,5 @@
-"""Property-based tests (hypothesis) for the pure NLP/text cores and
-the MinHash estimator (SURVEY.md §5.3)."""
+"""Property-based tests (hypothesis) for the pure NLP/text cores
+(SURVEY.md §5.3), plus n-gram dedup edge cases."""
 
 from __future__ import annotations
 
@@ -81,41 +81,6 @@ def test_extract_text_idempotent_on_plain_text(plain):
     once = extract_text_py(safe)
     assert once == extract_text_py(once)
     assert re.sub(r"\s+", "", once) == re.sub(r"\s+", "", safe)
-
-
-def test_minhash_estimates_jaccard(spark):
-    """Banded-LSH candidate recall: pairs above the similarity threshold
-    must be found by the MinHash path (verified exactly afterwards, so
-    precision is 1.0 by construction — this pins recall)."""
-    from relation_extraction_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog again and again "
-        "while the engine scans the table and writes the rows"
-    )
-    rows = [(0, base)]
-    # progressively mutated copies -> a spread of true jaccards
-    w = base.split()
-    for i in range(1, 12):
-        mutated = " ".join(
-            tok if (j * 7 + i) % 13 else f"tok{i}{j}" for j, tok in enumerate(w)
-        )
-        rows.append((i, mutated))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.6).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, threshold=0.6, k=32, bands=16).collect()
-    }
-    assert lsh <= exact  # no false positives (exact verify)
-    missed = exact - lsh
-    assert len(missed) <= max(1, len(exact) // 5), f"LSH recall too low: {missed}"
 
 
 def test_ngram_short_docs_no_crash(spark):
