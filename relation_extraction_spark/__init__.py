@@ -9,10 +9,11 @@ transform:
 
 - ``sources``    — synthetic Common-Crawl-style corpus, lakehouse
                    snapshot/manifest tables, entity dictionary.
-- ``functions``  — vectorized pandas/Arrow UDF stages (html→text,
-                   sentence segmentation, POS tagging, OpenIE-style
-                   triple and mention extraction) plus pure-column
-                   text-analysis expressions.
+- ``functions``  — pure-Python extraction cores (html→text, sentence
+                   segmentation, POS tagging, OpenIE-style triple and
+                   mention extraction), run in one Arrow-batched
+                   ``mapInArrow`` crossing per page batch, plus
+                   pure-column text-analysis expressions.
 - ``operators``  — distributed operators composed from DataFrame
                    primitives: entity linking, LSH canonicalization,
                    coreference, connected components, edge

@@ -1,7 +1,8 @@
-"""Vectorized UDF stages + pure-column expression helpers.
+"""Pure-Python extraction cores + pure-column expression helpers.
 
-Each module exposes (a) a pure-Python deterministic core, used both by the
-pandas-UDF wrappers and by the single-node golden-fixture oracle in tests
-(SURVEY.md §5.2), and (b) Spark-facing wrappers (pandas_udf / mapInPandas /
-Column expressions).
+htmltext, segment and nlp each expose a pure-Python deterministic core,
+run by the extraction stage inside its ``mapInArrow`` page batches
+(operators/extract.py) and by the single-node golden-fixture oracle in
+tests (SURVEY.md §5.2); textstats holds Column expressions. No module
+here imports pandas.
 """

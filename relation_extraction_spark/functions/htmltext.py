@@ -8,17 +8,18 @@ designed as exact inverses: the generator entity-escapes ``text`` into the
 page body; this extractor drops head/script/style/comments/tags, unescapes,
 and collapses whitespace.
 
-Pure core is ``extract_text_py`` (used by the golden oracle in tests); the
-Spark wrapper is an Arrow-vectorized scalar pandas UDF over pandas ``.str``
-regex ops — no per-row Python in the Spark path.
+``extract_text_py`` is the one implementation: the extraction stage calls
+it inside its ``mapInArrow`` page batches (operators/extract.py) and the
+golden oracle in tests calls it directly. ``extract_text`` is a column
+view of it, an Arrow UDF (no pandas) for timing the pass on its own.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StringType
 
 # Order matters: comments and container blocks go before generic tags.
@@ -41,10 +42,13 @@ _NAMED_ENTITIES = [
 ]
 
 
-def extract_text_py(html: str) -> str:
-    """Deterministic single-string extraction (golden-oracle core)."""
+def extract_text_py(html: str | bytes | None) -> str:
+    """Deterministic single-page extraction (golden-oracle core); bytes
+    are decoded as UTF-8, invalid sequences replaced."""
     if html is None:
         return ""
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", "replace")
     s = _RE_COMMENT.sub(" ", html)
     s = _RE_HEAD.sub(" ", s)
     s = _RE_SCRIPT.sub(" ", s)
@@ -56,25 +60,6 @@ def extract_text_py(html: str) -> str:
     return _RE_WS.sub(" ", s).strip()
 
 
-def _extract_series(html: pd.Series) -> pd.Series:
-    """Vectorized extraction over a pandas Series (one Arrow batch)."""
-    s = html.fillna("")
-    # binary column arrives as bytes — decode once, vectorized
-    if len(s) and isinstance(s.iloc[0], (bytes, bytearray)):
-        s = s.map(lambda b: b.decode("utf-8", "replace"))
-    s = s.astype("string")
-    s = s.str.replace(_RE_COMMENT, " ", regex=True)
-    s = s.str.replace(_RE_HEAD, " ", regex=True)
-    s = s.str.replace(_RE_SCRIPT, " ", regex=True)
-    s = s.str.replace(_RE_STYLE, " ", regex=True)
-    s = s.str.replace(_RE_TAG, " ", regex=True)
-    s = s.str.replace(_RE_NUMERIC_ENT, lambda m: chr(int(m.group(1))), regex=True)
-    for ent, ch in _NAMED_ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(_RE_WS, " ", regex=True).str.strip()
-    return s.astype(object)
-
-
-@pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    return _extract_series(html)
+@arrow_udf(StringType())
+def extract_text(html: pa.Array) -> pa.Array:
+    return pa.array([extract_text_py(h) for h in html.to_pylist()], pa.string())

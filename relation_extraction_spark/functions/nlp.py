@@ -9,8 +9,8 @@ lexicon + suffix/shape rules, fully deterministic.
 
 Execution model: everything here is pure Python over *compact tag strings*
 (one char per token) with precompiled regexes — the classic fast-chunking
-trick — and is invoked from Spark ONLY through Arrow-batched
-``mapInPandas``/``pandas_udf`` wrappers in operators/extract.py. The
+trick — and is invoked from Spark ONLY inside the Arrow-batched
+``mapInArrow`` page batches of operators/extract.py. The
 tokenize→tag→chunk→match passes for a sentence are fused into one Python
 call so token arrays and arcs never cross the JVM/Python wire
 (SURVEY.md §4 "pipelining").

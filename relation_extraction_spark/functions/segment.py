@@ -7,16 +7,18 @@ driver's ``documents`` fixture is punctuation-free word soup — FIXTURES.md
 §1) fall back to fixed-length word windows so downstream stages always see
 sentence-sized units.
 
-Core is pure-Python (golden oracle shares it); Spark wrapper is a pandas
-UDF returning ``array<string>`` which callers ``posexplode``.
+``segment_py`` is pure Python: the extraction stage calls it inside its
+``mapInArrow`` page batches (operators/extract.py) and the golden oracle
+shares it. ``segment`` is a column view of it, an Arrow UDF (no pandas)
+returning ``array<string>``, for timing the pass on its own.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, StringType
 
 WINDOW_WORDS = 12  # fallback window size for terminator-free text
@@ -74,6 +76,6 @@ def segment_py(text: str) -> list[str]:
     return sents
 
 
-@pandas_udf(ArrayType(StringType()))
-def segment(text: pd.Series) -> pd.Series:
-    return text.fillna("").map(segment_py)
+@arrow_udf(ArrayType(StringType()))
+def segment(text: pa.Array) -> pa.Array:
+    return pa.array([segment_py(t) for t in text.to_pylist()], pa.list_(pa.string()))

@@ -11,8 +11,8 @@ Stages (all DataFrame ops):
                              quadratic, in forms-per-entity);
 3. LSH similarity edges    — MinHash over char trigrams, banded blocking,
                              candidates verified with exact trigram
-                             Jaccard >= threshold (no false positives
-                             from banding);
+                             Jaccard >= threshold on int64 trigram codes
+                             (no false positives from banding);
 4. connected components    — large-star/small-star iterative joins;
 5. entities table          — canonical_id = component min, surface_forms
                              collected + array_sort'ed (deterministic).
@@ -20,19 +20,42 @@ Stages (all DataFrame ops):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .connected_components import connected_components
-from .dedup import hash32_expr, minhash_aggs, normalize_text_expr
+from .dedup import normalize_text_expr
+
+_MERSENNE31 = (1 << 31) - 1
+
+
+# A form's char trigrams are its 3-char windows once padded with two
+# leading spaces and one trailing one; linking's score (through
+# char_trigrams_expr) and the LSH blocking both cut them with these helpers.
+def _padded_starts(col: Column) -> tuple[Column, Column]:
+    padded = F.concat(F.lit("  "), col, F.lit(" "))
+    return padded, F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1)))
+
+
+def _window(padded: Column, start: Column) -> Column:
+    return padded.substr(start, F.lit(3))
 
 
 def char_trigrams_expr(col) -> "F.Column":
     """Distinct char trigrams of a (padded) string, as array<string> —
     pure Column expr: substring over a generated index sequence."""
-    padded = F.concat(F.lit("  "), col, F.lit(" "))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: padded.substr(i, F.lit(3))))
+    padded, starts = _padded_starts(col)
+    return F.array_distinct(F.transform(starts, lambda i: _window(padded, i)))
+
+
+# A trigram w's exact code: its three code points, 21 bits each (Spark's
+# ascii() returns the full code point, <= 0x10FFFF), so distinct trigrams
+# get distinct codes and Jaccard over codes is Jaccard over trigrams.
+_TRIGRAM_CODE = (
+    "shiftleft(cast(ascii(substr(w, 1, 1)) AS BIGINT), 42)"
+    " | shiftleft(cast(ascii(substr(w, 2, 1)) AS BIGINT), 21)"
+    " | ascii(substr(w, 3, 1))"
+)
 
 
 def surface_forms(mentions: DataFrame, triples: DataFrame | None = None) -> DataFrame:
@@ -68,6 +91,40 @@ def dictionary_edges(linked: DataFrame) -> DataFrame:
     )
 
 
+def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for k hash permutations (splitmix64).
+
+    Sized so (a * h32 + b) stays inside a signed 64-bit long for any
+    32-bit ``h32``: a < 2^30, b < 2^31 -> product < 2^62. This keeps the
+    whole MinHash pipeline in JVM long arithmetic (codegen-friendly);
+    the earlier decimal(38,0) formulation was interpreter-bound and
+    allocation-heavy under 32 concurrent tasks."""
+    out = []
+    x = seed & 0xFFFFFFFFFFFFFFFF
+    for _ in range(k):
+        pair = []
+        for _ in range(2):
+            x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
+            z = x
+            z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
+            z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
+            pair.append((z ^ (z >> 31)))
+        a, b = pair
+        out.append(((a % (1 << 30)) | 1, b % _MERSENNE31))
+    return out
+
+
+def minhash_aggs(h_col: str, k: int, seed: int = 42) -> list[Column]:
+    """k min-hash aggregate expressions over a 32-bit hash column —
+    pure long arithmetic, map-side partial min. Each aggregate is ONE
+    parsed SQL string: k Column-built expressions cost ~6 Python->JVM
+    round trips apiece in plan construction."""
+    return [
+        F.expr(f"min(pmod({a}L * {h_col} + {b}L, {_MERSENNE31}L)) AS mh_{i}")
+        for i, (a, b) in enumerate(_perm_params(k, seed))
+    ]
+
+
 def lsh_similarity_edges(
     forms: DataFrame,
     threshold: float = 0.7,
@@ -77,52 +134,46 @@ def lsh_similarity_edges(
 ) -> DataFrame:
     """MinHash-LSH blocked + exact-verified string-similarity edges.
 
-    Char-trigram MinHash signatures (k JVM aggregations — no UDF),
-    banded into ``bands`` buckets; only bucket collisions are joined and
-    each candidate pair is verified with exact trigram Jaccard.
+    One aggregate per form computes its k MinHash values over the hashed
+    char trigrams (JVM aggregations — no UDF) and collects the set of its
+    exact int64 trigram codes. Signatures are banded into ``bands``
+    buckets; only bucket collisions are joined, and each candidate pair
+    is verified with |A∩B| / (|A|+|B|−|A∩B|) over the code sets.
     """
     rows = k // bands
-    tri = forms.select(
-        "form_id", char_trigrams_expr(F.col("form")).alias("tris")
+    band_hashes = ", ".join(
+        f"xxhash64({b}, " + ", ".join(f"mh_{i}" for i in range(b * rows, (b + 1) * rows)) + ")"
+        for b in range(bands)
     )
-    sh = tri.select(
-        "form_id", F.explode("tris").alias("t")
-    ).withColumn("h", hash32_expr("t"))
-    sig = sh.groupBy("form_id").agg(*minhash_aggs("h", k, seed))
-    banded = sig.select(
-        "form_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[F.col(f"mh_{i}") for i in range(b * rows, (b + 1) * rows)],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bh"),
+    # linking's trigram windows; the hash and code are parsed SQL (as in
+    # minhash_aggs): a Column call is a Python->JVM round trip apiece
+    padded, starts = _padded_starts(F.col("form"))
+    sig = (
+        forms.select("form_id", padded.alias("p"), F.explode(starts).alias("i"))
+        .select("form_id", _window(F.col("p"), F.col("i")).alias("w"))
+        .selectExpr(
+            "form_id",
+            # the MinHash input: xxhash64 of the trigram folded to 32 bits
+            f"pmod(xxhash64(w), {1 << 32}) AS h",
+            f"{_TRIGRAM_CODE} AS c",
+        )
+        .groupBy("form_id")
+        .agg(*minhash_aggs("h", k, seed), F.expr("collect_set(c) AS codes"))
     )
-    a = banded.select(F.col("form_id").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("form_id").alias("id_b"), "band", "bh")
+    banded = sig.selectExpr("form_id", f"posexplode(array({band_hashes})) AS (band, bh)")
     cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        banded.selectExpr("form_id AS id_a", "band", "bh")
+        .join(banded.selectExpr("form_id AS id_b", "band", "bh"), ["band", "bh"])
+        .where("id_a < id_b")
         .select("id_a", "id_b")
         .distinct()
     )
-    ta = tri.select(F.col("form_id").alias("id_a"), F.col("tris").alias("ta"))
-    tb = tri.select(F.col("form_id").alias("id_b"), F.col("tris").alias("tb"))
+    inter = "size(array_intersect(ca, cb))"
     return (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn(
-            "jac",
-            F.size(F.array_intersect("ta", "tb"))
-            / F.size(F.array_union("ta", "tb")),
-        )
-        .filter(F.col("jac") >= threshold)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        cand.join(sig.selectExpr("form_id AS id_a", "codes AS ca"), "id_a")
+        .join(sig.selectExpr("form_id AS id_b", "codes AS cb"), "id_b")
+        .where(F.expr(f"{inter} / (size(ca) + size(cb) - {inter})") >= threshold)
+        .selectExpr("id_a AS src", "id_b AS dst")
     )
 
 
@@ -145,11 +196,11 @@ def canonicalize(
     entities: canonical_id long, surface_forms array<string> (sorted)
     mapping:  form string, form_id long, canonical_id long
     """
-    # forms feeds BOTH the LSH edge chain and the final mapping join;
-    # localCheckpoint materializes the (small: distinct normalized
-    # strings) universe once so the mentions+triples scan + distinct
-    # doesn't execute twice
-    forms = surface_forms(mentions, triples).localCheckpoint()
+    # forms feeds BOTH the LSH edge chain (executed by connected
+    # components, which reuses its exchange across the chain's branches)
+    # and the mapping join, which re-plans it from the committed tables
+    # and broadcasts the components as a LocalTableScan
+    forms = surface_forms(mentions, triples)
     edges = dictionary_edges(linked).unionByName(
         lsh_similarity_edges(forms, threshold=threshold)
     )

@@ -15,8 +15,10 @@ independent of partitioning.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -98,20 +100,18 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
                 parent[b] = a
             else:
                 parent[a] = b
-    rows = sorted((n, find(n)) for n in nodes)
-    # schema derived from the input edge column type so non-long node ids
-    # (strings, ints — the distributed path already handles them) work on
-    # the fast path too (round-1 advisor finding)
-    from pyspark.sql.types import StructField, StructType
-
-    node_type = edges.schema[0].dataType
-    schema = StructType(
-        [
-            StructField("node", node_type, False),
-            StructField("component", node_type, False),
-        ]
+    order = sorted(nodes)
+    # typed from the edge schema so string and int node ids work as
+    # well as longs; a pyarrow table plans as a JVM-local LocalTableScan
+    # (small and size-estimated, so the caller's join broadcasts it)
+    node_type = to_arrow_type(edges.schema[0].dataType)
+    table = pa.table(
+        {
+            "node": pa.array(order, node_type),
+            "component": pa.array([find(n) for n in order], node_type),
+        }
     )
-    return edges.sparkSession.createDataFrame(rows, schema)
+    return edges.sparkSession.createDataFrame(table)
 
 
 # safety bound on the large-star/small-star rounds; convergence takes

@@ -8,8 +8,6 @@ All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
                              (exact when ``max_shingle_freq=None``;
                              the default caps hot shingles — the
                              oracle mirrors the cap in SQL).
-- ``minhash_aggs`` / ``hash32_expr`` — the MinHash signature pieces
-                             behind canonicalization's LSH blocking.
 
 Scale notes: the pair-finder shuffles on a *blocking key* (the shingle)
 rather than cross-joining; hot shingles (stop phrases) are capped with a
@@ -21,8 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_MERSENNE31 = (1 << 31) - 1
 
 
 def normalize_text_expr(col: str | Column) -> Column:
@@ -240,44 +236,3 @@ def contamination_overlap(
         .groupBy(F.col("doc").alias(id_col))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-
-
-def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for k hash permutations (splitmix64).
-
-    Sized so (a * h32 + b) stays inside a signed 64-bit long for any
-    32-bit ``h32``: a < 2^30, b < 2^31 -> product < 2^62. This keeps the
-    whole MinHash pipeline in JVM long arithmetic (codegen-friendly);
-    the earlier decimal(38,0) formulation was interpreter-bound and
-    allocation-heavy under 32 concurrent tasks."""
-    out = []
-    x = seed & 0xFFFFFFFFFFFFFFFF
-    for _ in range(k):
-        pair = []
-        for _ in range(2):
-            x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-            z = x
-            z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-            z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-            pair.append((z ^ (z >> 31)))
-        a, b = pair
-        out.append(((a % (1 << 30)) | 1, b % _MERSENNE31))
-    return out
-
-
-def minhash_aggs(h_col: str, k: int, seed: int = 42) -> list[Column]:
-    """k min-hash aggregate expressions over a 32-bit hash column —
-    pure long arithmetic, map-side partial min, used by surface-form
-    canonicalization's LSH blocking. Each aggregate is ONE
-    parsed SQL string: k Column-built expressions cost ~6 Python->JVM
-    round trips apiece in plan construction."""
-    return [
-        F.expr(f"min(pmod({a}L * {h_col} + {b}L, {_MERSENNE31}L)) AS mh_{i}")
-        for i, (a, b) in enumerate(_perm_params(k, seed))
-    ]
-
-
-def hash32_expr(col: str | Column) -> Column:
-    """xxhash64 folded to an unsigned 32-bit value (as long)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(1 << 32))

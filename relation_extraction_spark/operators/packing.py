@@ -23,14 +23,10 @@ oracle and tests/test_mixture.py):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import to_arrow_type
 
 
 def pack_offsets_window(
@@ -112,21 +108,19 @@ def pack_offsets_scalable(
         s = row[stratum_col]
         base[(row["_pid"], s)] = run.get(s, 0)
         run[s] = run.get(s, 0) + row["_sub"]
-    # The stratum field keeps the INPUT's type (it was hardcoded string
-    # pre-round-5, which broke non-string strata at createDataFrame);
-    # the join is null-safe so the NULL stratum survives, matching
-    # pack_offsets_window's window-partition semantics.
+    # The stratum field keeps the INPUT's type (a hardcoded string type
+    # broke non-string strata), and the join is null-safe so the NULL
+    # stratum survives, matching pack_offsets_window's window-partition
+    # semantics. A pyarrow table plans as a JVM-local LocalTableScan:
+    # no Python worker scans it.
+    schema = pa.schema([
+        ("_bpid", pa.int32()),
+        ("_bstr", to_arrow_type(docs.schema[stratum_col].dataType)),
+        ("_base", pa.int64()),
+    ])
+    rows = [{"_bpid": p, "_bstr": s, "_base": o} for (p, s), o in base.items()]
     base_df = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            [(p, s, o) for (p, s), o in base.items()],
-            schema=StructType(
-                [
-                    StructField("_bpid", IntegerType()),
-                    StructField("_bstr", docs.schema[stratum_col].dataType),
-                    StructField("_base", LongType()),
-                ]
-            ),
-        )
+        docs.sparkSession.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
     )
     w = (
         Window.partitionBy("_pid", stratum_col)

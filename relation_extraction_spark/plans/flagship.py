@@ -1,8 +1,8 @@
 """The flagship query (SURVEY.md §7.2 minimum slice).
 
 "Top-20 (subj, pred, obj) triples by count across the corpus":
-scan -> lang filter -> segment (pandas UDF + posexplode) -> pattern
-extraction (one fused mapInPandas) -> hash agg -> top-k
+scan -> lang filter -> segment + pattern extraction (one mapInArrow
+crossing per page batch) -> explode -> hash agg -> top-k
 (TakeOrderedAndProject; no global sort).
 
 Fully deterministic: ties broken on (subj, pred, obj).

@@ -12,8 +12,9 @@ run (``flush_metrics``), so a killed run resumes to the same tables.
 Scale shape per stage (the 1000-executor story):
 - ingest:       embarrassingly parallel generate/scan; one window shuffle
                 for as-of recrawl dedup, partitioned by url hash.
-- extract:      ZERO shuffles — scan -> filter -> segment -> extract is
-                one pipelined stage per input split.
+- extract:      ZERO shuffles — scan -> one mapInArrow (html -> text ->
+                sentences -> triples/mentions) is one pipelined stage
+                per input split.
 - link:         one broadcast left join against the dictionary's top-1
                 per alias — the mentions never shuffle.
 - canonicalize: shuffles on band-hash and node id only; CC iterations
@@ -28,17 +29,13 @@ import time
 from dataclasses import dataclass
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.htmltext import extract_text
 from ..operators.asof import latest_per_key
 from ..operators.canonicalize import canonicalize, entities_from_mapping
-from ..operators.extract import (
-    extractions_from_sentences,
-    sentences_from_pages,
-    split_extractions,
-)
+from ..operators.extract import extractions_from_web_pages, split_extractions
 from ..operators.graph import cooccurrence_edges, materialize_edges
 from ..operators.linking import link_mentions
 from ..sources.corpus import PAGES_SCHEMA, synthetic_pages
@@ -83,7 +80,7 @@ class PipelineConfig:
     # file-level bucketing of big tables by url hash: keeps every
     # downstream scan splittable into >= n_buckets tasks (AQE's
     # coalescing would otherwise write few large single-row-group files
-    # and starve the Arrow-UDF stages), and co-locates url joins. On a
+    # and starve the mapInArrow extraction), and co-locates url joins. On a
     # real cluster this scales with executor count.
     n_buckets: int = 64
     # document-level pronoun coreference over the fused extraction frame
@@ -226,53 +223,33 @@ class Pipeline:
         if self.cfg.resume and self._done("sentences", "triples", "mentions"):
             return {"skipped": True}
         t0 = time.time()
-        pages = self.tables["web_pages"].read(self.spark)
-        # D1: extracted text MUST byte-match the stored text per url
-        # (BASELINE.json:L15). We extract from html and *use* the
-        # extraction downstream; the invariant count is a hard metric.
-        # The html->text pass runs ONCE: it lands in the committed
-        # sentences table (with a per-page invariant flag aggregated from
-        # the same pass), and triples/mentions are derived from that
-        # committed table — the expensive UDFs never re-execute.
-        from pyspark import StorageLevel
-
-        # eqNullSafe: a page whose stored text is NULL while extraction
-        # yields bytes (or vice versa) is an invariant VIOLATION, not a
-        # silently-skipped row (round-1 advisor finding). Mismatched
-        # pages are quarantined: counted in the metric, excluded from
-        # downstream extraction.
-        extracted = pages.select(
-            "url",
-            "lang",
-            extract_text("html").alias("text"),
-            extract_text("html").eqNullSafe(F.col("text")).alias("text_ok"),
+        # ONE Arrow crossing per page batch: html -> text (D1) ->
+        # sentences -> triples and mentions. D1: the extracted text MUST
+        # byte-match the stored text per url (BASELINE.json:L15); a page
+        # that fails (a NULL stored text included) comes back as one
+        # marker row (NULL sent_id) and nothing else, so it is
+        # quarantined and counted. No repartition: web_pages is
+        # committed as n_buckets url-bucketed files, so the scan's input
+        # splits are the bucket layout. The frame is persisted once and
+        # the three tables commit from it; the mismatch count is
+        # observed on the sentences write, not counted by its own job.
+        frame = extractions_from_web_pages(
+            self.tables["web_pages"].read(self.spark)
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        # NO repartition here: web_pages is already committed as
-        # n_buckets url-bucketed files, so the scan's input splits ARE
-        # the bucket layout and sentences inherit it task-per-file —
-        # the old repartition shuffled the biggest intermediate table a
-        # second time on a key it was already bucketed by (round-2 plan
-        # audit).
-        sents = sentences_from_pages(
-            extracted.filter(F.col("text_ok") & F.col("text").isNotNull()),
-            lang="en",
+        audit = Observation("extract")
+        sents = (
+            frame.observe(audit, F.count_if(F.col("sent_id").isNull()).alias("n"))
+            .filter(F.col("sent_id").isNotNull())
+            .select("url", "sent_id", "sentence")
         )
         info = {"sentences": self._commit("extract", "sentences", sents)}
-        n_mismatch = extracted.filter(~F.col("text_ok")).count()
-        extracted.unpersist()
-        committed_sents = self.tables["sentences"].read(self.spark)
-        # ONE fused mapInPandas pass emits triples AND mentions (round-1
-        # judge finding: two separate passes re-scanned sentences and
-        # re-ran tokenize/tag). The fused result is persisted so the
-        # second table commit reads the cache, not the Python stage.
-        fused = extractions_from_sentences(committed_sents).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        n_mismatch = audit.get["n"]
+        fused = frame.filter(F.col("sent_id").isNotNull())
         triples, mentions = split_extractions(fused)
         if self.cfg.coref:
-            # same persisted fused frame — coref re-tokenizes nothing;
-            # one extra url-keyed shuffle. The committed triples table
-            # gains a `resolved` column (downstream stages select their
+            # same persisted frame — coref re-tokenizes nothing; one
+            # extra url-keyed shuffle. The committed triples table gains
+            # a `resolved` column (downstream stages select their
             # columns by name, so the wider schema is inert to them).
             from ..operators.coref import coref_triples_from_fused
 
@@ -285,7 +262,7 @@ class Pipeline:
             )
         info["mentions"] = self._commit("extract", "mentions", mentions, t0, **metrics)
         info["wall_ms"] = _ms_since(t0)
-        fused.unpersist()
+        frame.unpersist()
         info["n_mismatch"] = n_mismatch
         return info
 

@@ -1598,19 +1598,11 @@ def q_kg_triples(spark, sf):
 
 @q("kg_detect_mentions")
 def q_kg_mentions(spark, sf):
-    # PRODUCTION path: the fused triples+mentions pass (one tokenize/tag
-    # per sentence) with the triples side projected away JVM-side.
-    from ..operators.extract import (
-        extractions_from_sentences,
-        sentences_from_pages,
-        split_extractions,
-    )
+    # PRODUCTION path: the extraction frame (one crossing per page batch)
+    # with the triples side projected away JVM-side.
+    from ..operators.extract import extractions_from_pages, split_extractions
 
-    fused = extractions_from_sentences(
-        sentences_from_pages(_fixture_pages(spark, sf), lang="en")
-    )
-    _triples, mentions = split_extractions(fused)
-    return mentions
+    return split_extractions(extractions_from_pages(_fixture_pages(spark, sf)))[1]
 
 
 @q("kg_segment_sentences")
@@ -1627,15 +1619,13 @@ def q_kg_sentences(spark, sf):
 
 
 def _fixture_fused(spark, sf):
-    """ONE fused extraction pass over the fixture corpus, lazily
+    """The extraction frame over the fixture corpus, lazily
     checkpointed so composite queries (link -> canonicalize ->
     materialize) never re-run the Python compiler per branch — the
-    standalone mirror of the pipeline's persisted fused frame."""
-    from ..operators.extract import extractions_from_sentences, sentences_from_pages
+    standalone mirror of the pipeline's persisted frame."""
+    from ..operators.extract import extractions_from_pages
 
-    return extractions_from_sentences(
-        sentences_from_pages(_fixture_pages(spark, sf), lang="en")
-    ).localCheckpoint(eager=False)
+    return extractions_from_pages(_fixture_pages(spark, sf)).localCheckpoint(eager=False)
 
 
 def _fixture_mentions(spark, sf):
@@ -1675,12 +1665,9 @@ def q_kg_coref(spark, sf):
     # triples resolve to a gender-compatible subject-position antecedent
     # or drop; everything else passes through with resolved = false.
     from ..operators.coref import coref_triples_from_fused
-    from ..operators.extract import extractions_from_sentences, sentences_from_pages
+    from ..operators.extract import extractions_from_pages
 
-    fused = extractions_from_sentences(
-        sentences_from_pages(_fixture_pages(spark, sf), lang="en")
-    )
-    return coref_triples_from_fused(fused)
+    return coref_triples_from_fused(extractions_from_pages(_fixture_pages(spark, sf)))
 
 
 @q("kg_materialize_edges")

@@ -3,14 +3,14 @@
 Scale notes (designed for a 1000-executor cluster, tested on local[N]):
 
 - AQE on (skew-join split + shuffle-partition coalescing at runtime).
-- Arrow on for every JVM<->Python crossing; pandas-UDF batch size is
+- Arrow on for every JVM<->Python crossing; the Arrow batch size is
   capped so a batch of long web pages fits executor memory.
 - ``spark.sql.shuffle.partitions`` defaults to 2x local cores here; on a
   real cluster it is set per-job from input size (see plans/pipeline.py).
 - Session timezone pinned to UTC so timestamps compare bit-stable against
   the DuckDB oracle and across clusters.
-- Python worker reuse on: the NLP UDF stages (functions/nlp.py) amortize
-  lexicon/regex setup across batches via module-level state.
+- Python worker reuse on: the extraction crossing (functions/nlp.py)
+  amortizes lexicon/regex setup and caches across batches.
 """
 
 from __future__ import annotations

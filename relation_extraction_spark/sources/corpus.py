@@ -24,17 +24,20 @@ import random
 from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 #: The binding input-table shape (BASELINE.json input_hint). Readers of a
 #: web_pages parquet directory should pass this explicitly: schema
 #: inference on a cold session costs ~2.3 s of driver-side fixed time
 #: (footer sampling + first-use datasource warmup, measured round 4) —
 #: a pure Amdahl term the pipeline pays at EVERY parallelism level.
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+_PAGES_ARROW = pa.schema([
+    ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
+    ("html", pa.binary()), ("text", pa.string()), ("lang", pa.string()),
+])
+PAGES_SCHEMA = from_arrow_schema(_PAGES_ARROW)
 
 _ENTITIES = [
     "Spark", "Flink", "Trino", "Presto", "Hive", "Iceberg", "Parquet",
@@ -180,24 +183,18 @@ def synthetic_pages(
     sent_range: tuple[int, int] = (3, 10),
     unique_vocab: bool = False,
 ) -> DataFrame:
-    """Distributed generator: ``spark.range(n)`` -> mapInPandas -> pages."""
+    """Distributed generator: ``spark.range(n)`` -> mapInArrow -> pages."""
     parts = parts or max(spark.sparkContext.defaultParallelism, 4)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for i in pdf["id"].tolist():
+            for i in batch.column("id").to_pylist():
                 rows.append(
                     make_page(seed, i, skew, lang_en, sent_range, unique_vocab)
                 )
                 if dup_frac > 0 and (i * 2654435761 % 10_000) < dup_frac * 10_000:
                     rows.append(make_stale_recrawl(seed, i, skew, lang_en, sent_range))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "html", "text", "lang"],
-            )
+            yield pa.RecordBatch.from_pylist(rows, schema=_PAGES_ARROW)
 
-    return (
-        spark.range(0, n, 1, parts)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+    return spark.range(0, n, 1, parts).mapInArrow(gen, schema=PAGES_SCHEMA)

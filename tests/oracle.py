@@ -8,7 +8,7 @@ triples/mentions. It deliberately shares the *leaf* functions
 (extract_text_py, segment_py, extract_from_sentence) with the Spark path
 — what it independently re-implements is everything Spark distributes:
 the recrawl dedup, the explode/sent_id bookkeeping, and batching — so a
-bug in mapInPandas batching, posexplode indexing, window dedup, or
+bug in mapInArrow batching, sent_id bookkeeping, window dedup, or
 partitioning shows up as a P/R miss (BASELINE.json:L2 P/R>=0.95).
 """
 

@@ -10,8 +10,7 @@ from relation_extraction_spark.operators.asof import latest_per_key
 from relation_extraction_spark.operators.extract import (
     MENTION_COLS,
     TRIPLE_COLS,
-    extractions_from_sentences,
-    sentences_from_pages,
+    extractions_from_web_pages,
     split_extractions,
 )
 from relation_extraction_spark.sources.corpus import synthetic_pages
@@ -21,15 +20,12 @@ from .oracle import golden_mentions, golden_pages, golden_triples
 N = 400
 
 
-def _pipeline_sentences(spark):
+def _extract(spark):
+    """(triples, mentions) from the extraction crossing the pipeline
+    commits: D1-checked, over the deduplicated pages with their html."""
     raw = synthetic_pages(spark, N, seed=42, skew=0.15, dup_frac=0.08)
     pages = latest_per_key(raw, ["url"], "warc_ts")
-    return sentences_from_pages(pages, lang="en")
-
-
-def _extract(sents):
-    """(triples, mentions) from the pipeline's fused extraction pass."""
-    return split_extractions(extractions_from_sentences(sents))
+    return split_extractions(extractions_from_web_pages(pages, lang="en"))
 
 
 def _pr(pred: set, gold: set) -> tuple[float, float]:
@@ -40,7 +36,7 @@ def _pr(pred: set, gold: set) -> tuple[float, float]:
 
 
 def test_triple_precision_recall(spark):
-    triples, _ = _extract(_pipeline_sentences(spark))
+    triples, _ = _extract(spark)
     assert triples.schema == StructType.fromDDL(TRIPLE_COLS)
     pred = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in triples.collect()}
     gold = golden_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
@@ -53,7 +49,7 @@ def test_triple_precision_recall(spark):
 
 
 def test_mention_precision_recall(spark):
-    _, mentions = _extract(_pipeline_sentences(spark))
+    _, mentions = _extract(spark)
     assert mentions.schema == StructType.fromDDL(MENTION_COLS)
     pred = {(r.url, r.sent_id, r.mention, r.start, r.end) for r in mentions.collect()}
     gold = golden_mentions(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
@@ -66,7 +62,7 @@ def test_triple_pr_harness(spark):
     computation and reports P/R = 1.0 vs the golden oracle."""
     from relation_extraction_spark.evaluation import triple_pr
 
-    pred, _ = _extract(_pipeline_sentences(spark))
+    pred, _ = _extract(spark)
     gold_rows = sorted(
         golden_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     )
@@ -81,7 +77,7 @@ def test_triple_pr_harness(spark):
 
 
 def test_extraction_deterministic_across_runs(spark):
-    triples, _ = _extract(_pipeline_sentences(spark))
+    triples, _ = _extract(spark)
     a = sorted(map(tuple, triples.collect()))
     b = sorted(map(tuple, triples.collect()))
     assert a == b
@@ -95,7 +91,7 @@ def test_triple_pr_vs_independent_oracle(spark):
     evidence about extraction SEMANTICS, not just distribution."""
     from .oracle_independent import independent_triples
 
-    triples, _ = _extract(_pipeline_sentences(spark))
+    triples, _ = _extract(spark)
     pred = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in triples.collect()}
     gold = independent_triples(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
@@ -106,7 +102,7 @@ def test_triple_pr_vs_independent_oracle(spark):
 def test_mention_pr_vs_independent_oracle(spark):
     from .oracle_independent import independent_mentions
 
-    _, mentions = _extract(_pipeline_sentences(spark))
+    _, mentions = _extract(spark)
     pred = {(r.url, r.sent_id, r.mention, r.start, r.end) for r in mentions.collect()}
     gold = independent_mentions(golden_pages(N, seed=42, skew=0.15, dup_frac=0.08))
     p, r = _pr(pred, gold)
@@ -137,3 +133,25 @@ def test_independent_oracle_diverges_on_injected_bug():
     for fn in ("extract_from_sentence", "detect_mentions(", "segment_py", "tag_tokens"):
         assert fn not in src, fn
 
+
+
+def test_extract_path_never_imports_pandas():
+    """The modules a Python worker loads for the extraction crossing and
+    the page generator leave pandas unimported (``import pandas`` costs
+    a fresh worker about half a second)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import relation_extraction_spark.operators.extract\n"
+        "import relation_extraction_spark.sources.corpus\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pandas'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

@@ -302,3 +302,43 @@ def test_gexf_export_string_node_ids(spark, tmp_path):
     ns = {"g": "http://gexf.net/1.2"}
     labels = {n.get("label") for n in root.findall(".//g:node", ns)}
     assert labels == {"alpha form", "beta", "gamma"}
+
+
+def test_lsh_verification_is_exact_at_the_threshold(spark):
+    """Candidates are verified on exact trigram codes: a pair at exactly
+    7/10 is kept, one at 16/23 (just below 0.7) is dropped, and a pair
+    whose forms differ only in a non-BMP character keeps its true
+    Jaccard. Every candidate is checked against pure Python."""
+    from fractions import Fraction
+
+    def trigrams(form):
+        padded = "  " + form + " "
+        return {padded[i : i + 3] for i in range(max(len(padded) - 2, 1))}
+
+    def jaccard(a, b):
+        ta, tb = trigrams(a), trigrams(b)
+        return Fraction(len(ta & tb), len(ta | tb))
+
+    kept = frozenset(("broadcast joining", "broadcast joins"))
+    dropped = frozenset(("snapshot manifestes", "snapshot manifesxt"))
+    astral = frozenset(("engine \U0001F600 x", "engine \U0001F601 x"))
+    assert jaccard(*kept) == Fraction(7, 10)
+    assert jaccard(*dropped) == Fraction(16, 23)
+    assert jaccard(*astral) < Fraction(7, 10)
+    forms = sorted(kept | dropped | astral)
+    df = spark.createDataFrame([(f,) for f in forms], "form string").select(
+        "form", F.xxhash64("form").alias("form_id")
+    )
+    by_id = {r.form_id: r.form for r in df.collect()}
+
+    def edges(threshold):
+        return {
+            frozenset((by_id[r.src], by_id[r.dst]))
+            for r in lsh_similarity_edges(df, threshold=threshold).collect()
+        }
+
+    candidates = edges(0.0)
+    assert {kept, dropped, astral} <= candidates
+    got = edges(0.7)
+    assert got == {p for p in candidates if jaccard(*p) >= Fraction(7, 10)}
+    assert kept in got and dropped not in got and astral not in got

@@ -263,3 +263,46 @@ def test_stage_outputs_flow(spark, uninterrupted):
     bad_src = edges.join(ents, edges.src_id == ents.x, "left_anti").count()
     bad_dst = edges.join(ents, edges.dst_id == ents.x, "left_anti").count()
     assert bad_src == 0 and bad_dst == 0
+
+
+def test_extract_quarantines_text_mismatches(spark, tmp_path):
+    """D1 quarantine: a page whose stored ``text`` differs from
+    ``extract_text_py(html)``, and a page whose ``text`` is NULL, are each
+    counted once in ``text_invariant_mismatches`` and add no sentences,
+    triples or mentions; every other page extracts as usual."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from relation_extraction_spark.functions.segment import segment_py
+    from relation_extraction_spark.sources.corpus import make_page
+
+    pages = [make_page(42, i, skew=0.2, lang_en=1.0) for i in range(6)]
+    pages[1]["text"] += " Tampered text."
+    pages[2]["text"] = None
+    bad = {pages[1]["url"], pages[2]["url"]}
+    schema = pa.schema([
+        ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
+        ("html", pa.binary()), ("text", pa.string()), ("lang", pa.string()),
+    ])
+    src = str(tmp_path / "pages")
+    os.makedirs(src)
+    pq.write_table(pa.Table.from_pylist(pages, schema=schema), f"{src}/part-0.parquet")
+    out = str(tmp_path / "out")
+    info = run_pipeline(
+        spark, PipelineConfig(out=out, input_parquet=src, n_buckets=2, run_id="q"),
+        ["ingest", "extract"],
+    )
+    assert info["extract"]["n_mismatch"] == 2
+    metrics = {
+        r.metric: r.value for r in SnapshotTable(out, "metrics").read(spark).collect()
+    }
+    assert metrics["text_invariant_mismatches"] == 2.0
+    for t in ["sentences", "triples", "mentions"]:
+        urls = {r.url for r in SnapshotTable(out, t).read(spark).select("url").collect()}
+        assert not urls & bad, t
+    want = sorted(
+        (p["url"], i, s)
+        for p in pages if p["url"] not in bad
+        for i, s in enumerate(segment_py(p["text"]))
+    )
+    assert _table_rows(spark, out, "sentences") == want

@@ -97,6 +97,29 @@ def test_extract_never_reads_unused_columns(spark):
     assert "source" not in read_schema and "n_chars" not in read_schema
 
 
+def test_library_extraction_views_skip_html(spark, tmp_path):
+    """The library views read no ``html`` and push their ``lang`` filter
+    into the scan; only the pipeline's D1-checked crossing reads html."""
+    from relation_extraction_spark.operators.extract import (
+        extractions_from_pages,
+        extractions_from_web_pages,
+        sentences_from_pages,
+        triples_from_pages,
+    )
+
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [("u", b"<p>hi</p>", "hi", "en")], "url string, html binary, text string, lang string"
+    ).write.parquet(path)
+    pages = spark.read.parquet(path)
+    for view in (sentences_from_pages, extractions_from_pages, triples_from_pages):
+        p = plan_of(view(pages))
+        assert "html" not in p.split("ReadSchema:")[1].splitlines()[0], p
+        assert "lang" in p.split("PushedFilters:")[1].splitlines()[0], p
+    p = plan_of(extractions_from_web_pages(pages))
+    assert "html" in p.split("ReadSchema:")[1].splitlines()[0], p
+
+
 def test_topk_uses_take_ordered(spark):
     """orderBy + limit must plan as TakeOrderedAndProject (per-partition
     heap + single merge), never a global sort."""
@@ -132,19 +155,48 @@ def test_aqe_and_arrow_enabled(spark):
 
 
 def test_pandas_udfs_are_arrow_vectorized_not_per_row(spark):
-    """BASELINE.json:L15 'no per-row Python': the NLP UDFs must plan as
-    ArrowEvalPython / MapInPandas, never BatchEvalPython (pickled
+    """BASELINE.json:L15 'no per-row Python': extraction crosses into
+    Python once, as an Arrow-batched MapInArrow — no pandas crossing
+    (ArrowEvalPython / MapInPandas) and never BatchEvalPython (pickled
     row-at-a-time)."""
-    from relation_extraction_spark.functions.htmltext import extract_text
-    from relation_extraction_spark.operators.extract import triples_from_pages
+    from relation_extraction_spark.operators.extract import (
+        extractions_from_pages,
+        extractions_from_web_pages,
+        triples_from_pages,
+    )
 
     pages = spark.createDataFrame(
         [("u", b"<p>hi</p>", "hi", "en")], "url string, html binary, text string, lang string"
     )
-    p1 = plan_of(pages.select(extract_text("html")), "simple")
-    assert "ArrowEvalPython" in p1 and "BatchEvalPython" not in p1
-    p2 = plan_of(triples_from_pages(pages), "simple")
-    assert "MapInPandas" in p2 and "BatchEvalPython" not in p2
+    for df in (
+        triples_from_pages(pages),
+        extractions_from_pages(pages),
+        extractions_from_web_pages(pages),
+    ):
+        p = plan_of(df, "simple")
+        assert p.count("MapInArrow") == 1, p
+        for node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+            assert node not in p, p
+
+
+def test_canonicalize_mapping_broadcasts_local_components(spark):
+    """The driver union-find hands its (node, component) rows back as a
+    JVM-local table: the mapping join broadcasts a LocalTableScan, and no
+    Python-fed RDD scan (ExistingRDD) is left in the mapping plan."""
+    import pyarrow as pa
+
+    from relation_extraction_spark.operators.canonicalize import canonicalize
+
+    # JVM-local input too, so any ExistingRDD would be canonicalize's own
+    mentions = spark.createDataFrame(
+        pa.table({"mention": ["Spark engine", "Spark engines", "Flink"]})
+    )
+    linked = mentions.withColumn("entity_id", F.lit(None).cast("long"))
+    _entities, mapping = canonicalize(mentions, linked)
+    p = plan_of(mapping, "simple")
+    assert "ExistingRDD" not in p, p
+    assert "BroadcastExchange" in p and "LocalTableScan" in p, p
+    assert "SortMergeJoin" not in p, p
 
 
 def test_ingest_asof_dedup_single_shuffle(spark):
