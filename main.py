@@ -45,11 +45,6 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument(
-        "--coref",
-        action="store_true",
-        help="resolve pronoun-subject triples document-wide (operators/coref.py)",
-    )
     args = ap.parse_args()
     # Validate before paying Spark session startup.
     if args.job == "mixture" and not args.input_parquet:
@@ -103,7 +98,6 @@ def main() -> None:
         resume=not args.no_resume,
         run_id=args.run_id,
         input_parquet=args.input_parquet,
-        coref=args.coref,
     )
     t0 = time.time()
     info = run_pipeline(spark, cfg, stages)

@@ -16,9 +16,9 @@ transform:
                    pure-column text-analysis expressions.
 - ``operators``  — distributed operators composed from DataFrame
                    primitives: entity linking, LSH canonicalization,
-                   coreference, connected components, edge
-                   materialization, dedup/decontamination, sequence
-                   packing, salted skew joins/aggs, as-of dedup.
+                   connected components, edge materialization,
+                   dedup/decontamination, sequence packing, salted
+                   skew joins/aggs, as-of dedup.
 - ``plans``      — the stage DAG (ingest→extract→link→canonicalize→
                    materialize→metrics) with checkpoint/resume, the
                    mixture-cleaning job, and the oracle-checked query

@@ -267,10 +267,10 @@ def _reduce(tags: str):
     return "".join(out), spans
 
 
-#: possessive pronoun determiners — contentful (they point at an
-#: antecedent), unlike articles; kept in SUBJECT surfaces so the coref
-#: stage (operators/coref.py) can resolve "His engine" -> "Smith's
-#: engine". Objects and mentions stay determiner-free: they feed entity
+#: possessive pronoun determiners, kept in SUBJECT surfaces ("His
+#: engine") because the golden fixtures and the pinned triples digests
+#: were built with them; whether they belong there is an open semantic
+#: choice. Objects and mentions stay determiner-free: they feed entity
 #: linking/canonicalization, where an unresolved "his" is pure noise.
 POSS_DETS = frozenset({"his", "her", "its", "their"})
 

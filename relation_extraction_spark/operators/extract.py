@@ -113,20 +113,9 @@ def _map_pages(
     )
 
 
-def _text_pages(pages: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """``pages`` with ``id_col`` as ``url`` and ``text_col`` as ``text``."""
-    lang = ["lang"] if "lang" in pages.columns else []
-    return pages.select(F.col(id_col).alias("url"), F.col(text_col).alias("text"), *lang)
-
-
-def sentences_from_pages(
-    pages: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
-    lang: str | None = "en",
-) -> DataFrame:
+def sentences_from_pages(pages: DataFrame, lang: str | None = "en") -> DataFrame:
     """D2: one row per (url, sent_id, sentence) of the pages' text."""
-    return _map_pages(_text_pages(pages, text_col, id_col), _SENTENCES, lang)
+    return _map_pages(pages, _SENTENCES, lang)
 
 
 def extractions_from_pages(pages: DataFrame, lang: str | None = "en") -> DataFrame:
@@ -177,10 +166,7 @@ def split_extractions(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     return triples, mentions
 
 
-def triples_from_pages(
-    pages: DataFrame, text_col: str = "text", id_col: str = "url", lang: str | None = "en"
-) -> DataFrame:
+def triples_from_pages(pages: DataFrame, lang: str | None = "en") -> DataFrame:
     """Library entry point: pages -> extracted triples (SURVEY.md §3.2),
     the triples side of the extraction frame."""
-    text_pages = _text_pages(pages, text_col, id_col)
-    return split_extractions(extractions_from_pages(text_pages, lang))[0]
+    return split_extractions(extractions_from_pages(pages, lang))[0]

@@ -83,12 +83,6 @@ class PipelineConfig:
     # and starve the mapInArrow extraction), and co-locates url joins. On a
     # real cluster this scales with executor count.
     n_buckets: int = 64
-    # document-level pronoun coreference over the fused extraction frame
-    # (operators/coref.py): pronoun-subject triples are rewritten to a
-    # gender-compatible subject-position antecedent (conf x0.9, resolved
-    # flag) or dropped; non-pronoun triples pass through untouched, so
-    # golden P/R over non-pronoun fixtures is unchanged by construction.
-    coref: bool = False
     resume: bool = True
     run_id: str = "run-0"
     input_parquet: str | None = None  # pre-generated corpus (bench path)
@@ -246,21 +240,10 @@ class Pipeline:
         n_mismatch = audit.get["n"]
         fused = frame.filter(F.col("sent_id").isNotNull())
         triples, mentions = split_extractions(fused)
-        if self.cfg.coref:
-            # same persisted frame — coref re-tokenizes nothing; one
-            # extra url-keyed shuffle. The committed triples table gains
-            # a `resolved` column (downstream stages select their
-            # columns by name, so the wider schema is inert to them).
-            from ..operators.coref import coref_triples_from_fused
-
-            triples = coref_triples_from_fused(fused)
         info["triples"] = self._commit("extract", "triples", triples)
-        metrics = {"text_invariant_mismatches": n_mismatch}
-        if self.cfg.coref:
-            metrics["coref_resolved_triples"] = info["n_resolved"] = (
-                self.tables["triples"].read(self.spark).filter("resolved").count()
-            )
-        info["mentions"] = self._commit("extract", "mentions", mentions, t0, **metrics)
+        info["mentions"] = self._commit(
+            "extract", "mentions", mentions, t0, text_invariant_mismatches=n_mismatch
+        )
         info["wall_ms"] = _ms_since(t0)
         frame.unpersist()
         info["n_mismatch"] = n_mismatch

@@ -1574,7 +1574,7 @@ def q_sample_stratified(spark, sf):
 
 
 # ------------------------------------------------ KG extraction stages
-# (non-SQL-expressible: pattern extraction is the pandas-UDF compiler;
+# (non-SQL-expressible: pattern extraction is the mapInArrow compiler;
 # driver records rows-only checks — SURVEY.md §2 note)
 
 
@@ -1658,18 +1658,6 @@ def q_kg_canonicalize(spark, sf):
     )
 
 
-@q("kg_coref_triples")  # rows-only: pattern compiler + grouped-map state
-def q_kg_coref(spark, sf):
-    # Document-level pronoun coreference over the FUSED extraction frame
-    # (no re-tokenization; one url-keyed shuffle). Pronoun-subject
-    # triples resolve to a gender-compatible subject-position antecedent
-    # or drop; everything else passes through with resolved = false.
-    from ..operators.coref import coref_triples_from_fused
-    from ..operators.extract import extractions_from_pages
-
-    return coref_triples_from_fused(extractions_from_pages(_fixture_pages(spark, sf)))
-
-
 @q("kg_materialize_edges")
 def q_kg_edges(spark, sf):
     from ..operators.canonicalize import canonicalize
@@ -1684,7 +1672,7 @@ def q_kg_edges(spark, sf):
     return materialize_edges(triples, mapping)
 
 
-# ---------------------------------------------- §2 gap-fill: A5/A6/A7/D9/O4
+# ---------------------------------------------- §2 gap-fill: A5/A6/A7/O4
 
 
 @q("agg_approx_distinct")  # rows-only: HLL sketches differ across engines
@@ -1728,47 +1716,6 @@ def q_grouping_sets(spark, sf):
     return spark.sql(
         "SELECT lang, source, count(*) AS n FROM gs_documents "
         "GROUP BY GROUPING SETS ((lang), (source), ())"
-    )
-
-
-@q(
-    "grouped_map_user_stats",
-    "WITH flagged AS (SELECT user_id, ts, value, CASE WHEN epoch(ts) - "
-    "epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) "
-    "> 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) "
-    "IS NULL THEN 1 ELSE 0 END AS new_s, event_id FROM events) "
-    "SELECT user_id, count(*) AS n_events, CAST(sum(new_s) AS BIGINT) AS "
-    "n_sessions, round(sum(value), 2) AS total_value FROM flagged "
-    "GROUP BY user_id",
-)
-def q_grouped_map(spark, sf):
-    # D9 — applyInPandas grouped-map: whole-group pandas pass per user
-    # (the Spark shape for any per-entity imperative pass; sessionization
-    # here is deliberately re-computed imperatively so the DuckDB
-    # window-SQL oracle checks the grouped-map plumbing end-to-end).
-    import pandas as pd
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        gaps = pdf["ts"].diff().dt.total_seconds()
-        n_sessions = int((gaps.isna() | (gaps > 1800)).sum())
-        return pd.DataFrame(
-            {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "n_events": [len(pdf)],
-                "n_sessions": [n_sessions],
-                "total_value": [round(float(pdf["value"].sum()), 2)],
-            }
-        )
-
-    return (
-        T(spark, sf, "events")
-        .select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandas(
-            stats,
-            "user_id long, n_events long, n_sessions long, total_value double",
-        )
     )
 
 

@@ -11,7 +11,6 @@ from relation_extraction_spark.plans.queries import QUERIES
 ROWS_ONLY = {
     "agg_approx_distinct",
     "kg_canonicalize_entities",
-    "kg_coref_triples",
     "kg_detect_mentions",
     "kg_extract_triples",
     "kg_link_mentions",

@@ -136,18 +136,20 @@ def test_independent_oracle_diverges_on_injected_bug():
 
 
 def test_extract_path_never_imports_pandas():
-    """The modules a Python worker loads for the extraction crossing and
-    the page generator leave pandas unimported (``import pandas`` costs
-    a fresh worker about half a second)."""
+    """Every module of the package, the extraction crossing and the page
+    generator a Python worker loads among them, leaves pandas
+    unimported: no stage plans a pandas crossing (``import pandas``
+    costs a fresh worker about half a second)."""
     import os
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import sys\n"
-        "import relation_extraction_spark.operators.extract\n"
-        "import relation_extraction_spark.sources.corpus\n"
+        "import importlib, pkgutil, sys\n"
+        "import relation_extraction_spark as pkg\n"
+        "for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + '.'):\n"
+        "    importlib.import_module(m.name)\n"
         "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pandas'))\n"
     )
     out = subprocess.run(

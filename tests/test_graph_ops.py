@@ -254,56 +254,6 @@ def test_cc_string_node_ids_both_paths(spark):
     }
 
 
-def test_gexf_export_roundtrip(spark, tmp_path):
-    """edges -> GEXF file: well-formed XML, top-weight capping, labels."""
-    import xml.etree.ElementTree as ET
-
-    from relation_extraction_spark.sources.gexf import export_gexf
-
-    edges = spark.createDataFrame(
-        [(1, 2, "powers", 5), (2, 3, "holds", 3), (3, 1, "feeds", 1)],
-        "src_id long, dst_id long, pred string, weight long",
-    )
-    entities = spark.createDataFrame(
-        [(1, ["spark engine"]), (2, ["the <table>"]), (3, ["rows"])],
-        "canonical_id long, surface_forms array<string>",
-    )
-    path = str(tmp_path / "g.gexf")
-    xml = export_gexf(edges, entities, path, max_edges=2)
-    root = ET.parse(path).getroot()  # parses => well-formed despite <>&
-    ns = {"g": "http://gexf.net/1.2"}
-    nodes = root.findall(".//g:node", ns)
-    edgs = root.findall(".//g:edge", ns)
-    assert len(edgs) == 2  # capped to the two heaviest
-    assert {e.get("label") for e in edgs} == {"powers", "holds"}
-    assert {n.get("label") for n in nodes} == {"spark engine", "the <table>", "rows"}
-    assert xml.startswith("<?xml")
-
-
-def test_gexf_export_string_node_ids(spark, tmp_path):
-    """String node ids (first-class in connected_components) must label
-    correctly: the lookup frame's id type is derived from the edges
-    schema, not hardcoded long (round-2 advisor crash)."""
-    import xml.etree.ElementTree as ET
-
-    from relation_extraction_spark.sources.gexf import export_gexf
-
-    edges = spark.createDataFrame(
-        [("a", "b", "links", 4), ("b", "c", "cites", 2)],
-        "src_id string, dst_id string, pred string, weight long",
-    )
-    entities = spark.createDataFrame(
-        [("a", ["alpha form"]), ("b", ["beta"]), ("c", ["gamma"])],
-        "canonical_id string, surface_forms array<string>",
-    )
-    path = str(tmp_path / "gs.gexf")
-    export_gexf(edges, entities, path, max_edges=10)
-    root = ET.parse(path).getroot()
-    ns = {"g": "http://gexf.net/1.2"}
-    labels = {n.get("label") for n in root.findall(".//g:node", ns)}
-    assert labels == {"alpha form", "beta", "gamma"}
-
-
 def test_lsh_verification_is_exact_at_the_threshold(spark):
     """Candidates are verified on exact trigram codes: a pair at exactly
     7/10 is kept, one at 16/23 (just below 0.7) is dropped, and a pair
