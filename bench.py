@@ -86,7 +86,6 @@ def _run() -> dict:
         "join_broadcast",
         "agg_hash_groupby",
         "window_running_sum",
-        "text_quality_score",
     ]
     for name in bench_queries:
         fn, _sql = QUERIES[name]

@@ -17,8 +17,8 @@ transform:
 - ``operators``  — distributed operators composed from DataFrame
                    primitives: entity linking, LSH canonicalization,
                    connected components, edge materialization,
-                   dedup/decontamination, sequence packing, salted
-                   skew joins/aggs, as-of dedup.
+                   dedup/decontamination, sequence packing, as-of
+                   dedup.
 - ``plans``      — the stage DAG (ingest→extract→link→canonicalize→
                    materialize→metrics) with checkpoint/resume, the
                    mixture-cleaning job, and the oracle-checked query

@@ -1,5 +1,6 @@
-"""Text analysis for training-data pipelines — lang-ID, quality scoring,
-token counting, document fingerprinting.
+"""Text analysis for training-data pipelines — the quality filter's
+signals (token count, stopword ratio, type-token ratio) and its
+keep/reasons verdict.
 
 All of these are pure Column expressions (JVM-side, whole-stage codegen,
 oracle-checkable in ANSI SQL) — deliberately NOT UDFs: at 100 TB these run
@@ -11,19 +12,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Small closed sets of high-frequency function words per language —
-# the classic cheap lang-ID signal (n-gram/stopword heuristic).
+# A small closed set of high-frequency English function words — the
+# cheap "is this prose?" signal behind the low_stopword rule.
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "in", "on", "at", "is", "are",
     "was", "with", "for", "to", "by", "from", "this", "that", "it",
 ]
-ES_STOPWORDS = [
-    "el", "la", "los", "las", "un", "una", "y", "o", "de", "en", "es",
-    "son", "con", "para", "por", "que", "este", "esta",
-]
-
-# BPE-ish token pattern: word pieces, numbers, or single non-space symbols
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def _tokens(text_col: str | Column) -> Column:
@@ -39,42 +33,9 @@ def stopword_ratio_expr(text_col: str | Column, stopwords: list[str]) -> Column:
     return n_sw / F.greatest(F.size(toks), F.lit(1))
 
 
-def lang_id_expr(text_col: str | Column, threshold: float = 0.08) -> Column:
-    """'en' / 'es' / 'unknown' by whichever stopword family scores higher."""
-    en = stopword_ratio_expr(text_col, EN_STOPWORDS)
-    es = stopword_ratio_expr(text_col, ES_STOPWORDS)
-    return (
-        F.when((en >= threshold) & (en >= es), "en")
-        .when(es >= threshold, "es")
-        .otherwise("unknown")
-    )
-
-
 def token_count_expr(text_col: str | Column) -> Column:
     """Whitespace token count."""
     return F.size(_tokens(text_col))
-
-
-def bpe_token_count_expr(text_col: str | Column) -> Column:
-    """BPE-ish regex token count (word pieces + numbers + symbols)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), F.lit(0)))
-
-
-def quality_score_expr(text_col: str | Column) -> Column:
-    """Deterministic [0,1] quality score from cheap surface stats:
-    length band + mean word length band + stopword presence.
-    (The C4/Gopher-style gating signals, reduced to fixture-friendly
-    arithmetic; weights are fixed, not learned.)"""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    n_chars = F.length(c)
-    n_toks = token_count_expr(c)
-    mean_wl = n_chars / F.greatest(n_toks, F.lit(1))
-    sw = stopword_ratio_expr(c, EN_STOPWORDS)
-    len_ok = F.when((n_chars >= 100) & (n_chars <= 20000), 0.4).otherwise(0.0)
-    wl_ok = F.when((mean_wl >= 3.0) & (mean_wl <= 12.0), 0.3).otherwise(0.0)
-    sw_ok = F.least(sw * 3.0, F.lit(1.0)) * 0.3
-    return F.round(len_ok + wl_ok + sw_ok, 4)
 
 
 def ttr_expr(text_col: str | Column) -> Column:
@@ -82,24 +43,6 @@ def ttr_expr(text_col: str | Column) -> Column:
     lexical-diversity signal; heavily repeated boilerplate scores low."""
     toks = _tokens(text_col)
     return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1))
-
-
-def bigram_array_expr(text_col: str | Column) -> Column:
-    """Adjacent word bigrams as array<string> (lowercased). Feeds the
-    Gopher-style top-n-gram coverage signal: the COUNTING is done
-    relationally (explode -> groupBy) by the caller, because a per-row
-    most-frequent-gram HOF would be O(grams²) per document — fine on a
-    fixture, wrong at 100 TB."""
-    toks = _tokens(text_col)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    # sequence(1, 0) would count DOWN; guard sub-2-token docs explicitly
-    return F.when(n >= 2, grams).otherwise(F.array().cast("array<string>"))
 
 
 def quality_filter_exprs(
@@ -138,21 +81,3 @@ def quality_filter_exprs(
         "|",
     )
     return reasons == "", reasons
-
-
-def fingerprint_expr(text_col: str | Column) -> Column:
-    """Whole-document content fingerprint: md5 of normalized text
-    (cross-engine stable)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    norm = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    return F.md5(norm.cast("binary"))
-
-
-def shingle_fingerprint_expr(text_col: str | Column, n: int = 3) -> Column:
-    """Rolling-window fingerprint: lexicographic min of md5(shingle) —
-    stable under small appends (winnowing-style representative)."""
-    from ..operators.dedup import ngram_shingles
-
-    grams = ngram_shingles(text_col, n)
-    hashed = F.transform(grams, lambda g: F.md5(g.cast("binary")))
-    return F.array_min(hashed)

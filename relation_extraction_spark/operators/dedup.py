@@ -11,8 +11,8 @@ All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
 
 Scale notes: the pair-finder shuffles on a *blocking key* (the shingle)
 rather than cross-joining; hot shingles (stop phrases) are capped with a
-frequency filter — the same salting philosophy as the KG linking stage
-(BASELINE.json:L14).
+frequency filter, so a head key bounds its fan-out instead of funnelling
+one reducer (BASELINE.json:L14).
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ how many documents each stage dropped and why (per-rule rejection
 counts) — the auditability a 100-TB cleaning run needs before anyone
 commits to a drop.
 
-Scale shape: the filter and sampling stages are narrow (no shuffle);
+Scale shape: the quality filter is narrow (no shuffle);
 decontamination broadcasts the (tiny) eval shingle set; clustering
 shuffles on shingle blocking keys only; packing is the two-pass
 distributed prefix sum (operators/packing.py — no whole-stratum
@@ -38,16 +38,17 @@ from ..operators.packing import pack_offsets_scalable
 from ..sources.lakehouse import SnapshotTable
 from .pipeline import METRICS_SCHEMA
 
+EVAL_MAX_DOC_ID = 10  # docs below this id form the eval set
+DECONTAM_NGRAM = 4
+DUP_THRESHOLD = 0.3
+DUP_NGRAM = 2
+PACK_BUDGET = 512
+
 
 @dataclass
 class MixtureConfig:
     out: str
     input_parquet: str
-    eval_max_doc_id: int = 10        # docs below this id form the eval set
-    decontam_ngram: int = 4
-    dup_threshold: float = 0.3
-    dup_ngram: int = 2
-    pack_budget: int = 512
     run_id: str = "mixture"
 
 
@@ -76,7 +77,7 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
         (r["_reasons"], r["_is_eval"]): r["n"]
         for r in flagged.groupBy(
             "_reasons",
-            (F.col("doc_id") < cfg.eval_max_doc_id).alias("_is_eval"),
+            (F.col("doc_id") < EVAL_MAX_DOC_ID).alias("_is_eval"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -96,10 +97,10 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     #    frame is tiny (contaminated docs only) — checkpoint it so the
     #    count and the anti-join share one computation of the
     #    broadcast-join pass.
-    train = clean.filter(F.col("doc_id") >= cfg.eval_max_doc_id)
-    eval_docs = docs.filter(F.col("doc_id") < cfg.eval_max_doc_id)
+    train = clean.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID)
+    eval_docs = docs.filter(F.col("doc_id") < EVAL_MAX_DOC_ID)
     contaminated = (
-        contamination_overlap(train, eval_docs, n=cfg.decontam_ngram)
+        contamination_overlap(train, eval_docs, n=DECONTAM_NGRAM)
         .select("doc_id")
         .localCheckpoint(eager=False)
     )
@@ -126,7 +127,7 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     #     under transitivity, keep the component-minimum representative
     #     (similarity is not transitive: pair-wise dropping under-removes)
     pairs = ngram_jaccard_pairs(
-        exact_kept, threshold=cfg.dup_threshold, n=cfg.dup_ngram
+        exact_kept, threshold=DUP_THRESHOLD, n=DUP_NGRAM
     )
     cc = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -144,7 +145,7 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
         unique.select(
             "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
         ),
-        budget=cfg.pack_budget,
+        budget=PACK_BUDGET,
     )
 
     # 5. one commit: the mixture table + the audit metrics

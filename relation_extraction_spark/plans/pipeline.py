@@ -76,7 +76,6 @@ class PipelineConfig:
     seed: int = 42
     skew: float = 0.1
     dup_frac: float = 0.05
-    lang_en: float = 0.85
     # file-level bucketing of big tables by url hash: keeps every
     # downstream scan splittable into >= n_buckets tasks (AQE's
     # coalescing would otherwise write few large single-row-group files
@@ -196,7 +195,6 @@ class Pipeline:
                 seed=self.cfg.seed,
                 skew=self.cfg.skew,
                 dup_frac=self.cfg.dup_frac,
-                lang_en=self.cfg.lang_en,
             )
         # as-of dedup of recrawls: keep latest warc_ts per url (J9).
         # repartition FIRST: the ranking window requires a hash

@@ -16,8 +16,7 @@ comparable (SURVEY.md §5.1):
   identical rows.
 
 Scale notes are inline per query: each Spark plan is written the way it
-should run at 100 TB (broadcast hints on dims, banded range joins, salted
-variants proving equality with unsalted SQL, partial aggs).
+should run at 100 TB (broadcast hints on dims, partial aggs).
 """
 
 from __future__ import annotations
@@ -30,7 +29,6 @@ from pyspark.sql import functions as F
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 def q(name: str, sql: str | None = None):
@@ -175,29 +173,6 @@ def q_join_smj(spark, sf):
 
 
 @q(
-    "join_salted_skew",
-    "SELECT c_mktsegment, count(*) AS n, "
-    "round(sum(o_totalprice), 2) AS total "
-    "FROM customer JOIN orders ON c_custkey = o_custkey "
-    "GROUP BY c_mktsegment",
-)
-def q_join_salted(spark, sf):
-    # J3: explicit salting (SALT-way key split + small-side replication) —
-    # must equal the unsalted SQL join. This is the skew-defusing plan
-    # shape for head keys at 10^12 docs (BASELINE.json:L14); AQE skew-join
-    # is the runtime backstop.
-    from ..operators.skew import salted_join
-
-    c = T(spark, sf, "customer").select("c_custkey", "c_mktsegment")
-    o = T(spark, sf, "orders").select("o_custkey", "o_totalprice")
-    joined = salted_join(o, c, "o_custkey", "c_custkey", salt=8)
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
-
-
-@q(
     "join_left_semi",
     "SELECT o_orderkey, o_orderpriority FROM orders WHERE EXISTS "
     "(SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)",
@@ -243,44 +218,6 @@ def q_join_outer(spark, sf):
 
 
 @q(
-    "join_range_banded",
-    "SELECT e1.user_id AS user_id, count(*) AS n_pairs "
-    "FROM events e1 JOIN events e2 ON e1.user_id = e2.user_id "
-    "AND e2.ts > e1.ts AND e2.ts <= e1.ts + INTERVAL 5 MINUTE "
-    "GROUP BY e1.user_id",
-)
-def q_join_range(spark, sf):
-    # J8: theta/range join banded to an equi join on (user, time-bucket)
-    # + residual filter — avoids the O(n^2) nested loop the naive SQL
-    # implies; at scale the bucket key shards the work.
-    ev = T(spark, sf, "events").select(
-        "user_id", "ts", F.floor(F.unix_timestamp("ts") / 300).alias("b")
-    )
-    left = ev.select(
-        "user_id",
-        F.col("ts").alias("ts1"),
-        F.explode(F.array(F.col("b"), F.col("b") + 1)).alias("jb"),
-    )
-    right = ev.select(
-        F.col("user_id").alias("user_id2"),
-        F.col("ts").alias("ts2"),
-        F.col("b").alias("jb2"),
-    )
-    return (
-        left.join(
-            right,
-            (left.user_id == right.user_id2) & (left.jb == right.jb2),
-        )
-        .filter(
-            (F.col("ts2") > F.col("ts1"))
-            & (F.col("ts2") <= F.col("ts1") + F.expr("INTERVAL 5 MINUTES"))
-        )
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-@q(
     "join_asof_latest",
     "SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s, "
     "value FROM (SELECT *, row_number() OVER (PARTITION BY user_id "
@@ -316,26 +253,6 @@ def q_agg(spark, sf):
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-    )
-
-
-@q(
-    "agg_salted_two_phase",
-    "SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars "
-    "FROM documents GROUP BY lang",
-)
-def q_agg_salted(spark, sf):
-    # A2: explicit two-phase (key, salt) -> key aggregation; equals the
-    # plain GROUP BY. This is the plan shape for pathological head keys
-    # where map-side partial aggregation alone still funnels one reducer.
-    from ..operators.skew import salted_agg
-
-    docs = T(spark, sf, "documents")
-    return salted_agg(
-        docs,
-        keys=["lang"],
-        aggs={"n": ("count", None), "chars": ("sum_long", "n_chars")},
-        salt=8,
     )
 
 
@@ -757,151 +674,6 @@ def q_json(spark, sf):
     )
 
 
-@q(
-    "fn_vector_quantize",
-    # symmetric int8 quantization of the embedding column — the
-    # storage-side transform an embedding lakehouse applies before
-    # writing (4x smaller, scale kept for dequant). Rounding is the
-    # engine-agnostic floor(x + 0.5): both engines compute IDENTICAL
-    # doubles for x*127/m (the inputs are float32-exact), so the floor
-    # agrees everywhere, unlike native round() tie-break differences.
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-    "FROM embeddings), "
-    "m AS (SELECT vec_id, v, "
-    "list_max(list_transform(v, x -> abs(x))) AS mx FROM e) "
-    "SELECT vec_id, round(mx, 6) AS scale, "
-    "array_to_string(list_transform(v, x -> CAST(CASE WHEN mx = 0 "
-    "THEN 0 ELSE floor(x * 127 / mx + 0.5) END AS INT)), '|') AS q "
-    "FROM m",
-)
-def q_vector_quantize(spark, sf):
-    # pure higher-order Columns (aggregate for max-abs, transform for
-    # the quantize) — no UDF, no shuffle, narrow over the scan; the
-    # 100-TB form writes q back as array<tinyint> next to scale.
-    e = T(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    mx = F.aggregate(
-        "v", F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
-    )
-    return e.select(
-        "vec_id",
-        F.round(mx, 6).alias("scale"),
-        F.array_join(
-            F.transform(
-                "v",
-                lambda x: F.when(mx == 0, F.lit(0))
-                .otherwise(F.floor(x * 127 / mx + 0.5))
-                .cast("int"),
-            ),
-            "|",
-        ).alias("q"),
-    )
-
-
-# ------------------------------------------------- §2.9 streaming analogues
-
-
-@q(
-    "window_tumbling_1h",
-    "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS "
-    "window_start, count(*) AS n, round(sum(value), 2) AS total "
-    "FROM events GROUP BY 1",
-)
-def q_tumbling(spark, sf):
-    # T1: F.window is the streaming-compatible form (same expression works
-    # under readStream + withWatermark).
-    return (
-        T(spark, sf, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total"))
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "n",
-            "total",
-        )
-    )
-
-
-@q(
-    "window_sliding_1h_15m",
-    "SELECT strftime(make_timestamp(CAST((floor(epoch(ts) / 900) - g.i) "
-    "* 900 AS BIGINT) * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start, "
-    "count(*) AS n FROM events CROSS JOIN (VALUES (0), (1), (2), (3)) "
-    "g(i) GROUP BY 1",
-)
-def q_sliding(spark, sf):
-    return (
-        T(spark, sf, "events")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"), "n"
-        )
-    )
-
-
-@q(
-    "session_window_30m",
-    "WITH flagged AS (SELECT user_id, ts, value, CASE WHEN epoch(ts) - "
-    "epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) "
-    "> 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) "
-    "IS NULL THEN 1 ELSE 0 END AS new_s, event_id FROM events), "
-    "sess AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY "
-    "ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS "
-    "BIGINT) AS session_id FROM flagged) "
-    "SELECT user_id, session_id, count(*) AS n, round(sum(value), 2) AS "
-    "total FROM sess GROUP BY user_id, session_id",
-)
-def q_session(spark, sf):
-    # T3 batch analogue of session_window: lag -> flag -> cumsum -> agg.
-    # (The true F.session_window streaming form is not ANSI-SQL
-    # expressible.)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ep = F.unix_timestamp("ts")
-    flagged = T(spark, sf, "events").select(
-        "user_id",
-        "ts",
-        "value",
-        "event_id",
-        F.when(
-            (ep - F.lag(ep).over(w) > 1800) | F.lag(ep).over(w).isNull(), 1
-        )
-        .otherwise(0)
-        .alias("new_s"),
-    )
-    sess = flagged.withColumn("session_id", F.sum("new_s").over(cum))
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total")
-    )
-
-
-@q(
-    "dedup_stateful_by_key",
-    "SELECT user_id, strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') "
-    "AS minute_s, CAST(min(event_id) AS BIGINT) AS first_event "
-    "FROM events GROUP BY 1, 2",
-)
-def q_dedup_keyed(spark, sf):
-    # T5: exactly-once per (user, minute); deterministic representative via
-    # min(event_id) rather than dropDuplicates' arbitrary row.
-    return (
-        T(spark, sf, "events")
-        .groupBy(
-            "user_id",
-            F.date_format(F.date_trunc("minute", "ts"), TS_FMT_SPARK).alias(
-                "minute_s"
-            ),
-        )
-        .agg(F.min("event_id").alias("first_event"))
-    )
-
-
 # ============================================================ chunk 2:
 # training-data pipeline operators (dedup, text analysis) + KG
 # extraction stages (rows-only where non-SQL).
@@ -1014,379 +786,6 @@ def q_dedup_cluster_cc(spark, sf):
         .select(
             "doc_id",
             F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
-    )
-
-
-@q(
-    "dedup_minhash_lsh_md5",
-    # the MinHash-LSH ALGORITHM under a full value oracle: the
-    # product's LSH (canonicalize.lsh_similarity_edges) hashes with JVM
-    # xxhash64 (no DuckDB equivalent), but the algorithm itself — k
-    # min-hashes, banded blocking, candidate self-join, exact-Jaccard
-    # verify — is hash-family-agnostic. This twin uses
-    # min(md5(seed || shingle)) as the permutation family (md5 hex is
-    # byte-identical across engines, string MIN is the min-hash), so
-    # every step runs verbatim in DuckDB. k=8, 4 bands of 2 rows,
-    # word-bigram shingles, jaccard >= 0.3 on en docs — parameters
-    # mirror dedup_ngram_jaccard so the verified pair lists are
-    # comparable.
-    "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM "
-    "documents WHERE lang = 'en'), "
-    "sh AS (SELECT doc_id, unnest(list_distinct(list_transform("
-    "generate_series(1, greatest(len(t) - 1, 0)), i -> "
-    "array_to_string(t[i:i+1], ' ')))) AS sh FROM toks), "
-    "sig AS (SELECT doc_id, "
-    + ", ".join(
-        f"min(md5('{i}:' || sh)) AS mh_{i}" for i in range(8)
-    )
-    + " FROM sh GROUP BY doc_id), "
-    "banded AS ("
-    + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, mh_{2 * b} || mh_{2 * b + 1} AS bh "
-        "FROM sig"
-        for b in range(4)
-    )
-    + "), "
-    "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-    "FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh "
-    "AND a.doc_id < b.doc_id), "
-    "sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id), "
-    "com AS (SELECT c.id_a, c.id_b, count(*) AS c FROM cand c "
-    "JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b "
-    "AND sa.sh = sb.sh GROUP BY c.id_a, c.id_b) "
-    "SELECT com.id_a, com.id_b, round(CAST(c AS DOUBLE) / "
-    "(za.sz + zb.sz - c), 6) AS jaccard FROM com "
-    "JOIN sizes za ON za.doc_id = com.id_a "
-    "JOIN sizes zb ON zb.doc_id = com.id_b "
-    "WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.3",
-)
-def q_dedup_minhash_md5(spark, sf):
-    # Same plan shape as the production LSH (banded blocking keys, only
-    # bucket collisions joined, exact verify on candidates), hash family
-    # swapped to cross-engine md5 strings. The string min-aggs are
-    # heavier than the JVM long path — this query exists to VERIFY the
-    # algorithm, the xxhash64 variant is the scale path.
-    docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    toks = F.split(F.col("text"), " ")
-    sh = docs.select(
-        F.col("doc_id").alias("doc"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= 2,
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                    ),
-                    lambda i: F.array_join(F.slice(toks, i, 2), " "),
-                )
-            )
-        ).alias("sh"),
-    ).localCheckpoint(eager=False)
-    sig = sh.groupBy("doc").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(
-                f"mh_{i}"
-            )
-            for i in range(8)
-        ]
-    )
-    banded = sig.select(
-        "doc",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bh"),
-    )
-    a = banded.select(F.col("doc").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("doc").alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    com = (
-        cand.join(sh.select(F.col("doc").alias("id_a"), "sh"), "id_a")
-        .join(
-            sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh")),
-            ["id_b", "sh"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    za = sizes.select(F.col("doc").alias("id_a"), F.col("sz").alias("sza"))
-    zb = sizes.select(F.col("doc").alias("id_b"), F.col("sz").alias("szb"))
-    # Gate on the unrounded ratio exactly as the oracle's WHERE does;
-    # round only the emitted column (same convention as
-    # ngram_jaccard_pairs since round 5).
-    ratio = F.col("c") / (F.col("sza") + F.col("szb") - F.col("c"))
-    return (
-        com.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(ratio >= 0.3)
-        .select("id_a", "id_b", F.round(ratio, 6).alias("jaccard"))
-    )
-
-
-def _simhash_md5_oracle() -> str:
-    """SimHash with md5-derived bits, verbatim in DuckDB (see
-    q_dedup_simhash_md5). Bit b of a shingle = bit (b mod 4) of hex
-    digit b//4 of md5(sh), extracted with pure mod/compare arithmetic
-    ((d % 2^(k+1)) >= 2^k) so both dialects agree exactly."""
-    bit_aggs = ", ".join(
-        "CASE WHEN sum(CASE WHEN ((strpos('0123456789abcdef', "
-        f"substr(md5(sh), {b // 4 + 1}, 1)) - 1) % {2 ** (b % 4 + 1)}) "
-        f">= {2 ** (b % 4)} THEN 1 ELSE -1 END) > 0 "
-        f"THEN '1' ELSE '0' END AS b_{b}"
-        for b in range(64)
-    )
-    sig_concat = " || ".join(f"b_{b}" for b in range(64))
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {i} AS chunk, substr(sig, {i * 16 + 1}, 16) AS cv "
-        "FROM sig"
-        for i in range(4)
-    )
-    return (
-        "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t "
-        "FROM documents WHERE lang = 'en'), "
-        "sh AS (SELECT doc_id, unnest(list_distinct(list_transform("
-        "generate_series(1, greatest(len(t) - 1, 0)), i -> "
-        "array_to_string(t[i:i+1], ' ')))) AS sh FROM toks), "
-        f"bits AS (SELECT doc_id, {bit_aggs} FROM sh GROUP BY doc_id), "
-        f"sig AS (SELECT doc_id, {sig_concat} AS sig FROM bits), "
-        f"banded AS ({bands}), "
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-        "FROM banded a JOIN banded b ON a.chunk = b.chunk AND a.cv = b.cv "
-        "AND a.doc_id < b.doc_id) "
-        "SELECT id_a, id_b, CAST(len(list_filter(generate_series(1, 64), "
-        "i -> substr(sa.sig, i, 1) != substr(sb.sig, i, 1))) AS INT) "
-        "AS hamming FROM cand JOIN sig sa ON sa.doc_id = cand.id_a "
-        "JOIN sig sb ON sb.doc_id = cand.id_b "
-        "WHERE len(list_filter(generate_series(1, 64), "
-        "i -> substr(sa.sig, i, 1) != substr(sb.sig, i, 1))) <= 3"
-    )
-
-
-@q("dedup_simhash_md5", _simhash_md5_oracle())
-def q_dedup_simhash_md5(spark, sf):
-    # the SimHash ALGORITHM under a full value oracle (companion to
-    # dedup_minhash_lsh_md5): per-bit majority vote over shingles,
-    # 4-chunk pigeonhole banding (max_hamming=3 < 4 chunks guarantees
-    # a shared chunk), hamming verify on candidates. Bits come from
-    # md5 hex digits via mod/compare arithmetic — byte-identical in
-    # both engines — and the signature travels as a 64-char '0'/'1'
-    # string, so chunk keys and the hamming count are plain string
-    # ops everywhere.
-    docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    toks = F.split(F.col("text"), " ")
-    sh = docs.select(
-        F.col("doc_id").alias("doc_id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= 2,
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                    ),
-                    lambda i: F.array_join(F.slice(toks, i, 2), " "),
-                )
-            )
-        ).alias("sh"),
-    )
-    bit_aggs = [
-        F.expr(
-            "CASE WHEN sum(CASE WHEN ((instr('0123456789abcdef', "
-            f"substr(md5(sh), {b // 4 + 1}, 1)) - 1) % {2 ** (b % 4 + 1)}) "
-            f">= {2 ** (b % 4)} THEN 1 ELSE -1 END) > 0 "
-            f"THEN '1' ELSE '0' END AS b_{b}"
-        )
-        for b in range(64)
-    ]
-    sig = (
-        sh.groupBy("doc_id")
-        .agg(*bit_aggs)
-        .select(
-            "doc_id",
-            F.concat(*[F.col(f"b_{b}") for b in range(64)]).alias("sig"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[F.substring("sig", i * 16 + 1, 16) for i in range(4)]
-            )
-        ).alias("chunk", "cv"),
-    )
-    a = banded.select(F.col("doc_id").alias("id_a"), "chunk", "cv")
-    b = banded.select(F.col("doc_id").alias("id_b"), "chunk", "cv")
-    cand = (
-        a.join(b, ["chunk", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    hamming = F.expr(
-        "size(filter(sequence(1, 64), "
-        "i -> substr(sig_a, i, 1) != substr(sig_b, i, 1)))"
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-_SW_EN_SQL = "['the','a','an','and','or','of','in','on','at','is','are','was','with','for','to','by','from','this','that','it']"
-_SW_ES_SQL = "['el','la','los','las','un','una','y','o','de','en','es','son','con','para','por','que','este','esta']"
-
-
-@q(
-    "text_lang_id",
-    "SELECT doc_id, lang, CASE WHEN en_r >= 0.08 AND en_r >= es_r THEN 'en' "
-    "WHEN es_r >= 0.08 THEN 'es' ELSE 'unknown' END AS lang_pred, "
-    "round(en_r, 4) AS en_ratio FROM (SELECT doc_id, lang, "
-    f"CAST(len(list_filter(string_split(lower(text), ' '), t -> "
-    f"list_contains({_SW_EN_SQL}, t))) AS DOUBLE) / greatest(len("
-    "string_split(lower(text), ' ')), 1) AS en_r, "
-    f"CAST(len(list_filter(string_split(lower(text), ' '), t -> "
-    f"list_contains({_SW_ES_SQL}, t))) AS DOUBLE) / greatest(len("
-    "string_split(lower(text), ' ')), 1) AS es_r FROM documents)",
-)
-def q_lang_id(spark, sf):
-    from ..functions.textstats import (
-        EN_STOPWORDS,
-        lang_id_expr,
-        stopword_ratio_expr,
-    )
-
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        "lang",
-        lang_id_expr("text").alias("lang_pred"),
-        F.round(stopword_ratio_expr("text", EN_STOPWORDS), 4).alias("en_ratio"),
-    )
-
-
-@q(
-    "text_quality_score",
-    "SELECT doc_id, round((CASE WHEN length(text) >= 100 AND length(text) "
-    "<= 20000 THEN 0.4 ELSE 0.0 END) + (CASE WHEN mean_wl >= 3.0 AND "
-    "mean_wl <= 12.0 THEN 0.3 ELSE 0.0 END) + least(sw_r * 3.0, 1.0) * "
-    "0.3, 4) AS quality FROM (SELECT doc_id, text, CAST(length(text) AS "
-    "DOUBLE) / greatest(len(string_split(lower(text), ' ')), 1) AS "
-    f"mean_wl, CAST(len(list_filter(string_split(lower(text), ' '), t -> "
-    f"list_contains({_SW_EN_SQL}, t))) AS DOUBLE) / greatest(len("
-    "string_split(lower(text), ' ')), 1) AS sw_r FROM documents)",
-)
-def q_quality(spark, sf):
-    from ..functions.textstats import quality_score_expr
-
-    return T(spark, sf, "documents").select(
-        "doc_id", quality_score_expr("text").alias("quality")
-    )
-
-
-@q(
-    "text_token_counts",
-    "SELECT doc_id, len(string_split(lower(text), ' ')) AS n_ws_tokens, "
-    "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) "
-    "AS n_bpe_tokens FROM documents",
-)
-def q_token_counts(spark, sf):
-    from ..functions.textstats import bpe_token_count_expr, token_count_expr
-
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        token_count_expr("text").alias("n_ws_tokens"),
-        bpe_token_count_expr("text").alias("n_bpe_tokens"),
-    )
-
-
-@q(
-    "text_fingerprint",
-    "SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', "
-    "'g')) AS fp, list_aggregate(list_transform(list_distinct("
-    "list_transform(generate_series(1, greatest(len(string_split(text, "
-    "' ')) - 2, 0)), i -> array_to_string((string_split(text, ' '))"
-    "[i:i+2], ' '))), g -> md5(g)), 'min') AS shingle_fp FROM documents",
-)
-def q_fingerprint(spark, sf):
-    from ..functions.textstats import fingerprint_expr, shingle_fingerprint_expr
-
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        fingerprint_expr("text").alias("fp"),
-        shingle_fingerprint_expr("text", 3).alias("shingle_fp"),
-    )
-
-
-@q(
-    "text_repetition",
-    # Gopher-style repetition signals: type-token ratio + fraction of
-    # bigram occurrences held by the single most frequent bigram.
-    "WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t "
-    "FROM documents), "
-    "bg AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g "
-    "FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)), "
-    "cnt AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2), "
-    "rep AS (SELECT doc_id, round(max(c)::DOUBLE / sum(c), 4) AS "
-    "top_bigram_frac FROM cnt GROUP BY doc_id) "
-    "SELECT toks.doc_id, "
-    "round(len(list_distinct(t))::DOUBLE / greatest(len(t), 1), 4) AS ttr, "
-    "coalesce(rep.top_bigram_frac, 0.0) AS top_bigram_frac "
-    "FROM toks LEFT JOIN rep ON toks.doc_id = rep.doc_id",
-)
-def q_text_repetition(spark, sf):
-    # the bigram COUNT is relational (explode -> two hash aggs with
-    # map-side combine), not a per-row most-frequent-gram HOF: at 100 TB
-    # the former is one shuffle on (doc_id, gram), the latter O(grams²)
-    # per document (see functions/textstats.py::bigram_array_expr)
-    from ..functions.textstats import bigram_array_expr, ttr_expr
-
-    docs = T(spark, sf, "documents")
-    rep = (
-        docs.select(
-            # hash each bigram to an 8-byte long BEFORE the shuffle:
-            # the count aggregation only needs gram IDENTITY, so the
-            # (doc_id, gram-string) exchange becomes (doc_id, long) —
-            # same trick as the n-gram dedup's hashed shingles, same
-            # negligible collision odds, counts (and the oracle) are
-            # unchanged
-            "doc_id",
-            F.explode(
-                F.transform(
-                    bigram_array_expr("text"), lambda g: F.xxhash64(g)
-                )
-            ).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.max("c") / F.sum("c"), 4).alias("top_bigram_frac")
-        )
-    )
-    return (
-        docs.select("doc_id", F.round(ttr_expr("text"), 4).alias("ttr"))
-        .join(rep, "doc_id", "left")
-        .select(
-            "doc_id",
-            "ttr",
-            F.coalesce("top_bigram_frac", F.lit(0.0)).alias(
-                "top_bigram_frac"
-            ),
         )
     )
 
@@ -1516,61 +915,6 @@ def q_pack_sequences_scalable(spark, sf):
     from ..operators.packing import pack_offsets_scalable
 
     return pack_offsets_scalable(_docs_with_tokens(spark, sf), budget=512)
-
-
-@q(
-    "sample_topk_per_stratum",
-    # exact-k companion to the rate-based sample: the k docs per
-    # stratum whose md5 sorts FIRST — a deterministic "random" draw
-    # with an exact size contract (eval/holdout set construction).
-    # md5 is collision-free over distinct ids for ordering purposes,
-    # so the pick is total-ordered and engine-independent.
-    "SELECT doc_id, lang FROM (SELECT doc_id, lang, row_number() OVER ("
-    "PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rn "
-    "FROM documents) WHERE rn <= 20",
-)
-def q_sample_topk_per_stratum(spark, sf):
-    # One window shuffle on the stratum key. At 100 TB, k per stratum
-    # is small by definition — the right physical form is a per-
-    # partition top-k (rank over sorted runs) which Spark's window +
-    # filter compiles to with partial TakeOrdered pushdown under AQE;
-    # no global sort, no collect.
-    w = Window.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")))
-    return (
-        T(spark, sf, "documents")
-        .select("doc_id", "lang", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 20)
-        .select("doc_id", "lang")
-    )
-
-
-@q(
-    "sample_stratified",
-    # Deterministic per-stratum Bernoulli sampling: keep a doc iff the
-    # md5 hex of its id sorts below the stratum's threshold string.
-    # Lexicographic compare on lowercase hex == numeric compare on the
-    # 128-bit digest, so a one-hex-digit prefix sets the rate in 1/16
-    # steps ('4' -> 4/16 = 25%, '8' -> 50%). Identical digests in every
-    # engine -> reproducible sample membership, the property a training
-    # mixture needs (re-runs and backfills select the SAME documents).
-    "SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS h "
-    "FROM documents "
-    "WHERE md5(CAST(doc_id AS VARCHAR)) < "
-    "(CASE WHEN lang = 'en' THEN '4' ELSE '8' END)",
-)
-def q_sample_stratified(spark, sf):
-    # Pure narrow filter — no shuffle, no RNG state, trivially pushes
-    # into the scan at 100 TB (md5 over an already-read column). Rates:
-    # downsample the dominant stratum (en 25%), keep half of the rest.
-    h = F.md5(F.col("doc_id").cast("string"))
-    return (
-        T(spark, sf, "documents")
-        .select("doc_id", "lang", h.alias("h"))
-        .filter(
-            F.col("h")
-            < F.when(F.col("lang") == "en", F.lit("4")).otherwise(F.lit("8"))
-        )
-    )
 
 
 # ------------------------------------------------ KG extraction stages
@@ -1728,152 +1072,4 @@ def q_sort_within_partitions(spark, sf):
         .repartition(8, "o_custkey")
         .sortWithinPartitions("o_custkey", "o_orderdate")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-# ------------------------------------------- TPC-H-style analytics (adapted
-# to the fixture schemas) — multi-join + agg plans over the larger tables,
-# written the way they should run at 100 TB: dims broadcast, facts never
-# shuffled except on agg keys, filters pushed to the scans.
-
-
-@q(
-    "tpch_q1_pricing_summary",
-    "SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, "
-    "round(sum(l_extendedprice), 2) AS sum_base_price, "
-    "round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price, "
-    "round(avg(l_quantity), 4) AS avg_qty, count(*) AS count_order "
-    "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01' "
-    "GROUP BY l_returnflag, l_linestatus",
-)
-def q_tpch_q1(spark, sf):
-    return (
-        T(spark, sf, "lineitem")
-        .filter(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@q(
-    "tpch_q3_shipping_priority",
-    "SELECT l.l_orderkey, round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)"
-    " AS revenue, strftime(o.o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate "
-    "FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey "
-    "JOIN lineitem l ON l.l_orderkey = o.o_orderkey "
-    "WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderdate < TIMESTAMP "
-    "'1995-03-15' AND l.l_shipdate > TIMESTAMP '1995-03-15' "
-    "GROUP BY l.l_orderkey, o.o_orderdate "
-    "ORDER BY revenue DESC, l_orderkey LIMIT 10",
-)
-def q_tpch_q3(spark, sf):
-    cust = T(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = T(spark, sf, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
-    )
-    li = T(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", TS_FMT_SPARK).alias("o_orderdate"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-@q(
-    "tpch_q5_local_supplier_volume",
-    "SELECT n.n_name, round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) "
-    "AS revenue FROM customer c "
-    "JOIN orders o ON c.c_custkey = o.o_custkey "
-    "JOIN lineitem l ON l.l_orderkey = o.o_orderkey "
-    "JOIN supplier s ON l.l_suppkey = s.s_suppkey "
-    "AND c.c_nationkey = s.s_nationkey "
-    "JOIN nation n ON s.s_nationkey = n.n_nationkey "
-    "JOIN region r ON n.n_regionkey = r.r_regionkey "
-    "WHERE r.r_name = 'ASIA' GROUP BY n.n_name",
-)
-def q_tpch_q5(spark, sf):
-    # facts (lineitem, orders) sort-merge on their keys; every dim is
-    # broadcast — the canonical star-join shape at scale.
-    c = T(spark, sf, "customer")
-    o = T(spark, sf, "orders")
-    l = T(spark, sf, "lineitem")
-    s = T(spark, sf, "supplier")
-    n = T(spark, sf, "nation")
-    r = T(spark, sf, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-@q(
-    "tpch_q18_large_volume_customer",
-    "WITH big AS (SELECT l_orderkey FROM lineitem GROUP BY l_orderkey "
-    "HAVING sum(l_quantity) > 150) "
-    "SELECT c.c_name, o.o_orderkey, round(o.o_totalprice, 2) AS o_totalprice,"
-    " round(sum(l.l_quantity), 2) AS total_qty "
-    "FROM orders o JOIN big ON o.o_orderkey = big.l_orderkey "
-    "JOIN customer c ON c.c_custkey = o.o_custkey "
-    "JOIN lineitem l ON l.l_orderkey = o.o_orderkey "
-    "GROUP BY c.c_name, o.o_orderkey, o.o_totalprice "
-    "ORDER BY o_totalprice DESC, o_orderkey LIMIT 20",
-)
-def q_tpch_q18(spark, sf):
-    l = T(spark, sf, "lineitem")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
-    )
-    o = T(spark, sf, "orders")
-    c = T(spark, sf, "customer")
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(l.alias("l2"), F.col("o_orderkey") == F.col("l2.l_orderkey"))
-        .groupBy("c_name", "o_orderkey", "o_totalprice")
-        .agg(F.round(F.sum("l2.l_quantity"), 2).alias("total_qty"))
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
     )

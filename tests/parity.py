@@ -14,10 +14,7 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["customer", "part", "orders", "lineitem", "events", "documents"]
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

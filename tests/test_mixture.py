@@ -1,10 +1,10 @@
-"""Training-mixture ops (round 4): near-dup clustering, sequence
-packing, deterministic stratified sampling.
+"""Training-mixture ops (round 4): quality filter, decontamination,
+near-dup clustering, sequence packing, and the job that composes them.
 
-Cross-engine value parity is pinned by test_parity (the three queries
-are oracle-backed); these tests pin the SEMANTIC properties the oracle
+Cross-engine value parity is pinned by test_parity (these queries are
+oracle-backed); these tests pin the SEMANTIC properties the oracle
 hash can't express — transitive closure correctness, partitioning
-invariance, offset contiguity, sample determinism.
+invariance, offset contiguity.
 """
 
 from __future__ import annotations
@@ -358,22 +358,3 @@ class TestDecontaminate:
         )
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
-
-
-class TestSampleStratified:
-    def test_deterministic_membership(self, spark, sf_dir):
-        a = _run("sample_stratified", spark, sf_dir)
-        b = _run("sample_stratified", spark, sf_dir)
-        assert sorted(a.doc_id) == sorted(b.doc_id)
-
-    def test_is_a_subset_with_stratum_rates(self, spark, sf_dir):
-        df = _run("sample_stratified", spark, sf_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").toPandas()
-        assert set(df.doc_id) <= set(docs.doc_id)
-        # en threshold '4' = 25% of hex space, others '8' = 50%; at
-        # fixture size just pin the ORDERING of realized rates, not
-        # tight bounds
-        merged = docs.merge(df[["doc_id"]].assign(kept=True), how="left")
-        merged["kept"] = merged.kept.eq(True)
-        rate = merged.groupby(merged.lang == "en").kept.mean()
-        assert 0 < rate[True] < rate[False] < 1
