@@ -1,5 +1,6 @@
-"""Text analysis for training-data pipelines — the quality filter's
-signals (token count, stopword ratio, type-token ratio) and its
+"""Column text expressions — the surface-form normalization every KG
+stage and the exact dedup key share, and the training-data quality
+filter's signals (token count, stopword ratio, type-token ratio) and its
 keep/reasons verdict.
 
 All of these are pure Column expressions (JVM-side, whole-stage codegen,
@@ -18,6 +19,12 @@ EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "in", "on", "at", "is", "are",
     "was", "with", "for", "to", "by", "from", "this", "that", "it",
 ]
+
+
+def normalize_text_expr(col: str | Column) -> Column:
+    """Lower-case, trim, collapse whitespace runs to one space."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
 def _tokens(text_col: str | Column) -> Column:

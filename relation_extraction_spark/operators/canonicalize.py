@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textstats import normalize_text_expr
 from .connected_components import connected_components
-from .dedup import normalize_text_expr
 
 _MERSENNE31 = (1 << 31) - 1
 

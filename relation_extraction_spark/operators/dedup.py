@@ -2,12 +2,14 @@
 
 All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
 
-- ``exact_dedup``          — hash-groupBy on normalized content.
-- ``ngram_shingles``       — word n-gram shingle sets as a Column expr.
-- ``ngram_jaccard_pairs``  — capped inverted-index Jaccard pairs
-                             (exact when ``max_shingle_freq=None``;
-                             the default caps hot shingles — the
-                             oracle mirrors the cap in SQL).
+- ``exact_dedup``            — hash-groupBy on normalized content.
+- ``hashed_shingles_frame``  — exploded (doc, hashed word n-gram) frame.
+- ``ngram_jaccard_pairs``    — capped inverted-index Jaccard pairs
+                               (exact when ``max_shingle_freq=None``;
+                               the default caps hot shingles — the
+                               oracle mirrors the cap in SQL).
+- ``near_dup_components``    — those pairs closed under transitivity.
+- ``contamination_overlap``  — train/eval n-gram overlap.
 
 Scale notes: the pair-finder shuffles on a *blocking key* (the shingle)
 rather than cross-joining; hot shingles (stop phrases) are capped with a
@@ -17,13 +19,11 @@ one reducer (BASELINE.json:L14).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def normalize_text_expr(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+from ..functions.textstats import normalize_text_expr
+from .connected_components import connected_components
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -36,20 +36,45 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def ngram_shingles(text_col: str | Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string> (JVM-side)."""
+def hashed_shingles_frame(
+    docs: DataFrame,
+    n: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Exploded (doc, sh) frame of a doc's distinct word n-grams, hashed
+    to longs.
+
+    ``xxhash64`` runs over the sliced token ARRAY inside the map stage,
+    so the n-gram string is never materialized and the widest shuffle
+    moves 8-byte keys (collision odds ~m²/2⁶⁵ for m distinct shingles,
+    negligible below ~10⁸ per corpus). Token boundaries stay significant
+    because xxhash64 mixes per element, so hashing the sliced array keys
+    the same shingles as hashing the joined string.
+
+    A doc with < n tokens (or NULL text) emits no rows: its index array
+    is NULL and explode(NULL) emits nothing, matching the oracles.
+    Clamping with greatest() cannot express "no shingles" —
+    sequence(1, 0) is DESCENDING [1, 0] in Spark (step defaults to -1
+    when start > stop) and slice(toks, 0, n) is a runtime error.
+    """
     toks = F.split(
         F.col(text_col) if isinstance(text_col, str) else text_col, " "
     )
-    # NULL (not empty) index array when the doc has < n tokens:
-    # sequence(1, 0) is DESCENDING [1, 0] in Spark (step defaults to -1
-    # when start > stop) and slice(toks, 0, n) is a runtime error, so
-    # clamping with greatest() cannot express "no shingles". transform
-    # and array_distinct propagate the NULL; coalesce restores the
-    # empty set callers expect.
-    idx = F.when(F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return F.coalesce(F.array_distinct(grams), F.array().cast("array<string>"))
+    return docs.select(
+        F.col(id_col).alias("doc"),
+        F.explode(
+            F.array_distinct(
+                F.transform(
+                    F.when(
+                        F.size(toks) >= n,
+                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+                    ),
+                    lambda i: F.xxhash64(F.slice(toks, i, n)),
+                )
+            )
+        ).alias("sh"),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -64,17 +89,17 @@ def ngram_jaccard_pairs(
     ``max_shingle_freq=None``; the capped default is approximate).
 
     ``max_shingle_freq`` drops shingles appearing in more than that many
-    docs before pair generation. The default is a FINITE cap (round-1
-    judge finding): a single stop-phrase shingle shared by f docs
-    produces f^2/2 pair rows, so an uncapped inverted index goes
-    quadratic on hot shingles at scale. Pass ``None`` explicitly for the
-    exact form on small corpora. The DuckDB oracle mirrors the cap
-    (plans/queries.py ``dedup_ngram_jaccard``), so the scale-safe capped
-    form IS the verified form.
+    docs before pair generation. The default is a FINITE cap: a single
+    stop-phrase shingle shared by f docs produces f^2/2 pair rows, so an
+    uncapped inverted index goes quadratic on hot shingles at scale.
+    Pass ``None`` explicitly for the exact form on small corpora. The
+    DuckDB oracle mirrors the cap (plans/queries.py
+    ``dedup_ngram_jaccard``), so the scale-safe capped form IS the
+    verified form.
 
-    Plan shape (round-4 rework): ONE scan+explode builds the hashed
-    ``(doc, sh)`` frame, lazily checkpointed; everything downstream is
-    a count aggregation or a join on it —
+    Plan shape: ONE scan+explode builds the hashed ``(doc, sh)`` frame,
+    lazily checkpointed; everything downstream is a count aggregation
+    or a join on it —
 
     - hot shingles come from ``groupBy(sh).count`` (map-side partial
       counts over 16-byte rows — far cheaper than collecting doc
@@ -88,56 +113,31 @@ def ngram_jaccard_pairs(
       frame (``id_a < id_b``), counted per pair for the intersection
       size.
 
-    Versus the round-2/3 ``groupBy(sh) -> collect_list -> chained
-    pair-explode`` form: profiled at sf0.1, pair GENERATION was never
-    the cost (0.34 s) — the pair-count hash aggregate fed by the
-    Generate chain was (3.6 s of a 4.5 s total), and the same
-    aggregate fed by the join's probe stream runs ~2.8x faster
-    (whole-stage codegen spans the join+partial-agg pipeline; the
-    Generate chain breaks it). Net 1.67x end-to-end, identical pairs.
-    The join form also has NO wide rows anywhere (peak row = one
-    16-byte (doc, sh) pair vs an 8 KB doc list), retiring the round-3
-    item-5 memory bound outright.
+    Why a self-join rather than ``groupBy(sh) -> collect_list ->
+    pair-explode``: profiled at sf0.1, pair GENERATION was never the
+    cost (0.34 s) — the pair-count hash aggregate fed by the Generate
+    chain was (3.6 s of a 4.5 s total), and the same aggregate fed by
+    the join's probe stream runs ~2.8x faster (whole-stage codegen spans
+    the join+partial-agg pipeline; the Generate chain breaks it). Net
+    1.67x end-to-end, identical pairs. The join form also has NO wide
+    rows anywhere (peak row = one 16-byte (doc, sh) pair vs an 8 KB doc
+    list).
 
-    Scale notes: the widest shuffle moves hashed 8-byte shingle keys —
-    ``xxhash64`` over the sliced token ARRAY inside the map stage, so
-    the n-gram string is never materialized (collision odds ~m^2/2^65
-    for m distinct shingles, negligible below ~10^8 per corpus). Both
-    self-join sides canonicalize to the same Exchange, so the frame
-    shuffles once and is read twice. A hot key still fans out to at
-    most cap^2/2 pair rows inside one task — the inherent bound of any
-    inverted-index formulation — and AQE's skew-join split applies
-    when hot keys cluster in a partition.
+    Scale notes: the widest shuffle moves hashed 8-byte shingle keys
+    (hashed_shingles_frame). Both self-join sides canonicalize to the
+    same Exchange, so the frame shuffles once and is read twice. A hot
+    key still fans out to at most cap^2/2 pair rows inside one task —
+    the inherent bound of any inverted-index formulation — and AQE's
+    skew-join split applies when hot keys cluster in a partition.
     """
-    toks = F.split(
-        F.col(text_col) if isinstance(text_col, str) else text_col, " "
-    )
-    sh = docs.select(
-        F.col(id_col).alias("doc"),
-        # token boundaries stay significant because xxhash64 mixes
-        # per-element, so hashing the sliced ARRAY keys the same
-        # shingles as hashing the joined string. Docs with < n tokens
-        # get a NULL index array (see ngram_shingles for why greatest()
-        # can't express this); explode(NULL) emits no rows, matching
-        # the oracle — a short doc has zero shingles, zero pairs.
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= n,
-                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    ),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                )
-            )
-        ).alias("sh"),
-    )
     # Spark re-derives lineage at every reference — freq, sizes and the
     # two join sides would otherwise re-run the scan+explode four
     # times. A LAZY localCheckpoint materializes the exploded frame
     # once in the block manager (memory-with-disk-spill) and truncates
     # the lineage for every downstream branch.
-    sh = sh.localCheckpoint(eager=False)
+    sh = hashed_shingles_frame(docs, n, id_col, text_col).localCheckpoint(
+        eager=False
+    )
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("sh")
@@ -168,34 +168,19 @@ def ngram_jaccard_pairs(
     )
 
 
-def hashed_shingles_frame(
-    docs: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exploded (doc, sh) frame with shingles hashed to longs —
-    ``xxhash64`` over the sliced token ARRAY, so the n-gram string is
-    never materialized and the widest shuffle moves 8-byte keys (the
-    same trick as ngram_jaccard_pairs; collision odds ~m²/2⁶⁵).
-    Docs with < n tokens emit no rows (NULL index array; see
-    ngram_shingles for why greatest() can't express this)."""
-    toks = F.split(
-        F.col(text_col) if isinstance(text_col, str) else text_col, " "
-    )
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= n,
-                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    ),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                )
-            )
-        ).alias("sh"),
+def near_dup_components(docs: DataFrame, threshold: float, n: int) -> DataFrame:
+    """Near-dup clusters: capped ``ngram_jaccard_pairs`` closed under
+    transitivity -> (node, component), component = the cluster's min
+    doc_id. Similarity is not transitive (A~B, B~C, A!~C must still
+    collapse to one kept doc), so pair lists alone under-remove.
+
+    Only docs in some pair appear; a doc absent from the output is its
+    own singleton cluster (the caller's concern, as for
+    connected_components).
+    """
+    pairs = ngram_jaccard_pairs(docs, threshold=threshold, n=n)
+    return connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text_expr
+from ..functions.textstats import normalize_text_expr
 
 
 def materialize_edges(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -15,8 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.textstats import normalize_text_expr
 from .canonicalize import char_trigrams_expr
-from .dedup import normalize_text_expr
 
 
 def link_score_expr(mention: str | Column, canonical: str | Column, prior: str | Column) -> Column:

@@ -6,19 +6,15 @@ each document a sequence number (``off div budget``) and an in-sequence
 start (``off mod budget``); documents may straddle a chunk boundary,
 exactly as concatenated pretraining token streams do.
 
-Two physical forms with IDENTICAL output (pinned by the shared DuckDB
-oracle and tests/test_mixture.py):
-
-- ``pack_offsets_window`` — one window partitioned by the stratum.
-  Right when strata are plentiful (lang × source × shard); each
-  stratum's running sum is a sequential dependency BY DEFINITION, so
-  the window's per-partition sort is the honest cost.
-- ``pack_offsets_scalable`` — the giant-stratum path: range-partition
-  by (stratum, id), per-partition subtotals to the driver (bounded by
-  the PARTITION count, never rows), cumulate prefix offsets, broadcast
-  them back, intra-partition running sums only. No single reducer ever
-  sees a whole stratum; the widest shuffle is the range exchange.
-  This is the classic two-pass distributed prefix-sum.
+One physical form, ``pack_offsets_scalable``, the two-pass distributed
+prefix sum: range-partition by (stratum, id), per-partition subtotals to
+the driver (bounded by the PARTITION count, never rows), cumulate prefix
+offsets, broadcast them back, intra-partition running sums only. No
+single reducer ever sees a whole stratum; the widest shuffle is the
+range exchange. The DuckDB oracle of ``pack_sequences_scalable``
+(plans/queries.py) checks it, and tests/test_mixture.py compares it with
+``pack_offsets_window``, a one-window-per-stratum reference that states
+the definition directly.
 """
 
 from __future__ import annotations
@@ -29,27 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
 
-def pack_offsets_window(
-    docs: DataFrame,
-    budget: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    tok_col: str = "n_tok",
-) -> DataFrame:
-    """Per-stratum running offset → (seq_no, seq_off) via ONE window."""
-    w = (
-        Window.partitionBy(stratum_col)
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return docs.withColumn(
-        "off", F.coalesce(F.sum(tok_col).over(w), F.lit(0))
-    ).select(
-        id_col,
-        stratum_col,
-        tok_col,
-        F.floor(F.col("off") / budget).alias("seq_no"),
-        (F.col("off") % budget).cast("long").alias("seq_off"),
+def token_counts(docs: DataFrame) -> DataFrame:
+    """The packing input: (doc_id, lang, n_tok), n_tok the whitespace
+    token count of ``text``."""
+    return docs.select(
+        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
     )
 
 
@@ -61,8 +41,8 @@ def pack_offsets_scalable(
     tok_col: str = "n_tok",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Two-pass distributed prefix sum — identical output to
-    ``pack_offsets_window`` without any per-stratum single reducer.
+    """Two-pass distributed prefix sum — the per-stratum running offset
+    without any per-stratum single reducer.
 
     Pass 1: ``repartitionByRange(stratum, id)`` makes partition order
     agree with the global (stratum, id) order, so a stratum's prefix at
@@ -110,8 +90,8 @@ def pack_offsets_scalable(
         run[s] = run.get(s, 0) + row["_sub"]
     # The stratum field keeps the INPUT's type (a hardcoded string type
     # broke non-string strata), and the join is null-safe so the NULL
-    # stratum survives, matching pack_offsets_window's window-partition
-    # semantics. A pyarrow table plans as a JVM-local LocalTableScan:
+    # stratum survives as its own stratum, as in a window partitioned
+    # by the stratum. A pyarrow table plans as a JVM-local LocalTableScan:
     # no Python worker scans it.
     schema = pa.schema([
         ("_bpid", pa.int32()),

@@ -4,14 +4,25 @@
     (keep one per cluster) → sequence packing → snapshot commit +
     audit metrics
 
-Every stage is an oracle-checked operator from the registry
-(plans/queries.py); this module only composes them, so correctness is
-inherited. The output is what a pretraining data loader consumes: a
-``mixture_docs`` snapshot table of surviving documents with their
-packed (seq_no, seq_off) positions, plus a ``metrics`` table recording
-how many documents each stage dropped and why (per-rule rejection
-counts) — the auditability a 100-TB cleaning run needs before anyone
-commits to a drop.
+Every stage runs the operator that a DuckDB-checked registry entry
+(plans/queries.py) runs, so this module only composes them:
+
+- quality filter   — ``quality_filter_exprs``, ``text_quality_filter``;
+- decontamination  — ``contamination_overlap``, ``decontaminate_ngram``;
+- exact dedup      — ``exact_dedup``, ``dedup_exact``;
+- near-dup cluster — ``near_dup_components``, ``dedup_cluster_cc``
+                     (its pairs are ``dedup_ngram_jaccard``'s);
+- packing          — ``token_counts`` → ``pack_offsets_scalable``,
+                     ``pack_sequences_scalable``.
+
+The entries run them over the fixture's documents with the parameters
+of the constants below; the composition itself (document conservation,
+min-id survivors, audit counts) is pinned by tests/test_mixture.py. The output is what a pretraining data
+loader consumes: a ``mixture_docs`` snapshot table of surviving
+documents with their packed (seq_no, seq_off) positions, plus a
+``metrics`` table recording how many documents each stage dropped and
+why (per-rule rejection counts) — the auditability a 100-TB cleaning
+run needs before anyone commits to a drop.
 
 Scale shape: the quality filter is narrow (no shuffle);
 decontamination broadcasts the (tiny) eval shingle set; clustering
@@ -28,13 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import quality_filter_exprs
-from ..operators.connected_components import connected_components
 from ..operators.dedup import (
     contamination_overlap,
-    ngram_jaccard_pairs,
-    normalize_text_expr,
+    exact_dedup,
+    near_dup_components,
 )
-from ..operators.packing import pack_offsets_scalable
+from ..operators.packing import pack_offsets_scalable, token_counts
 from ..sources.lakehouse import SnapshotTable
 from .pipeline import METRICS_SCHEMA
 
@@ -108,32 +118,23 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     decon = train.join(contaminated, "doc_id", "left_anti")
     n_decon = n_train - n_contaminated
 
-    # 3a. EXACT dedup first — one hash groupBy on normalized text keeps
-    #     the min-id copy. Exact copies dominate real crawl dup mass
+    # 3a. EXACT dedup first — exact_dedup keeps the min-id copy of each
+    #     normalized text. Exact copies dominate real crawl dup mass
     #     (mirrors, recrawls); removing them here costs one narrow
     #     shuffle and shrinks the expensive shingle pass's input, so
     #     the near-dup stage only pays for genuinely fuzzy matches.
-    keep_ids = (
-        decon.select("doc_id", normalize_text_expr("text").alias("_norm"))
-        .groupBy("_norm")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    #     Column pruning drops exact_dedup's unused n_copies count.
+    keep_ids = exact_dedup(decon).select(F.col("keep_id").alias("doc_id"))
     exact_kept = decon.join(keep_ids, "doc_id", "left_semi").localCheckpoint(
         eager=False
     )
 
-    # 3b. near-dup clustering — pairs on shingle blocking keys, closed
-    #     under transitivity, keep the component-minimum representative
-    #     (similarity is not transitive: pair-wise dropping under-removes)
-    pairs = ngram_jaccard_pairs(
-        exact_kept, threshold=DUP_THRESHOLD, n=DUP_NGRAM
-    )
-    cc = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    drop = cc.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
+    # 3b. near-dup clustering — keep each cluster's component-minimum
+    #     representative, drop the rest
+    drop = (
+        near_dup_components(exact_kept, threshold=DUP_THRESHOLD, n=DUP_NGRAM)
+        .filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("doc_id"))
     )
     # drop ⊆ exact_kept (CC nodes are pair endpoints), so stage sizes
     # derive from this TINY frame: n_exact_kept = n_output + n_dropped
@@ -141,12 +142,7 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     unique = exact_kept.join(drop, "doc_id", "left_anti")
 
     # 4. sequence packing over survivors (two-pass scalable form)
-    packed = pack_offsets_scalable(
-        unique.select(
-            "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
-        ),
-        budget=PACK_BUDGET,
-    )
+    packed = pack_offsets_scalable(token_counts(unique), budget=PACK_BUDGET)
 
     # 5. one commit: the mixture table + the audit metrics
     out_tbl = SnapshotTable(cfg.out, "mixture_docs")

@@ -770,16 +770,10 @@ def q_dedup_cluster_cc(spark, sf):
     # cardinality (pairs at >=0.3 Jaccard are rare by construction), so
     # even a 100-TB corpus' edge list fits the distributed path's
     # per-round shuffles comfortably.
-    from ..operators.connected_components import connected_components
-    from ..operators.dedup import ngram_jaccard_pairs
+    from ..operators.dedup import near_dup_components
 
     docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    pairs = ngram_jaccard_pairs(
-        _spread(spark, docs), threshold=0.3, n=2, max_shingle_freq=1000
-    )
-    cc = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    cc = near_dup_components(_spread(spark, docs), threshold=0.3, n=2)
     return (
         docs.select("doc_id")
         .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
@@ -787,29 +781,6 @@ def q_dedup_cluster_cc(spark, sf):
             "doc_id",
             F.coalesce("component", "doc_id").alias("cluster_id"),
         )
-    )
-
-
-# GPT-style pretraining packing: concatenate a stratum's documents in
-# deterministic order, chunk every `budget` tokens; a document's
-# sequence id is its starting offset div the budget (documents MAY
-# straddle a boundary, exactly as concat-then-chunk training data
-# does). seq_off is the in-sequence start position. ONE oracle shared
-# by both physical forms — output is plan-independent by contract.
-_PACK_ORACLE = (
-    "WITH d AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS "
-    "n_tok FROM documents), "
-    "o AS (SELECT doc_id, lang, n_tok, coalesce(sum(n_tok) OVER ("
-    "PARTITION BY lang ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING "
-    "AND 1 PRECEDING), 0) AS off FROM d) "
-    "SELECT doc_id, lang, n_tok, CAST(floor(off / 512) AS BIGINT) AS "
-    "seq_no, CAST(off % 512 AS BIGINT) AS seq_off FROM o"
-)
-
-
-def _docs_with_tokens(spark, sf):
-    return T(spark, sf, "documents").select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
     )
 
 
@@ -888,33 +859,34 @@ def q_text_quality_filter(spark, sf):
     )
 
 
-@q("pack_sequences", _PACK_ORACLE)
-def q_pack_sequences(spark, sf):
-    # One window shuffle partitioned by stratum (lang). At 100 TB the
-    # running sum within a stratum is a sequential dependency by
-    # DEFINITION — any packer that assigns global offsets must order the
-    # stratum. Spark's window spills sorted runs per partition, so the
-    # bound is disk, not memory; with more strata (the real case:
-    # lang × source × shard) the partitions multiply and the window
-    # parallelizes. pack_sequences_scalable below is the giant-stratum
-    # path.
-    from ..operators.packing import pack_offsets_window
-
-    return pack_offsets_window(_docs_with_tokens(spark, sf), budget=512)
-
-
-@q("pack_sequences_scalable", _PACK_ORACLE)
+@q(
+    "pack_sequences_scalable",
+    # GPT-style pretraining packing: concatenate a stratum's documents
+    # in deterministic order, chunk every `budget` tokens; a document's
+    # sequence id is its starting offset div the budget (documents MAY
+    # straddle a boundary, exactly as concat-then-chunk training data
+    # does). seq_off is the in-sequence start position. The oracle is
+    # the definition: one running sum per stratum.
+    "WITH d AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS "
+    "n_tok FROM documents), "
+    "o AS (SELECT doc_id, lang, n_tok, coalesce(sum(n_tok) OVER ("
+    "PARTITION BY lang ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING "
+    "AND 1 PRECEDING), 0) AS off FROM d) "
+    "SELECT doc_id, lang, n_tok, CAST(floor(off / 512) AS BIGINT) AS "
+    "seq_no, CAST(off % 512 AS BIGINT) AS seq_off FROM o",
+)
 def q_pack_sequences_scalable(spark, sf):
-    # The SAME packing as a two-pass distributed prefix sum: range
-    # exchange on (lang, doc_id), bounded (partitions × strata)
-    # subtotal collect, broadcast base offsets, per-partition running
-    # sums only — no reducer ever sorts a whole stratum. Identical
-    # output under the identical oracle proves the plan swap is
-    # semantics-free (operators/packing.py docstring for the
-    # partition-id pinning subtlety).
-    from ..operators.packing import pack_offsets_scalable
+    # Two-pass distributed prefix sum: range exchange on (lang,
+    # doc_id), bounded (partitions × strata) subtotal collect,
+    # broadcast base offsets, per-partition running sums only — no
+    # reducer ever sorts a whole stratum, yet the output equals the
+    # oracle's per-stratum window (operators/packing.py docstring for
+    # the partition-id pinning subtlety).
+    from ..operators.packing import pack_offsets_scalable, token_counts
 
-    return pack_offsets_scalable(_docs_with_tokens(spark, sf), budget=512)
+    return pack_offsets_scalable(
+        token_counts(T(spark, sf, "documents")), budget=512
+    )
 
 
 # ------------------------------------------------ KG extraction stages

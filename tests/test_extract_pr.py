@@ -134,26 +134,42 @@ def test_independent_oracle_diverges_on_injected_bug():
         assert fn not in src, fn
 
 
+def _stdout_of(code: str) -> str:
+    """stdout of ``code`` run in a fresh interpreter at the repo root."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        check=True,
+    )
+    return out.stdout.strip()
+
 
 def test_extract_path_never_imports_pandas():
     """Every module of the package, the extraction crossing and the page
     generator a Python worker loads among them, leaves pandas
     unimported: no stage plans a pandas crossing (``import pandas``
     costs a fresh worker about half a second)."""
-    import os
-    import subprocess
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
+    out = _stdout_of(
         "import importlib, pkgutil, sys\n"
         "import relation_extraction_spark as pkg\n"
         "for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + '.'):\n"
         "    importlib.import_module(m.name)\n"
         "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pandas'))\n"
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
-        check=True,
+    assert out == "[]", out
+
+
+def test_kg_pipeline_never_imports_mixture_dedup():
+    """The KG stages take ``normalize_text_expr`` from
+    ``functions.textstats``: importing the stage DAG leaves the
+    mixture's dedup operators unloaded."""
+    out = _stdout_of(
+        "import sys\n"
+        "import relation_extraction_spark.plans.pipeline\n"
+        "print('relation_extraction_spark.operators.dedup' in sys.modules)\n"
     )
-    assert out.stdout.strip() == "[]", out.stdout
+    assert out == "False", out

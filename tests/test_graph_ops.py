@@ -149,7 +149,8 @@ def test_lsh_similarity_edges_recall_vs_exact_trigram_jaccard(spark):
     pages = golden_pages(500, seed=42)
     raw = [m[2] for m in golden_mentions(pages)]
     raw += [s for t in golden_triples(pages) for s in (t[2], t[4])]
-    # normalize_text_expr: lower, trim, collapse whitespace runs
+    # functions/textstats.normalize_text_expr: lower, trim, collapse
+    # whitespace runs
     forms = sorted({re.sub(r"\s+", " ", r.lower().strip()) for r in raw} - {""})
 
     def trigrams(form):

@@ -1,5 +1,5 @@
-"""Training-mixture ops (round 4): quality filter, decontamination,
-near-dup clustering, sequence packing, and the job that composes them.
+"""Training-mixture ops: quality filter, decontamination, near-dup
+clustering, sequence packing, and the job that composes them.
 
 Cross-engine value parity is pinned by test_parity (these queries are
 oracle-backed); these tests pin the SEMANTIC properties the oracle
@@ -9,6 +9,7 @@ invariance, offset contiguity.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from relation_extraction_spark.plans.queries import QUERIES
@@ -18,14 +19,42 @@ def _run(name, spark, sf_dir):
     return QUERIES[name][0](spark, sf_dir).toPandas()
 
 
+def pack_offsets_window(
+    docs: DataFrame,
+    budget: int,
+    stratum_col: str = "lang",
+    id_col: str = "doc_id",
+    tok_col: str = "n_tok",
+) -> DataFrame:
+    """Reference packing: the per-stratum running offset as ONE window
+    partitioned by the stratum — the definition the oracle states, which
+    operators/packing.pack_offsets_scalable must reproduce."""
+    w = (
+        Window.partitionBy(stratum_col)
+        .orderBy(id_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return docs.withColumn(
+        "off", F.coalesce(F.sum(tok_col).over(w), F.lit(0))
+    ).select(
+        id_col,
+        stratum_col,
+        tok_col,
+        F.floor(F.col("off") / budget).alias("seq_no"),
+        (F.col("off") % budget).cast("long").alias("seq_off"),
+    )
+
+
 class TestMixturePipeline:
-    """End-to-end composition (plans/mixture.py): every stage is an
-    oracle-checked operator, so these tests pin the COMPOSITION —
-    conservation of documents across stages, snapshot output, audit
-    metrics — not per-op semantics."""
+    """End-to-end composition (plans/mixture.py): every stage runs the
+    operator a DuckDB-checked registry entry runs (exact_dedup as
+    dedup_exact, near_dup_components as dedup_cluster_cc, ...), so these
+    tests pin the COMPOSITION — conservation of documents across stages,
+    snapshot output, audit metrics, and which copy of a planted
+    duplicate survives — not per-op semantics."""
 
     @staticmethod
-    def _run(spark, sf_dir, tmp_path):
+    def _run(spark, sf_dir, tmp_path, input_parquet=None):
         from relation_extraction_spark.plans.mixture import (
             MixtureConfig,
             run_mixture,
@@ -36,7 +65,7 @@ class TestMixturePipeline:
             spark,
             MixtureConfig(
                 out=out,
-                input_parquet=f"{sf_dir}/documents.parquet",
+                input_parquet=input_parquet or f"{sf_dir}/documents.parquet",
                 run_id="t",
             ),
         )
@@ -77,6 +106,61 @@ class TestMixturePipeline:
         out, _ = self._run(spark, sf_dir, tmp_path)
         df = SnapshotTable(out, "mixture_docs").read(spark).toPandas()
         assert (df.doc_id >= 10).all()
+
+    def test_planted_duplicates_drop_all_but_min_id(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Exact copies that differ only in case and whitespace, and a
+        near-dup chain A~B~C with A!~C, in an input that passes the
+        quality filter and decontamination: each group keeps only its
+        min id."""
+        from relation_extraction_spark.sources.lakehouse import SnapshotTable
+
+        def words(tag, k):
+            # k tokens unique to the tag, with "the" every fifth so
+            # the low_stopword rule (ratio >= 0.04) passes
+            return [
+                ("the" if j % 5 == 0 else f"{tag}word{j}") for j in range(k)
+            ]
+
+        def text(*segments):
+            return " ".join(t for seg in segments for t in seg)
+
+        def jaccard(a, b):
+            ga, gb = (set(zip(t.split(" "), t.split(" ")[1:])) for t in (a, b))
+            return len(ga & gb) / len(ga | gb)
+
+        X, Y, Z, W = (words(t, 20) for t in ("xa", "yb", "zc", "wd"))
+        A, B, C = text(X, Y), text(Y, Z), text(Z, W)
+        assert jaccard(A, B) == jaccard(B, C) == 19 / 59 >= 0.3
+        assert jaccard(A, C) == 0
+        exact = text(words("ex", 40))
+        rows = [
+            (0, text(words("eval", 40))),      # eval doc, shares nothing
+            (12, text(words("solo", 40))),     # unique, survives
+            # exact copies: case, doubled and edge whitespace only
+            (21, "  " + exact.upper() + " "),
+            (17, exact.replace(" ", "  ")),
+            (30, exact.title()),
+            # near-dup chain; B has the largest id, so dropping the
+            # larger id of each pair would keep C, and only the
+            # transitive closure drops it
+            (45, B),
+            (40, A),
+            (42, C),
+        ]
+        path = str(tmp_path / "planted.parquet")
+        spark.createDataFrame(
+            [(i, "en", t) for i, t in rows],
+            "doc_id long, lang string, text string",
+        ).write.parquet(path)
+        out, c = self._run(spark, sf_dir, tmp_path, input_parquet=path)
+        assert c["n_input"] == 8 and c["n_quality_dropped"] == 0
+        assert c["n_eval_held_out"] == 1 and c["n_contaminated"] == 0
+        assert c["n_exact_dup_dropped"] == 2
+        assert c["n_near_dup_dropped"] == 2
+        df = SnapshotTable(out, "mixture_docs").read(spark).toPandas()
+        assert c["n_output"] == 3 and sorted(df.doc_id) == [12, 17, 40]
 
 
 class TestDedupClusterCC:
@@ -119,7 +203,7 @@ class TestDedupClusterCC:
 
 class TestPackSequences:
     def test_offsets_are_stratum_prefix_sums(self, spark, sf_dir):
-        df = _run("pack_sequences", spark, sf_dir)
+        df = _run("pack_sequences_scalable", spark, sf_dir)
         for _lang, g in df.groupby("lang"):
             g = g.sort_values("doc_id")
             run = 0
@@ -132,9 +216,10 @@ class TestPackSequences:
                 run += n_tok
 
     def test_partitioning_invariance(self, spark, sf_dir):
-        # the window orders by (lang, doc_id) — a total order — so the
-        # packing cannot depend on input split layout
-        base = _run("pack_sequences", spark, sf_dir)
+        # the range exchange and the running sums order by (lang,
+        # doc_id) — a total order — so the packing cannot depend on
+        # input split layout
+        base = _run("pack_sequences_scalable", spark, sf_dir)
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         from relation_extraction_spark.plans import queries as Q
 
@@ -143,7 +228,7 @@ class TestPackSequences:
             Q.T = lambda s, sf, name: (
                 docs.repartition(7) if name == "documents" else orig(s, sf, name)
             )
-            shuffled = _run("pack_sequences", spark, sf_dir)
+            shuffled = _run("pack_sequences_scalable", spark, sf_dir)
         finally:
             Q.T = orig
         key = ["doc_id"]
@@ -158,7 +243,6 @@ class TestPackScalable:
         # every row still packs identically, but across partitions
         from relation_extraction_spark.operators.packing import (
             pack_offsets_scalable,
-            pack_offsets_window,
         )
 
         docs = (
@@ -217,13 +301,12 @@ class TestPackScalable:
         }
 
     def test_null_and_nonstring_strata_match_window_form(self, spark):
-        # round-5 ADVICE: the scalable form used to hardcode a string
-        # stratum schema (int stratum -> createDataFrame error) and an
-        # inner equi-join (NULL stratum silently dropped). Both shapes
-        # must now pack identically to the window form.
+        # the scalable form once hardcoded a string stratum schema (int
+        # stratum -> createDataFrame error) and an inner equi-join (NULL
+        # stratum silently dropped). Both shapes must pack identically
+        # to the window form.
         from relation_extraction_spark.operators.packing import (
             pack_offsets_scalable,
-            pack_offsets_window,
         )
 
         # NULL stratum rows survive and pack as their own group
@@ -301,7 +384,6 @@ class TestPackEquivalenceProperty:
     def test_scalable_equals_window_form(self, spark, rows):
         from relation_extraction_spark.operators.packing import (
             pack_offsets_scalable,
-            pack_offsets_window,
         )
 
         docs = spark.createDataFrame(

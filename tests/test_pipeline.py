@@ -265,6 +265,42 @@ def test_stage_outputs_flow(spark, uninterrupted):
     assert bad_src == 0 and bad_dst == 0
 
 
+def test_canonicalize_distributed_cc_equals_driver_path(
+    spark, uninterrupted, monkeypatch
+):
+    """The golden run's CC input is a few hundred edges, so every
+    pipeline run solves it with the driver union-find. Forcing the
+    large-star/small-star path over the same committed tables gives the
+    same mapping and entities, row for row."""
+    import functools
+
+    from relation_extraction_spark.operators import canonicalize as C
+    from relation_extraction_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    mentions, linked, triples = (
+        SnapshotTable(uninterrupted, t).read(spark)
+        for t in ("mentions", "linked_mentions", "triples")
+    )
+
+    def run():
+        entities, mapping = C.canonicalize(mentions, linked, triples)
+        return (
+            sorted(map(tuple, mapping.collect())),
+            sorted(map(tuple, entities.collect())),
+        )
+
+    driver_mapping, driver_entities = run()
+    # some forms merge, so the comparison covers non-trivial components
+    assert any(r[1] != r[2] for r in driver_mapping)
+    distributed = functools.partial(connected_components, driver_threshold=0)
+    monkeypatch.setattr(C, "connected_components", distributed)
+    dist_mapping, dist_entities = run()
+    assert dist_mapping == driver_mapping
+    assert dist_entities == driver_entities
+
+
 def test_extract_quarantines_text_mismatches(spark, tmp_path):
     """D1 quarantine: a page whose stored ``text`` differs from
     ``extract_text_py(html)``, and a page whose ``text`` is NULL, are each

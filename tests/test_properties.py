@@ -92,8 +92,8 @@ def test_ngram_short_docs_no_crash(spark):
     from pyspark.sql import functions as F
 
     from relation_extraction_spark.operators.dedup import (
+        hashed_shingles_frame,
         ngram_jaccard_pairs,
-        ngram_shingles,
     )
 
     docs = spark.createDataFrame(
@@ -101,26 +101,27 @@ def test_ngram_short_docs_no_crash(spark):
          (4, "exactly three tokens"), (5, "two words")],
         "doc_id long, text string",
     )
-    # ngram_shingles: empty ARRAY (not NULL) below n, 1 shingle at n
-    got = {
-        r.doc_id: r.sh
-        for r in docs.select(
-            "doc_id", ngram_shingles("text", 3).alias("sh")
-        ).collect()
-    }
-    assert got[0] == [] and got[1] == [] and got[2] == []
-    assert got[3] == ["exactly three tokens"]
+    # hashed_shingles_frame: no rows below n, 1 shingle at n
+    got = {}
+    for r in hashed_shingles_frame(docs, 3).collect():
+        got.setdefault(r.doc, []).append(r.sh)
+    assert 0 not in got and 1 not in got and 2 not in got
+    want = spark.range(1).select(
+        F.xxhash64(F.array(*map(F.lit, ["exactly", "three", "tokens"])))
+    ).first()[0]
+    assert got[3] == [want]
     # the pair path: short docs contribute nothing; the >=n twins match
     pairs = {
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(docs, threshold=0.9, n=3).collect()
     }
     assert pairs == {(3, 4)}
-    # null text must also survive (split(NULL) -> NULL tokens)
+    # null text must also survive (split(NULL) -> NULL tokens): zero
+    # shingles, no error
     nulldocs = spark.createDataFrame(
         [(9, None)], "doc_id long, text string"
     )
-    assert nulldocs.select(ngram_shingles("text", 3)).count() == 1
+    assert hashed_shingles_frame(nulldocs, 3).count() == 0
 
 
 def test_ngram_pair_plan_narrow_rows_and_exact_once(spark):

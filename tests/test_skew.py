@@ -40,8 +40,8 @@ def test_ngram_jaccard_hot_shingle_cap_bounds_candidates(spark):
     blow up the inverted-index join when the (default-on) hot-shingle
     cap is active (round-1 judge finding: the cap used to default off)."""
     from relation_extraction_spark.operators.dedup import (
+        hashed_shingles_frame,
         ngram_jaccard_pairs,
-        ngram_shingles,
     )
 
     hot = "click here to subscribe now"
@@ -49,9 +49,7 @@ def test_ngram_jaccard_hot_shingle_cap_bounds_candidates(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     # exact form: every doc pairs with every other through the hot
     # shingles -> O(n^2) candidate rows feed the groupBy
-    sh = docs.select(
-        "doc_id", F.explode(ngram_shingles("text", 2)).alias("sh")
-    )
+    sh = hashed_shingles_frame(docs, 2)
     hot_fanout = (
         sh.groupBy("sh").count().agg(F.sum(F.col("count") * F.col("count"))).first()[0]
     )
