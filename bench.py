@@ -82,10 +82,6 @@ def _run() -> dict:
         "dedup_ngram_jaccard",
         "dedup_cluster_cc",
         "pack_sequences_scalable",
-        "join_sort_merge",
-        "join_broadcast",
-        "agg_hash_groupby",
-        "window_running_sum",
     ]
     for name in bench_queries:
         fn, _sql = QUERIES[name]

@@ -22,14 +22,17 @@ EN_STOPWORDS = [
 
 
 def normalize_text_expr(col: str | Column) -> Column:
-    """Lower-case, trim, collapse whitespace runs to one space."""
+    """Lower-case, collapse each whitespace run to one space, then trim:
+    copies of a text that differ only in whitespace, at the edges too,
+    normalize alike."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
 def _tokens(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(F.lower(c), " ")
+    """Lower-cased tokens between whitespace runs. NULL text gives NULL,
+    and an empty or blank text one empty token."""
+    return F.split(normalize_text_expr(text_col), " ")
 
 
 def stopword_ratio_expr(text_col: str | Column, stopwords: list[str]) -> Column:
@@ -41,7 +44,7 @@ def stopword_ratio_expr(text_col: str | Column, stopwords: list[str]) -> Column:
 
 
 def token_count_expr(text_col: str | Column) -> Column:
-    """Whitespace token count."""
+    """Whitespace token count: a run of whitespace separates two tokens."""
     return F.size(_tokens(text_col))
 
 

@@ -24,13 +24,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
+from ..functions.textstats import token_count_expr
+
 
 def token_counts(docs: DataFrame) -> DataFrame:
     """The packing input: (doc_id, lang, n_tok), n_tok the whitespace
-    token count of ``text``."""
-    return docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
-    )
+    token count of ``text`` (the quality filter's count)."""
+    return docs.select("doc_id", "lang", token_count_expr("text").alias("n_tok"))
 
 
 def pack_offsets_scalable(

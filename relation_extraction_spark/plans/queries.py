@@ -3,8 +3,17 @@
 
 ``QUERIES[name] = (spark_fn, oracle_sql_or_None)``. The driver runs the
 Spark side at sf0.01 and diffs against the DuckDB oracle (row-count +
-schema + order-insensitive value-hash). Conventions that make the hash
-comparable (SURVEY.md §5.1):
+schema + order-insensitive value-hash). Every entry reads the
+``documents`` fixture, except ``join_asof_latest``, which runs the
+ingest stage's as-of dedup over ``events``. Three groups:
+
+- plain-SQL operators over ``documents`` (projection, filter, grouping
+  sets, sort/limit, set ops, scalar functions);
+- the mixture job's operators (dedup, decontamination, quality filter,
+  packing), each against a DuckDB statement of its definition;
+- the KG extraction and pipeline stages, rows-only.
+
+Conventions that make the hash comparable (SURVEY.md §5.1):
 
 - every computed column is aliased IDENTICALLY on both sides;
 - double aggregates are ``round()``-ed on both sides (FP sums are not
@@ -16,19 +25,23 @@ comparable (SURVEY.md §5.1):
   identical rows.
 
 Scale notes are inline per query: each Spark plan is written the way it
-should run at 100 TB (broadcast hints on dims, partial aggs).
+should run at 100 TB (broadcast the small side, partial aggs).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
+
+# functions/textstats.normalize_text_expr over ``text``: the dedup key
+# and, split on ' ', the whitespace tokens
+_NORM_TEXT = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
 def q(name: str, sql: str | None = None):
@@ -106,115 +119,7 @@ def q_conditional(spark, sf):
     )
 
 
-@q(
-    "null_handling",
-    "SELECT coalesce(nullif(event_type, 'error'), 'unknown') AS etype, "
-    "count(*) AS n FROM events GROUP BY 1",
-)
-def q_nulls(spark, sf):
-    return (
-        T(spark, sf, "events")
-        .select(
-            F.coalesce(
-                F.nullif(F.col("event_type"), F.lit("error")), F.lit("unknown")
-            ).alias("etype")
-        )
-        .groupBy("etype")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 # ---------------------------------------------------------------- §2.3 joins
-
-
-@q(
-    "join_broadcast",
-    "SELECT p_brand, count(*) AS n, "
-    "round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue "
-    "FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand",
-)
-def q_join_broadcast(spark, sf):
-    # J1: dimension side explicitly broadcast — at 100 TB the fact side
-    # never shuffles for this join.
-    li = T(spark, sf, "lineitem")
-    part = T(spark, sf, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-        )
-    )
-
-
-@q(
-    "join_sort_merge",
-    "SELECT o_orderpriority, count(*) AS n, "
-    "round(sum(l_quantity), 2) AS total_qty "
-    "FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
-    "GROUP BY o_orderpriority",
-)
-def q_join_smj(spark, sf):
-    # J2: large-large equi join; planner picks SMJ/shuffled-hash above the
-    # broadcast threshold, AQE re-plans at runtime.
-    o = T(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
-    li = T(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("total_qty"),
-        )
-    )
-
-
-@q(
-    "join_left_semi",
-    "SELECT o_orderkey, o_orderpriority FROM orders WHERE EXISTS "
-    "(SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)",
-)
-def q_join_semi(spark, sf):
-    o = T(spark, sf, "orders")
-    li = T(spark, sf, "lineitem").filter(F.col("l_quantity") > 45)
-    return o.join(
-        li, o.o_orderkey == li.l_orderkey, "left_semi"
-    ).select("o_orderkey", "o_orderpriority")
-
-
-@q(
-    "join_left_anti",
-    "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS "
-    "(SELECT 1 FROM orders WHERE o_custkey = c_custkey)",
-)
-def q_join_anti(spark, sf):
-    c = T(spark, sf, "customer")
-    o = T(spark, sf, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-@q(
-    "join_left_outer",
-    "SELECT c_mktsegment, count(*) AS n_rows, count(o_orderkey) AS n_orders "
-    "FROM customer LEFT JOIN orders ON c_custkey = o_custkey "
-    "GROUP BY c_mktsegment",
-)
-def q_join_outer(spark, sf):
-    c = T(spark, sf, "customer").select("c_custkey", "c_mktsegment")
-    o = T(spark, sf, "orders").select("o_custkey", "o_orderkey")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("o_orderkey").alias("n_orders"),
-        )
-    )
 
 
 @q(
@@ -241,22 +146,6 @@ def q_join_asof(spark, sf):
 
 
 @q(
-    "agg_hash_groupby",
-    "SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value "
-    "FROM events GROUP BY event_type",
-)
-def q_agg(spark, sf):
-    return (
-        T(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-
-
-@q(
     "agg_distinct",
     "SELECT DISTINCT lang, source FROM documents",
 )
@@ -279,28 +168,6 @@ def q_collect_set(spark, sf):
             F.array_join(F.array_sort(F.collect_set("source")), "|").alias(
                 "sources"
             )
-        )
-    )
-
-
-@q(
-    "agg_stats",
-    "SELECT l_returnflag, count(*) AS n, round(avg(l_quantity), 4) AS avg_qty, "
-    "round(min(l_extendedprice), 2) AS min_price, "
-    "round(max(l_extendedprice), 2) AS max_price, "
-    "round(sum(l_extendedprice), 2) AS sum_price "
-    "FROM lineitem GROUP BY l_returnflag",
-)
-def q_agg_stats(spark, sf):
-    return (
-        T(spark, sf, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.min("l_extendedprice"), 2).alias("min_price"),
-            F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
         )
     )
 
@@ -342,120 +209,7 @@ def q_cube(spark, sf):
     )
 
 
-@q(
-    "agg_conditional_countif",
-    "SELECT user_id, count(*) AS n, "
-    "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) "
-    "AS n_errors FROM events GROUP BY user_id",
-)
-def q_countif(spark, sf):
-    return (
-        T(spark, sf, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("event_type") == "error", 1).otherwise(0)
-            ).alias("n_errors"),
-        )
-    )
-
-
-# -------------------------------------------------------------- §2.5 windows
-
-
-@q(
-    "window_row_number_top1",
-    "SELECT user_id, event_id, value FROM (SELECT user_id, event_id, value, "
-    "row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) "
-    "AS rn FROM events) WHERE rn = 1",
-)
-def q_window_top1(spark, sf):
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), "event_id")
-    return (
-        T(spark, sf, "events")
-        .select("user_id", "event_id", "value", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-@q(
-    "window_dense_rank",
-    "SELECT event_type, event_id, value FROM (SELECT event_type, event_id, "
-    "value, dense_rank() OVER (PARTITION BY event_type ORDER BY value DESC, "
-    "event_id) AS dr FROM events) WHERE dr <= 3",
-)
-def q_dense_rank(spark, sf):
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
-    return (
-        T(spark, sf, "events")
-        .select(
-            "event_type", "event_id", "value", F.dense_rank().over(w).alias("dr")
-        )
-        .filter(F.col("dr") <= 3)
-        .drop("dr")
-    )
-
-
-@q(
-    "window_lag_gap",
-    "SELECT user_id, event_id, coalesce(CAST(floor((epoch_us(ts) - "
-    "epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) "
-    "/ 1000000.0) AS BIGINT), -1) AS gap_s FROM events",
-)
-def q_lag(spark, sf):
-    # microsecond-exact on both sides, floored identically (unix_timestamp
-    # truncates to seconds per-value and would drift by +-1s vs the oracle)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))  # ntz->ltz, UTC session
-    return T(spark, sf, "events").select(
-        "user_id",
-        "event_id",
-        F.coalesce(
-            F.floor((ep - F.lag(ep).over(w)) / 1000000.0), F.lit(-1)
-        ).alias("gap_s"),
-    )
-
-
-@q(
-    "window_running_sum",
-    "SELECT user_id, event_id, round(sum(value) OVER (PARTITION BY user_id "
-    "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    "), 2) AS running FROM events",
-)
-def q_running_sum(spark, sf):
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return T(spark, sf, "events").select(
-        "user_id", "event_id", F.round(F.sum("value").over(w), 2).alias("running")
-    )
-
-
-@q(
-    "window_ntile",
-    "SELECT decile, count(*) AS n, round(min(value), 2) AS lo, "
-    "round(max(value), 2) AS hi FROM (SELECT value, ntile(10) OVER "
-    "(ORDER BY value, event_id) AS decile FROM events) GROUP BY decile",
-)
-def q_ntile(spark, sf):
-    w = Window.orderBy("value", "event_id")
-    return (
-        T(spark, sf, "events")
-        .select("value", F.ntile(10).over(w).alias("decile"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("value"), 2).alias("lo"),
-            F.round(F.max("value"), 2).alias("hi"),
-        )
-    )
-
-
-# ----------------------------------------------------- §2.6 sort/limit/top-k
+# ---------------------------------------------------------- §2.6 sort/limit
 
 
 @q(
@@ -471,43 +225,6 @@ def q_sort(spark, sf):
         .select("doc_id", "n_chars")
         .orderBy(F.desc("n_chars"), "doc_id")
         .limit(50)
-    )
-
-
-@q(
-    "topk_orders",
-    "SELECT o_orderkey, round(o_totalprice, 2) AS price FROM orders "
-    "ORDER BY o_totalprice DESC, o_orderkey LIMIT 20",
-)
-def q_topk(spark, sf):
-    return (
-        T(spark, sf, "orders")
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("price"))
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(20)
-    )
-
-
-@q(
-    "topk_per_group",
-    "SELECT o_orderpriority, o_orderkey, round(o_totalprice, 2) AS price "
-    "FROM (SELECT *, row_number() OVER (PARTITION BY o_orderpriority ORDER "
-    "BY o_totalprice DESC, o_orderkey) AS rn FROM orders) WHERE rn <= 2",
-)
-def q_topk_group(spark, sf):
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    return (
-        T(spark, sf, "orders")
-        .select(
-            "o_orderpriority",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("price"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 2)
-        .drop("rn")
     )
 
 
@@ -537,20 +254,6 @@ def q_intersect(spark, sf):
         d.filter(F.col("lang") == "en")
         .select("source")
         .intersect(d.filter(F.col("lang") == "fr").select("source"))
-    )
-
-
-@q(
-    "set_except",
-    "SELECT user_id FROM events WHERE event_type = 'purchase' EXCEPT "
-    "SELECT user_id FROM events WHERE event_type = 'error'",
-)
-def q_except(spark, sf):
-    e = T(spark, sf, "events")
-    return (
-        e.filter(F.col("event_type") == "purchase")
-        .select("user_id")
-        .subtract(e.filter(F.col("event_type") == "error").select("user_id"))
     )
 
 
@@ -601,48 +304,6 @@ def q_md5(spark, sf):
 
 
 @q(
-    "fn_datetime",
-    "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_s, "
-    "CAST(extract(dow FROM ts) AS INT) AS dow, count(*) AS n "
-    "FROM events GROUP BY 1, 2",
-)
-def q_datetime(spark, sf):
-    # Spark dayofweek: 1=Sunday..7=Saturday; DuckDB dow: 0=Sunday..6
-    return (
-        T(spark, sf, "events")
-        .select(
-            F.date_format(F.date_trunc("hour", "ts"), TS_FMT_SPARK).alias(
-                "hour_s"
-            ),
-            (F.dayofweek("ts") - 1).alias("dow"),
-        )
-        .groupBy("hour_s", "dow")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@q(
-    "fn_math",
-    "SELECT l_orderkey, l_linenumber, round(ln(1 + l_extendedprice), 6) AS "
-    "log_price, round(greatest(l_tax, l_discount), 2) AS max_rate, "
-    "CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil FROM lineitem "
-    "WHERE l_orderkey < 1000",
-)
-def q_math(spark, sf):
-    return (
-        T(spark, sf, "lineitem")
-        .filter(F.col("l_orderkey") < 1000)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.round(F.log1p("l_extendedprice"), 6).alias("log_price"),
-            F.round(F.greatest("l_tax", "l_discount"), 2).alias("max_rate"),
-            F.ceil("l_quantity").alias("qty_ceil"),
-        )
-    )
-
-
-@q(
     "fn_array_ops",
     "SELECT doc_id, len(string_split(text, ' ')) AS n_tokens, "
     "len(list_distinct(string_split(text, ' '))) AS n_distinct "
@@ -657,23 +318,6 @@ def q_array(spark, sf):
     )
 
 
-@q(
-    "fn_json",
-    "SELECT event_type, round(avg(CAST(json_extract_string(props, '$.k') "
-    "AS INT)), 4) AS avg_k FROM events GROUP BY event_type",
-)
-def q_json(spark, sf):
-    return (
-        T(spark, sf, "events")
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(F.round(F.avg("k"), 4).alias("avg_k"))
-    )
-
-
 # ============================================================ chunk 2:
 # training-data pipeline operators (dedup, text analysis) + KG
 # extraction stages (rows-only where non-SQL).
@@ -682,8 +326,7 @@ def q_json(spark, sf):
 @q(
     "dedup_exact",
     "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM (SELECT "
-    "doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS _norm "
-    "FROM documents) GROUP BY _norm",
+    f"doc_id, {_NORM_TEXT} AS _norm FROM documents) GROUP BY _norm",
 )
 def q_dedup_exact(spark, sf):
     from ..operators.dedup import exact_dedup
@@ -821,7 +464,7 @@ def _quality_filter_oracle() -> str:
     sw_list = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     return (
         "WITH d AS (SELECT doc_id, lang, text, "
-        "string_split(lower(text), ' ') AS t FROM documents), "
+        f"string_split({_NORM_TEXT}, ' ') AS t FROM documents), "
         "s AS (SELECT doc_id, lang, len(t) AS n_toks, "
         "length(text)::DOUBLE / greatest(len(t), 1) AS mean_wl, "
         f"len(list_filter(t, x -> x IN ({sw_list})))::DOUBLE / "
@@ -867,8 +510,8 @@ def q_text_quality_filter(spark, sf):
     # straddle a boundary, exactly as concat-then-chunk training data
     # does). seq_off is the in-sequence start position. The oracle is
     # the definition: one running sum per stratum.
-    "WITH d AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS "
-    "n_tok FROM documents), "
+    f"WITH d AS (SELECT doc_id, lang, len(string_split({_NORM_TEXT}, ' ')) "
+    "AS n_tok FROM documents), "
     "o AS (SELECT doc_id, lang, n_tok, coalesce(sum(n_tok) OVER ("
     "PARTITION BY lang ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING "
     "AND 1 PRECEDING), 0) AS off FROM d) "
@@ -988,37 +631,7 @@ def q_kg_edges(spark, sf):
     return materialize_edges(triples, mapping)
 
 
-# ---------------------------------------------- §2 gap-fill: A5/A6/A7/O4
-
-
-@q("agg_approx_distinct")  # rows-only: HLL sketches differ across engines
-def q_approx_distinct(spark, sf):
-    # A5 — approx_count_distinct: the at-scale form of COUNT(DISTINCT)
-    # (single pass, mergeable HLL sketch, no exact-dedup shuffle).
-    return (
-        T(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
-    )
-
-
-@q(
-    "agg_percentile",
-    "SELECT event_type, round(quantile_cont(value, 0.5), 4) AS p50, "
-    "round(quantile_cont(value, 0.95), 4) AS p95 "
-    "FROM events GROUP BY event_type",
-)
-def q_percentile(spark, sf):
-    # A6 — exact interpolated percentile (Spark `percentile` == DuckDB
-    # quantile_cont); percentile_approx is the 100 TB variant, same API.
-    return (
-        T(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(
-            F.round(F.percentile("value", F.lit(0.5)), 4).alias("p50"),
-            F.round(F.percentile("value", F.lit(0.95)), 4).alias("p95"),
-        )
-    )
+# ---------------------------------------------- §2 gap-fill: A7
 
 
 @q(
@@ -1032,16 +645,4 @@ def q_grouping_sets(spark, sf):
     return spark.sql(
         "SELECT lang, source, count(*) AS n FROM gs_documents "
         "GROUP BY GROUPING SETS ((lang), (source), ())"
-    )
-
-
-@q("sort_within_partitions")  # rows-only: partition-local order isn't SQL-visible
-def q_sort_within_partitions(spark, sf):
-    # O4 — write-time clustering: rows ordered inside each partition
-    # without a global shuffle (parquet row-group locality at scale).
-    return (
-        T(spark, sf, "orders")
-        .repartition(8, "o_custkey")
-        .sortWithinPartitions("o_custkey", "o_orderdate")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
     )

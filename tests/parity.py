@@ -14,7 +14,7 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = ["customer", "part", "orders", "lineitem", "events", "documents"]
+TABLES = ["documents", "events"]
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

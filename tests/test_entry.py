@@ -9,14 +9,12 @@ from relation_extraction_spark.plans.queries import QUERIES
 
 # registry entries with no DuckDB oracle (non-SQL-expressible ops)
 ROWS_ONLY = {
-    "agg_approx_distinct",
     "kg_canonicalize_entities",
     "kg_detect_mentions",
     "kg_extract_triples",
     "kg_link_mentions",
     "kg_materialize_edges",
     "kg_segment_sentences",
-    "sort_within_partitions",
 }
 
 

@@ -149,9 +149,9 @@ def test_lsh_similarity_edges_recall_vs_exact_trigram_jaccard(spark):
     pages = golden_pages(500, seed=42)
     raw = [m[2] for m in golden_mentions(pages)]
     raw += [s for t in golden_triples(pages) for s in (t[2], t[4])]
-    # functions/textstats.normalize_text_expr: lower, trim, collapse
-    # whitespace runs
-    forms = sorted({re.sub(r"\s+", " ", r.lower().strip()) for r in raw} - {""})
+    # functions/textstats.normalize_text_expr: lower, collapse
+    # whitespace runs, trim
+    forms = sorted({re.sub(r"\s+", " ", r.lower()).strip(" ") for r in raw} - {""})
 
     def trigrams(form):
         # char_trigrams_expr: distinct 3-char windows of the padded form

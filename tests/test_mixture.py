@@ -337,6 +337,41 @@ class TestPackScalable:
         assert a == b and len(b) == 6
 
 
+class TestWhitespaceCopies:
+    """Four copies of one 40-token text that differ only in whitespace:
+    as is, every space doubled, tab-prefixed and newline-suffixed. Exact
+    dedup, packing and the quality filter see one text."""
+
+    @staticmethod
+    def _copies(spark) -> DataFrame:
+        text = " ".join(
+            "the" if j % 5 == 0 else f"token{j}" for j in range(40)
+        )
+        copies = [text, text.replace(" ", "  "), "\t" + text, text + "\n"]
+        return spark.createDataFrame(
+            [(i, "en", t) for i, t in enumerate(copies)],
+            "doc_id long, lang string, text string",
+        )
+
+    def test_copies_form_one_exact_dedup_group(self, spark):
+        from relation_extraction_spark.operators.dedup import exact_dedup
+
+        groups = exact_dedup(self._copies(spark)).collect()
+        assert [(r.keep_id, r.n_copies) for r in groups] == [(0, 4)]
+
+    def test_copies_count_the_same_tokens_and_verdict(self, spark):
+        from relation_extraction_spark.functions.textstats import (
+            quality_filter_exprs,
+        )
+        from relation_extraction_spark.operators.packing import token_counts
+
+        docs = self._copies(spark)
+        assert [r.n_tok for r in token_counts(docs).orderBy("doc_id").collect()] == [40] * 4
+        keep, reasons = quality_filter_exprs("text", "lang")
+        verdicts = {tuple(r) for r in docs.select(keep, reasons).collect()}
+        assert len(verdicts) == 1, verdicts
+
+
 class TestQualityFilter:
     def test_reasons_consistent_with_keep(self, spark, sf_dir):
         df = _run("text_quality_filter", spark, sf_dir)

@@ -122,7 +122,7 @@ def _check_linked_against_python(spark, out: str) -> None:
     ) == Counter(gold)
     dictionary = entity_dictionary(spark).collect()
     for r in linked:
-        alias = re.sub(r"[ \t\n\x0b\f\r]+", " ", r.mention.strip(" ").lower())
+        alias = re.sub(r"[ \t\n\x0b\f\r]+", " ", r.mention.lower()).strip(" ")
         eid, score = _python_link(alias, dictionary)
         assert r.entity_id == eid, r
         assert (r.score is None) if score is None else abs(r.score - score) <= 1e-6, r
@@ -342,3 +342,17 @@ def test_extract_quarantines_text_mismatches(spark, tmp_path):
         for i, s in enumerate(segment_py(p["text"]))
     )
     assert _table_rows(spark, out, "sentences") == want
+
+
+def test_second_job_of_a_session_reuses_generated_classes(spark, tmp_path):
+    """The codegen cache holds a whole pipeline job's generated classes,
+    so the second of two back-to-back jobs in one session compiles only
+    the few whose code differs. With Spark's default cache of 100 entries
+    it compiled nearly every class of the job again."""
+    cfg = dict(CFG, pages=20)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()  # one count per class compiled
+    run_pipeline(spark, PipelineConfig(out=str(tmp_path / "a"), **cfg))
+    before = compiles.getCount()
+    run_pipeline(spark, PipelineConfig(out=str(tmp_path / "b"), **cfg))
+    assert compiles.getCount() - before <= 30
