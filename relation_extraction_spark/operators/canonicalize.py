@@ -27,6 +27,9 @@ from ..functions.textstats import normalize_text_expr
 from .connected_components import connected_components
 
 _MERSENNE31 = (1 << 31) - 1
+# LSH shape: MINHASH_K values per form, cut into LSH_BANDS bands; the
+# permutations are seeded with MINHASH_SEED
+MINHASH_K, LSH_BANDS, MINHASH_SEED = 16, 8, 42
 
 
 # A form's char trigrams are its 3-char windows once padded with two
@@ -91,8 +94,8 @@ def dictionary_edges(linked: DataFrame) -> DataFrame:
     )
 
 
-def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for k hash permutations (splitmix64).
+def _perm_params() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for the MinHash permutations (splitmix64).
 
     Sized so (a * h32 + b) stays inside a signed 64-bit long for any
     32-bit ``h32``: a < 2^30, b < 2^31 -> product < 2^62. This keeps the
@@ -100,8 +103,8 @@ def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     the earlier decimal(38,0) formulation was interpreter-bound and
     allocation-heavy under 32 concurrent tasks."""
     out = []
-    x = seed & 0xFFFFFFFFFFFFFFFF
-    for _ in range(k):
+    x = MINHASH_SEED
+    for _ in range(MINHASH_K):
         pair = []
         for _ in range(2):
             x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
@@ -114,36 +117,31 @@ def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_aggs(h_col: str, k: int, seed: int = 42) -> list[Column]:
-    """k min-hash aggregate expressions over a 32-bit hash column —
-    pure long arithmetic, map-side partial min. Each aggregate is ONE
-    parsed SQL string: k Column-built expressions cost ~6 Python->JVM
-    round trips apiece in plan construction."""
+def minhash_aggs(h_col: str) -> list[Column]:
+    """MINHASH_K min-hash aggregate expressions over a 32-bit hash
+    column — pure long arithmetic, map-side partial min. Each aggregate
+    is ONE parsed SQL string: Column-built expressions cost ~6
+    Python->JVM round trips apiece in plan construction."""
     return [
         F.expr(f"min(pmod({a}L * {h_col} + {b}L, {_MERSENNE31}L)) AS mh_{i}")
-        for i, (a, b) in enumerate(_perm_params(k, seed))
+        for i, (a, b) in enumerate(_perm_params())
     ]
 
 
-def lsh_similarity_edges(
-    forms: DataFrame,
-    threshold: float = 0.7,
-    k: int = 16,
-    bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
+def lsh_similarity_edges(forms: DataFrame, threshold: float = 0.7) -> DataFrame:
     """MinHash-LSH blocked + exact-verified string-similarity edges.
 
-    One aggregate per form computes its k MinHash values over the hashed
-    char trigrams (JVM aggregations — no UDF) and collects the set of its
-    exact int64 trigram codes. Signatures are banded into ``bands``
-    buckets; only bucket collisions are joined, and each candidate pair
-    is verified with |A∩B| / (|A|+|B|−|A∩B|) over the code sets.
+    One aggregate per form computes its MINHASH_K MinHash values over the
+    hashed char trigrams (JVM aggregations — no UDF) and collects the set
+    of its exact int64 trigram codes. Signatures are banded into
+    LSH_BANDS buckets; only bucket collisions are joined, and each
+    candidate pair is verified with |A∩B| / (|A|+|B|−|A∩B|) over the
+    code sets.
     """
-    rows = k // bands
+    rows = MINHASH_K // LSH_BANDS
     band_hashes = ", ".join(
         f"xxhash64({b}, " + ", ".join(f"mh_{i}" for i in range(b * rows, (b + 1) * rows)) + ")"
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     )
     # linking's trigram windows; the hash and code are parsed SQL (as in
     # minhash_aggs): a Column call is a Python->JVM round trip apiece
@@ -158,7 +156,7 @@ def lsh_similarity_edges(
             f"{_TRIGRAM_CODE} AS c",
         )
         .groupBy("form_id")
-        .agg(*minhash_aggs("h", k, seed), F.expr("collect_set(c) AS codes"))
+        .agg(*minhash_aggs("h"), F.expr("collect_set(c) AS codes"))
     )
     banded = sig.selectExpr("form_id", f"posexplode(array({band_hashes})) AS (band, bh)")
     cand = (

@@ -26,24 +26,19 @@ from ..functions.textstats import normalize_text_expr
 from .connected_components import connected_components
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One representative (min id) per exact normalized text."""
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """One representative (min ``doc_id``) per exact normalized ``text``."""
     return (
-        df.select(F.col(id_col), normalize_text_expr(text_col).alias("_norm"))
+        df.select("doc_id", normalize_text_expr("text").alias("_norm"))
         .groupBy("_norm")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
         .select("keep_id", "n_copies")
     )
 
 
-def hashed_shingles_frame(
-    docs: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exploded (doc, sh) frame of a doc's distinct word n-grams, hashed
-    to longs.
+def hashed_shingles_frame(docs: DataFrame, n: int) -> DataFrame:
+    """Exploded (doc, sh) frame of a ``doc_id``'s distinct word n-grams of
+    ``text``, hashed to longs.
 
     ``xxhash64`` runs over the sliced token ARRAY inside the map stage,
     so the n-gram string is never materialized and the widest shuffle
@@ -58,11 +53,9 @@ def hashed_shingles_frame(
     sequence(1, 0) is DESCENDING [1, 0] in Spark (step defaults to -1
     when start > stop) and slice(toks, 0, n) is a runtime error.
     """
-    toks = F.split(
-        F.col(text_col) if isinstance(text_col, str) else text_col, " "
-    )
+    toks = F.split(F.col("text"), " ")
     return docs.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -81,8 +74,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
     """Capped inverted-index Jaccard>=threshold pairs (EXACT when
@@ -135,9 +126,7 @@ def ngram_jaccard_pairs(
     # times. A LAZY localCheckpoint materializes the exploded frame
     # once in the block manager (memory-with-disk-spill) and truncates
     # the lineage for every downstream branch.
-    sh = hashed_shingles_frame(docs, n, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    sh = hashed_shingles_frame(docs, n).localCheckpoint(eager=False)
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("sh")
@@ -184,13 +173,7 @@ def near_dup_components(docs: DataFrame, threshold: float, n: int) -> DataFrame:
     )
 
 
-def contamination_overlap(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contamination_overlap(corpus: DataFrame, eval_docs: DataFrame, n: int = 4) -> DataFrame:
     """Train/eval contamination check: corpus docs sharing ≥1 word
     n-gram with ANY eval document, with the distinct-shingle overlap
     count — the canonical pre-training decontamination pass (strip
@@ -206,18 +189,14 @@ def contamination_overlap(
     (rare) matching rows. Shingles are hashed to 8-byte longs on both
     sides (hashed_shingles_frame).
     """
-    ev = F.broadcast(
-        hashed_shingles_frame(eval_docs, n, id_col, text_col)
-        .select("sh")
-        .distinct()
-    )
+    ev = F.broadcast(hashed_shingles_frame(eval_docs, n).select("sh").distinct())
     return (
-        hashed_shingles_frame(corpus, n, id_col, text_col)
+        hashed_shingles_frame(corpus, n)
         .join(ev, "sh")
         # plain count, not count_distinct: the corpus frame is already
         # distinct per (doc, sh) via array_distinct, and the eval side
         # is .distinct() — a distinct-agg here would add an Expand
         # shuffle for nothing
-        .groupBy(F.col("doc").alias(id_col))
+        .groupBy(F.col("doc").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

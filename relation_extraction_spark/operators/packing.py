@@ -34,23 +34,18 @@ def token_counts(docs: DataFrame) -> DataFrame:
 
 
 def pack_offsets_scalable(
-    docs: DataFrame,
-    budget: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    tok_col: str = "n_tok",
-    num_partitions: int | None = None,
+    docs: DataFrame, budget: int, num_partitions: int | None = None
 ) -> DataFrame:
     """Two-pass distributed prefix sum — the per-stratum running offset
-    without any per-stratum single reducer.
+    without any per-stratum single reducer, over ``token_counts``'
+    (doc_id, lang, n_tok): the stratum is ``lang``.
 
     Pass 1: ``repartitionByRange(stratum, id)`` makes partition order
     agree with the global (stratum, id) order, so a stratum's prefix at
     a partition boundary is the sum of its subtotals in lower-numbered
     partitions. The (partition × stratum) subtotal table is collected —
     bounded by partition COUNT × stratum count, never by rows (the same
-    bounded-driver-state argument as the CC union-find threshold and
-    the IVF training sample).
+    bounded-driver-state argument as the CC union-find threshold).
 
     Pass 2: the cumulated base offsets broadcast-join back, and the
     running sum runs in a window partitioned by (partition id, stratum)
@@ -64,13 +59,13 @@ def pack_offsets_scalable(
     """
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     d = (
-        docs.repartitionByRange(n, stratum_col, id_col)
+        docs.repartitionByRange(n, "lang", "doc_id")
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
     subtot = (
-        d.groupBy("_pid", stratum_col)
-        .agg(F.sum(tok_col).alias("_sub"))
+        d.groupBy("_pid", "lang")
+        .agg(F.sum("n_tok").alias("_sub"))
         .collect()
     )
     base: dict[tuple, int] = {}
@@ -79,13 +74,9 @@ def pack_offsets_scalable(
     # Python can't compare None to str, so key on (is-not-null, value).
     for row in sorted(
         subtot,
-        key=lambda r: (
-            r[stratum_col] is not None,
-            r[stratum_col],
-            r["_pid"],
-        ),
+        key=lambda r: (r["lang"] is not None, r["lang"], r["_pid"]),
     ):
-        s = row[stratum_col]
+        s = row["lang"]
         base[(row["_pid"], s)] = run.get(s, 0)
         run[s] = run.get(s, 0) + row["_sub"]
     # The stratum field keeps the INPUT's type (a hardcoded string type
@@ -95,7 +86,7 @@ def pack_offsets_scalable(
     # no Python worker scans it.
     schema = pa.schema([
         ("_bpid", pa.int32()),
-        ("_bstr", to_arrow_type(docs.schema[stratum_col].dataType)),
+        ("_bstr", to_arrow_type(docs.schema["lang"].dataType)),
         ("_base", pa.int64()),
     ])
     rows = [{"_bpid": p, "_bstr": s, "_base": o} for (p, s), o in base.items()]
@@ -103,24 +94,24 @@ def pack_offsets_scalable(
         docs.sparkSession.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
     )
     w = (
-        Window.partitionBy("_pid", stratum_col)
-        .orderBy(id_col)
+        Window.partitionBy("_pid", "lang")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
         d.join(
             base_df,
             (F.col("_pid") == F.col("_bpid"))
-            & F.col(stratum_col).eqNullSafe(F.col("_bstr")),
+            & F.col("lang").eqNullSafe(F.col("_bstr")),
         )
         .withColumn(
             "off",
-            F.coalesce(F.sum(tok_col).over(w), F.lit(0)) + F.col("_base"),
+            F.coalesce(F.sum("n_tok").over(w), F.lit(0)) + F.col("_base"),
         )
         .select(
-            id_col,
-            stratum_col,
-            tok_col,
+            "doc_id",
+            "lang",
+            "n_tok",
             F.floor(F.col("off") / budget).alias("seq_no"),
             (F.col("off") % budget).cast("long").alias("seq_off"),
         )

@@ -16,12 +16,7 @@ from pyspark.sql import functions as F
 from ..operators.extract import triples_from_pages
 
 
-def top_triples(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 20,
-    lang: str = "en",
-) -> DataFrame:
+def top_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pages = docs.select(
         F.col("doc_id").cast("string").alias("url"), "text", "lang"
@@ -31,10 +26,10 @@ def top_triples(
     # fixture the total extraction work is ~1 CPU-second, so a spreading
     # shuffle costs more in task scheduling + Python-worker spin-up than
     # it buys (measured 0.77s unspread vs 2.0-2.3s spread at local[32]).
-    triples = triples_from_pages(pages, lang=lang)
+    triples = triples_from_pages(pages)
     return (
         triples.groupBy("subj", "pred", "obj")
         .agg(F.count(F.lit(1)).alias("weight"))
         .orderBy(F.desc("weight"), "subj", "pred", "obj")
-        .limit(k)
+        .limit(20)
     )

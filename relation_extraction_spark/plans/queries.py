@@ -1,16 +1,15 @@
-"""Oracle-checked query registry — one entry per implemented operator
+"""Oracle-checked query registry — one entry per operator a job runs
 (SURVEY.md §2; driver contract __spark_entry__.py).
 
 ``QUERIES[name] = (spark_fn, oracle_sql_or_None)``. The driver runs the
 Spark side at sf0.01 and diffs against the DuckDB oracle (row-count +
 schema + order-insensitive value-hash). Every entry reads the
 ``documents`` fixture, except ``join_asof_latest``, which runs the
-ingest stage's as-of dedup over ``events``. Three groups:
+ingest stage's as-of dedup over ``events``. Two groups:
 
-- plain-SQL operators over ``documents`` (projection, filter, grouping
-  sets, sort/limit, set ops, scalar functions);
-- the mixture job's operators (dedup, decontamination, quality filter,
-  packing), each against a DuckDB statement of its definition;
+- the ingest as-of dedup and the mixture job's operators (dedup,
+  decontamination, quality filter, packing), each against a DuckDB
+  statement of its definition;
 - the KG extraction and pipeline stages, rows-only.
 
 Conventions that make the hash comparable (SURVEY.md §5.1):
@@ -36,8 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 
 # functions/textstats.normalize_text_expr over ``text``: the dedup key
 # and, split on ' ', the whitespace tokens
@@ -67,59 +64,7 @@ def _spread(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism * mult)
 
 
-# ---------------------------------------------------------------- §2.2 P1-P4
-
-
-@q(
-    "project_compute",
-    "SELECT doc_id, lang, upper(source) AS source_u, n_chars + 1 AS n_chars1 "
-    "FROM documents",
-)
-def q_project(spark, sf):
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        "lang",
-        F.upper("source").alias("source_u"),
-        (F.col("n_chars") + 1).alias("n_chars1"),
-    )
-
-
-@q(
-    "filter_predicate",
-    "SELECT doc_id, n_chars FROM documents "
-    "WHERE lang = 'en' AND n_chars BETWEEN 100 AND 400",
-)
-def q_filter(spark, sf):
-    # predicate is sargable -> pushed into the parquet scan (verified in
-    # tests/test_plans.py); at 100 TB this is row-group pruning.
-    return (
-        T(spark, sf, "documents")
-        .filter((F.col("lang") == "en") & F.col("n_chars").between(100, 400))
-        .select("doc_id", "n_chars")
-    )
-
-
-@q(
-    "conditional_case",
-    "SELECT CASE WHEN n_chars < 150 THEN 'small' WHEN n_chars < 350 THEN "
-    "'medium' ELSE 'large' END AS size_bucket, count(*) AS n "
-    "FROM documents GROUP BY 1",
-)
-def q_conditional(spark, sf):
-    return (
-        T(spark, sf, "documents")
-        .select(
-            F.when(F.col("n_chars") < 150, "small")
-            .when(F.col("n_chars") < 350, "medium")
-            .otherwise("large")
-            .alias("size_bucket")
-        )
-        .groupBy("size_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-# ---------------------------------------------------------------- §2.3 joins
+# ------------------------------------------ DuckDB-checked pipeline operators
 
 
 @q(
@@ -137,190 +82,9 @@ def q_join_asof(spark, sf):
     return latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id").select(
         "user_id",
         "event_id",
-        F.date_format("ts", TS_FMT_SPARK).alias("ts_s"),
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
         "value",
     )
-
-
-# ----------------------------------------------------------- §2.4 aggregates
-
-
-@q(
-    "agg_distinct",
-    "SELECT DISTINCT lang, source FROM documents",
-)
-def q_distinct(spark, sf):
-    return T(spark, sf, "documents").select("lang", "source").distinct()
-
-
-@q(
-    "agg_collect_set",
-    "SELECT lang, array_to_string(list_sort(list(DISTINCT source)), '|') "
-    "AS sources FROM documents GROUP BY lang",
-)
-def q_collect_set(spark, sf):
-    # A4: collect_set order is nondeterministic -> array_sort before join
-    # (determinism rule, SURVEY.md §7.4.5).
-    return (
-        T(spark, sf, "documents")
-        .groupBy("lang")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("source")), "|").alias(
-                "sources"
-            )
-        )
-    )
-
-
-@q(
-    "agg_rollup",
-    "SELECT coalesce(lang, 'ALL') AS lang_g, coalesce(source, 'ALL') AS "
-    "source_g, count(*) AS n FROM documents GROUP BY ROLLUP(lang, source)",
-)
-def q_rollup(spark, sf):
-    return (
-        T(spark, sf, "documents")
-        .rollup("lang", "source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("lang", F.lit("ALL")).alias("lang_g"),
-            F.coalesce("source", F.lit("ALL")).alias("source_g"),
-            "n",
-        )
-    )
-
-
-@q(
-    "agg_cube",
-    "SELECT coalesce(lang, 'ALL') AS lang_g, coalesce(source, 'ALL') AS "
-    "source_g, CAST(sum(n_chars) AS BIGINT) AS chars "
-    "FROM documents GROUP BY CUBE(lang, source)",
-)
-def q_cube(spark, sf):
-    return (
-        T(spark, sf, "documents")
-        .cube("lang", "source")
-        .agg(F.sum("n_chars").alias("chars"))
-        .select(
-            F.coalesce("lang", F.lit("ALL")).alias("lang_g"),
-            F.coalesce("source", F.lit("ALL")).alias("source_g"),
-            "chars",
-        )
-    )
-
-
-# ---------------------------------------------------------- §2.6 sort/limit
-
-
-@q(
-    "sort_global_limit",
-    "SELECT doc_id, n_chars FROM documents "
-    "ORDER BY n_chars DESC, doc_id LIMIT 50",
-)
-def q_sort(spark, sf):
-    # O1/O2: orderBy+limit compiles to TakeOrderedAndProject — no global
-    # sort materialization at scale.
-    return (
-        T(spark, sf, "documents")
-        .select("doc_id", "n_chars")
-        .orderBy(F.desc("n_chars"), "doc_id")
-        .limit(50)
-    )
-
-
-# ------------------------------------------------------------- §2.7 set ops
-
-
-@q(
-    "set_union_all",
-    "SELECT doc_id, 'long' AS tag FROM documents WHERE n_chars > 300 "
-    "UNION ALL SELECT doc_id, 'en' AS tag FROM documents WHERE lang = 'en'",
-)
-def q_union(spark, sf):
-    d = T(spark, sf, "documents")
-    a = d.filter(F.col("n_chars") > 300).select("doc_id", F.lit("long").alias("tag"))
-    b = d.filter(F.col("lang") == "en").select("doc_id", F.lit("en").alias("tag"))
-    return a.unionByName(b)
-
-
-@q(
-    "set_intersect",
-    "SELECT source FROM documents WHERE lang = 'en' INTERSECT "
-    "SELECT source FROM documents WHERE lang = 'fr'",
-)
-def q_intersect(spark, sf):
-    d = T(spark, sf, "documents")
-    return (
-        d.filter(F.col("lang") == "en")
-        .select("source")
-        .intersect(d.filter(F.col("lang") == "fr").select("source"))
-    )
-
-
-# ---------------------------------------------------- §2.8 scalar functions
-
-
-@q(
-    "fn_string_normalize",
-    "SELECT doc_id, upper(substr(text, 1, 8)) AS head8, "
-    "length(trim(text)) AS len, concat(lang, ':', source) AS tag "
-    "FROM documents",
-)
-def q_string(spark, sf):
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        F.upper(F.substring("text", 1, 8)).alias("head8"),
-        F.length(F.trim(F.col("text"))).alias("len"),
-        F.concat_ws(":", "lang", "source").alias("tag"),
-    )
-
-
-@q(
-    "fn_regexp",
-    "SELECT doc_id, regexp_extract(text, '([a-z]+)', 1) AS first_word "
-    "FROM documents WHERE text LIKE '%key%'",
-)
-def q_regexp(spark, sf):
-    return (
-        T(spark, sf, "documents")
-        .filter(F.col("text").like("%key%"))
-        .select(
-            "doc_id",
-            F.regexp_extract("text", r"([a-z]+)", 1).alias("first_word"),
-        )
-    )
-
-
-@q(
-    "fn_hash_md5",
-    "SELECT doc_id, md5(text) AS text_md5 FROM documents",
-)
-def q_md5(spark, sf):
-    # F4: md5 is the cross-engine-stable content hash (xxhash64 used for
-    # internal ids is Spark-only -> covered rows-only elsewhere).
-    return T(spark, sf, "documents").select(
-        "doc_id", F.md5(F.col("text").cast("binary")).alias("text_md5")
-    )
-
-
-@q(
-    "fn_array_ops",
-    "SELECT doc_id, len(string_split(text, ' ')) AS n_tokens, "
-    "len(list_distinct(string_split(text, ' '))) AS n_distinct "
-    "FROM documents",
-)
-def q_array(spark, sf):
-    toks = F.split(F.col("text"), " ")
-    return T(spark, sf, "documents").select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct"),
-    )
-
-
-# ============================================================ chunk 2:
-# training-data pipeline operators (dedup, text analysis) + KG
-# extraction stages (rows-only where non-SQL).
 
 
 @q(
@@ -531,7 +295,6 @@ def q_pack_sequences_scalable(spark, sf):
         token_counts(T(spark, sf, "documents")), budget=512
     )
 
-
 # ------------------------------------------------ KG extraction stages
 # (non-SQL-expressible: pattern extraction is the mapInArrow compiler;
 # driver records rows-only checks — SURVEY.md §2 note)
@@ -629,20 +392,3 @@ def q_kg_edges(spark, sf):
     linked = link_mentions(mentions, entity_dictionary(spark))
     _entities, mapping = canonicalize(mentions, linked, triples)
     return materialize_edges(triples, mapping)
-
-
-# ---------------------------------------------- §2 gap-fill: A7
-
-
-@q(
-    "agg_grouping_sets",
-    "SELECT lang, source, count(*) AS n FROM documents "
-    "GROUP BY GROUPING SETS ((lang), (source), ()) ",
-)
-def q_grouping_sets(spark, sf):
-    # A7 — explicit grouping sets (finer control than rollup/cube)
-    T(spark, sf, "documents").createOrReplaceTempView("gs_documents")
-    return spark.sql(
-        "SELECT lang, source, count(*) AS n FROM gs_documents "
-        "GROUP BY GROUPING SETS ((lang), (source), ())"
-    )

@@ -19,27 +19,22 @@ def _run(name, spark, sf_dir):
     return QUERIES[name][0](spark, sf_dir).toPandas()
 
 
-def pack_offsets_window(
-    docs: DataFrame,
-    budget: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    tok_col: str = "n_tok",
-) -> DataFrame:
+def pack_offsets_window(docs: DataFrame, budget: int) -> DataFrame:
     """Reference packing: the per-stratum running offset as ONE window
-    partitioned by the stratum — the definition the oracle states, which
-    operators/packing.pack_offsets_scalable must reproduce."""
+    partitioned by the stratum ``lang`` — the definition the oracle
+    states, which operators/packing.pack_offsets_scalable must
+    reproduce."""
     w = (
-        Window.partitionBy(stratum_col)
-        .orderBy(id_col)
+        Window.partitionBy("lang")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return docs.withColumn(
-        "off", F.coalesce(F.sum(tok_col).over(w), F.lit(0))
+        "off", F.coalesce(F.sum("n_tok").over(w), F.lit(0))
     ).select(
-        id_col,
-        stratum_col,
-        tok_col,
+        "doc_id",
+        "lang",
+        "n_tok",
         F.floor(F.col("off") / budget).alias("seq_no"),
         (F.col("off") % budget).cast("long").alias("seq_off"),
     )
@@ -323,16 +318,11 @@ class TestPackScalable:
         # integer stratum column round-trips through the broadcast base
         docs_i = spark.createDataFrame(
             [(i, i % 2, 7) for i in range(6)],
-            "doc_id long, bucket int, n_tok long",
+            "doc_id long, lang int, n_tok long",
         )
-        a = sorted(
-            pack_offsets_window(docs_i, budget=10, stratum_col="bucket")
-            .collect()
-        )
+        a = sorted(pack_offsets_window(docs_i, budget=10).collect())
         b = sorted(
-            pack_offsets_scalable(
-                docs_i, budget=10, stratum_col="bucket", num_partitions=3
-            ).collect()
+            pack_offsets_scalable(docs_i, budget=10, num_partitions=3).collect()
         )
         assert a == b and len(b) == 6
 

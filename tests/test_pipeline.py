@@ -38,12 +38,31 @@ CFG = dict(pages=N, seed=42, skew=0.2, dup_frac=0.1, run_id="t")
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+# Spark jobs per stage of the golden run, the counts measured when the
+# budget was set (local[4], 8 shuffle partitions). A change that lowers
+# a count lowers its bound; one that raises it says why.
+STAGE_JOB_BUDGET = {
+    "ingest": 2, "extract": 4, "link": 2, "canonicalize": 19, "materialize": 8, "metrics": 2,
+}
+
+
 @pytest.fixture(scope="module")
-def uninterrupted_run(spark, tmp_path_factory) -> tuple[str, dict]:
-    """One uninterrupted run of CFG — (root, per-stage infos) — shared
-    read-only by the tests below."""
+def uninterrupted_run(spark, tmp_path_factory) -> tuple[str, dict, dict]:
+    """One uninterrupted run of CFG — (root, per-stage infos, Spark jobs
+    per stage) — shared read-only by the tests below. The stages run as
+    Pipeline.run runs them, each in its own job group."""
     out = str(tmp_path_factory.mktemp("uninterrupted") / "out")
-    return out, run_pipeline(spark, PipelineConfig(out=out, **CFG))
+    p = Pipeline(spark, PipelineConfig(out=out, **CFG))
+    sc = spark.sparkContext
+    info, jobs = {}, {}
+    for s in STAGES:
+        sc.setJobGroup(f"golden-{s}", s)
+        info[s] = getattr(p, f"stage_{s}")()
+        jobs[s] = len(sc.statusTracker().getJobIdsForGroup(f"golden-{s}"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+    p.flush_metrics()
+    return out, info, jobs
 
 
 @pytest.fixture(scope="module")
@@ -113,6 +132,11 @@ def _python_link(alias: str, dictionary: list) -> tuple:
     return eid, score
 
 
+def _norm_form(mention: str) -> str:
+    # functions/textstats.normalize_text_expr
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", mention.lower()).strip(" ")
+
+
 def _check_linked_against_python(spark, out: str) -> None:
     linked = SnapshotTable(out, "linked_mentions").read(spark).collect()
     gold = golden_mentions(golden_pages(N, seed=42, skew=0.2, dup_frac=0.1))
@@ -122,14 +146,13 @@ def _check_linked_against_python(spark, out: str) -> None:
     ) == Counter(gold)
     dictionary = entity_dictionary(spark).collect()
     for r in linked:
-        alias = re.sub(r"[ \t\n\x0b\f\r]+", " ", r.mention.lower()).strip(" ")
-        eid, score = _python_link(alias, dictionary)
+        eid, score = _python_link(_norm_form(r.mention), dictionary)
         assert r.entity_id == eid, r
         assert (r.score is None) if score is None else abs(r.score - score) <= 1e-6, r
 
 
 def test_full_pipeline_and_resume(spark, tmp_path, uninterrupted_run):
-    ref, info = uninterrupted_run
+    ref, info, _jobs = uninterrupted_run
     # resumed below: work on a copy of the shared run
     out = str(tmp_path / "full")
     shutil.copytree(ref, out)
@@ -168,6 +191,44 @@ def test_full_pipeline_and_resume(spark, tmp_path, uninterrupted_run):
         assert info2[s].get("skipped"), s
     assert _metric_rows(spark, out) == metric_rows
     assert _lineage_sums(spark, out) == lineage
+
+
+def test_cooccurrence_edges_match_python_definition(spark, uninterrupted):
+    """co_occurs_with edges against their definition over the pure-Python
+    mentions: each distinct (url, sent_id, canonical_id) occurrence, with
+    forms mapped through the committed mapping, pairs with every other
+    canonical id of the same url within 2 sentences; an unordered pair
+    of occurrences counts once (src < dst), repeated mentions of one
+    entity in one sentence once."""
+    mapping = {
+        r.form: r.canonical_id
+        for r in SnapshotTable(uninterrupted, "mapping").read(spark).collect()
+    }
+    gold = golden_mentions(golden_pages(N, seed=42, skew=0.2, dup_frac=0.1))
+    occurrences: dict[str, set] = {}
+    for url, sent_id, mention, _start, _end in gold:
+        cid = mapping.get(_norm_form(mention))
+        if cid is not None:
+            occurrences.setdefault(url, set()).add((sent_id, cid))
+    want = Counter()
+    for occ in occurrences.values():
+        for s1, e1 in occ:
+            for s2, e2 in occ:
+                if abs(s1 - s2) <= 2 and e1 < e2:
+                    want[(e1, e2)] += 1
+    edges = SnapshotTable(uninterrupted, "edges").read(spark)
+    got = Counter(
+        (r.src_id, r.dst_id, r.weight)
+        for r in edges.filter(F.col("pred") == "co_occurs_with").collect()
+    )
+    assert want and got == Counter((e1, e2, w) for (e1, e2), w in want.items())
+
+
+def test_stage_spark_jobs_within_budget(uninterrupted_run):
+    """Each stage of the golden run runs at most its budgeted Spark jobs."""
+    _out, _info, jobs = uninterrupted_run
+    assert set(jobs) == set(STAGE_JOB_BUDGET)
+    assert all(jobs[s] <= STAGE_JOB_BUDGET[s] for s in jobs), (jobs, STAGE_JOB_BUDGET)
 
 
 def test_kill_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
