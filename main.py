@@ -21,6 +21,7 @@ from relation_extraction_spark.plans.pipeline import (
     run_pipeline,
 )
 from relation_extraction_spark.session import get_spark
+from relation_extraction_spark.sources.lakehouse import SnapshotTable
 
 
 def main() -> None:
@@ -29,7 +30,7 @@ def main() -> None:
         "--job",
         default="kg",
         choices=["kg", "mixture"],
-        help="kg = the 6-stage KG pipeline; mixture = the training-"
+        help="kg = the 5-stage KG pipeline; mixture = the training-"
         "mixture cleaning pipeline (quality filter -> decontaminate -> "
         "exact dedup -> near-dup cluster -> pack; requires "
         "--input-parquet)",
@@ -102,10 +103,9 @@ def main() -> None:
     t0 = time.time()
     info = run_pipeline(spark, cfg, stages)
     wall = time.time() - t0
-    triples = (info.get("metrics") or {}).get("triples_total")
-    if triples is None and "extract" in info:
-        t = info["extract"].get("triples")
-        triples = t["n_rows"] if isinstance(t, dict) else None
+    # the committed triples, whether extract ran or was resumed
+    committed = SnapshotTable(cfg.out, "triples").latest_manifest()
+    triples = committed["n_rows"] if committed else None
     print(
         json.dumps(
             {

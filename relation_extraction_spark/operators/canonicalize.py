@@ -76,21 +76,17 @@ def surface_forms(mentions: DataFrame, triples: DataFrame | None = None) -> Data
 
 
 def dictionary_edges(linked: DataFrame) -> DataFrame:
-    """Star edges among forms the linker resolved to the same entity."""
-    lf = (
-        linked.filter(F.col("entity_id").isNotNull())
-        .select(
-            "entity_id", normalize_text_expr("mention").alias("form")
-        )
-        .distinct()
-        .withColumn("form_id", F.xxhash64("form"))
-    )
-    centers = lf.groupBy("entity_id").agg(F.min("form_id").alias("center"))
+    """Star edges among forms the linker resolved to the same entity, in
+    ONE aggregate: each form points to its entity's minimum form. The
+    link depends only on the normalized alias, so a form links to one
+    entity, and an entity's set is bounded by its dictionary aliases."""
     return (
-        lf.join(centers, "entity_id")
-        .filter(F.col("form_id") != F.col("center"))
-        .select(F.col("form_id").alias("src"), F.col("center").alias("dst"))
-        .distinct()
+        linked.filter(F.col("entity_id").isNotNull())
+        .select("entity_id", F.xxhash64(normalize_text_expr("mention")).alias("form_id"))
+        .groupBy("entity_id")
+        .agg(F.min("form_id").alias("dst"), F.collect_set("form_id").alias("ids"))
+        .select(F.explode("ids").alias("src"), "dst")
+        .filter(F.col("src") != F.col("dst"))
     )
 
 

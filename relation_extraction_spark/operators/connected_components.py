@@ -16,7 +16,7 @@ independent of partitioning.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
@@ -142,10 +142,12 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    e = _canonical_edges(edges).localCheckpoint()
-    sig = _sig(e)
-    if sig[0] <= driver_threshold:
+    # the edge count is observed on the checkpoint's own job
+    counted = Observation()
+    e = _canonical_edges(edges).observe(counted, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    if counted.get["n"] <= driver_threshold:
         return _driver_union_find(e)
+    sig = _sig(e)
     prev = e
     for _ in range(MAX_ROUNDS):
         e2 = _small_star(_large_star(e)).localCheckpoint()

@@ -1,5 +1,5 @@
-"""The stage DAG: ingest -> extract -> link -> canonicalize ->
-materialize -> metrics (SURVEY.md §3.1; BASELINE.json:L6/L14).
+"""The 5-stage DAG: ingest -> extract -> link -> canonicalize ->
+materialize (SURVEY.md §3.1; BASELINE.json:L6/L14).
 
 Each stage reads committed snapshots, computes one DataFrame expression
 and snapshot-commits its outputs (sources/lakehouse.py); its last commit's
@@ -20,7 +20,6 @@ Scale shape per stage (the 1000-executor story):
 - canonicalize: shuffles on band-hash and node id only; CC iterations
                 localCheckpoint to cut lineage.
 - materialize:  two mapping joins (form-hash keys) + one hash agg.
-- metrics:      tiny aggregates, written with the metrics table.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ from ..sources.corpus import PAGES_SCHEMA, synthetic_pages
 from ..sources.dictionary import entity_dictionary
 from ..sources.lakehouse import SnapshotTable
 
-STAGES = ["ingest", "extract", "link", "canonicalize", "materialize", "metrics"]
+STAGES = ["ingest", "extract", "link", "canonicalize", "materialize"]
 # the stages' output tables, in commit order
 DATA_TABLES = [
     "web_pages", "sentences", "triples", "mentions",
@@ -99,7 +98,6 @@ class Pipeline:
             name: SnapshotTable(cfg.out, name)
             for name in DATA_TABLES + ["lineage", "metrics"]
         }
-        self._metrics_stage: dict[str, float] = {}
 
     # ------------------------------------------------------------- plumbing
 
@@ -130,12 +128,12 @@ class Pipeline:
 
     def flush_metrics(self) -> None:
         """Replace-commit the ``metrics`` and ``lineage`` tables, derived
-        from the newest manifest of every data table plus the rows of the
-        metrics stage (if it ran): driver-side, no Spark job. A resumed
-        run derives the same rows as an uninterrupted one, whichever
-        stages it skipped. Lineage has one row per committed data file
-        (a write task's output), ``file`` relative to the pipeline root;
-        ``part_key`` is the file's index within its table."""
+        from the newest manifest of every data table: driver-side, no
+        Spark job. A resumed run derives the same rows as an
+        uninterrupted one, whichever stages it skipped. Lineage has one
+        row per committed data file (a write task's output), ``file``
+        relative to the pipeline root; ``part_key`` is the file's index
+        within its table."""
         metrics, lineage = [], []
         for name in DATA_TABLES:
             m = self.tables[name].latest_manifest()
@@ -164,10 +162,6 @@ class Pipeline:
                 {"metric": k, "value": float(v), "stage": m["stage"], "run_id": run_id}
                 for k, v in rows.items()
             ]
-        metrics += [
-            {"metric": k, "value": v, "stage": "metrics", "run_id": self.cfg.run_id}
-            for k, v in self._metrics_stage.items()
-        ]
         self.tables["metrics"].commit_rows(metrics, METRICS_SCHEMA, stage="run")
         self.tables["lineage"].commit_rows(lineage, LINEAGE_SCHEMA, stage="run")
 
@@ -223,8 +217,9 @@ class Pipeline:
         # quarantined and counted. No repartition: web_pages is
         # committed as n_buckets url-bucketed files, so the scan's input
         # splits are the bucket layout. The frame is persisted once and
-        # the three tables commit from it; the mismatch count is
-        # observed on the sentences write, not counted by its own job.
+        # the three tables commit from it; the mismatch count and the
+        # triples counters are observed on the sentences and triples
+        # writes, not counted by jobs of their own.
         frame = extractions_from_web_pages(
             self.tables["web_pages"].read(self.spark)
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -238,9 +233,23 @@ class Pipeline:
         n_mismatch = audit.get["n"]
         fused = frame.filter(F.col("sent_id").isNotNull())
         triples, mentions = split_extractions(fused)
-        info["triples"] = self._commit("extract", "triples", triples)
+        counters = Observation("triples")
+        # conf summed as an exact decimal: the observed partial sums
+        # merge in task-completion order, so a double sum could differ
+        # in its last bits from run to run
+        info["triples"] = self._commit("extract", "triples", triples.observe(
+            counters,
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("url").alias("docs"),
+            F.sum(F.col("conf").cast("decimal(38,18)")).alias("conf_sum"),
+        ))
+        c = counters.get
         info["mentions"] = self._commit(
-            "extract", "mentions", mentions, t0, text_invariant_mismatches=n_mismatch
+            "extract", "mentions", mentions, t0,
+            text_invariant_mismatches=n_mismatch,
+            triples_total=c["n"],
+            docs_with_triples_approx=c["docs"],
+            avg_conf=float(c["conf_sum"]) / c["n"] if c["n"] else 0.0,
         )
         info["wall_ms"] = _ms_since(t0)
         frame.unpersist()
@@ -298,24 +307,6 @@ class Pipeline:
             ),
             "wall_ms": _ms_since(t0),
         }
-
-    def stage_metrics(self) -> dict:
-        t0 = time.time()
-        triples = self.tables["triples"].read(self.spark)
-        stats = triples.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("url").alias("docs"),
-            F.avg("conf").alias("avg_conf"),
-        ).collect()[0]
-        wall_ms = _ms_since(t0)
-        # written by flush_metrics(), with the rows the manifests carry
-        self._metrics_stage = {
-            "triples_total": float(stats["n"]),
-            "docs_with_triples_approx": float(stats["docs"]),
-            "avg_conf": float(stats["avg_conf"] or 0.0),
-            "metrics_wall_ms": float(wall_ms),
-        }
-        return {"triples_total": stats["n"], "wall_ms": wall_ms}
 
     # ------------------------------------------------------------------ run
 

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from relation_extraction_spark.operators.canonicalize import (
     canonicalize,
+    dictionary_edges,
     lsh_similarity_edges,
 )
 from relation_extraction_spark.operators.connected_components import (
@@ -180,18 +181,46 @@ def test_lsh_similarity_edges_recall_vs_exact_trigram_jaccard(spark):
 
 def test_canonicalize_dictionary_star_edges(spark):
     """Forms the linker resolved to the same entity merge even when
-    string-dissimilar (the Environment's cross-sentence topic merge)."""
+    string-dissimilar (the Environment's cross-sentence topic merge):
+    dictionary_edges points every other form of an entity at the
+    entity's minimum form id, once, as the pure-Python star does."""
+    rows = [
+        ("Big Query Engine", 77), ("BQE", 77), ("BigQuery", 77),
+        ("BQE", 77),  # a repeated mention
+        ("  big   QUERY engine ", 77),  # a case and whitespace variant
+        ("Acme Corp", 5), ("ACME corporation", 5),
+        ("Unknown Thing", None),  # NIL
+    ]
     mentions = spark.createDataFrame(
-        [("u1", 0, "Big Query Engine", 0, 5), ("u1", 1, "BQE", 0, 3)],
+        [("u1", i, m, 0, len(m)) for i, (m, _) in enumerate(rows)],
         "url string, sent_id int, mention string, start int, end int",
     )
     linked = spark.createDataFrame(
-        [("u1", 0, "Big Query Engine", 77, 0.9), ("u1", 1, "BQE", 77, 0.8)],
+        [("u1", i, m, e, None if e is None else 0.9) for i, (m, e) in enumerate(rows)],
         "url string, sent_id int, mention string, entity_id long, score double",
     )
+    forms: dict[int, set[str]] = {}
+    for m, e in rows:
+        if e is not None:
+            forms.setdefault(e, set()).add(" ".join(m.lower().split()))
+    assert sorted(map(len, forms.values())) == [2, 3]
+    form_ids = {
+        r.form: r.form_id
+        for r in spark.createDataFrame([(f,) for fs in forms.values() for f in fs], "form string")
+        .select("form", F.xxhash64("form").alias("form_id"))
+        .collect()
+    }
+    want = []
+    for fs in forms.values():
+        ids = [form_ids[f] for f in fs]
+        want += [(i, min(ids)) for i in ids if i != min(ids)]
+    assert sorted(map(tuple, dictionary_edges(linked).collect())) == sorted(want)
+
     _, mapping = canonicalize(mentions, linked, threshold=0.9)
     canon = {r.form: r.canonical_id for r in mapping.collect()}
-    assert canon["big query engine"] == canon["bqe"]
+    assert canon["big query engine"] == canon["bqe"] == canon["bigquery"]
+    assert canon["acme corp"] == canon["acme corporation"] != canon["bqe"]
+    assert canon["unknown thing"] not in {canon["bqe"], canon["acme corp"]}
 
 
 def test_link_mentions_top1_and_nil(spark):

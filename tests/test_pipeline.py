@@ -13,6 +13,7 @@ import os
 import re
 import shutil
 import signal
+import statistics
 import subprocess
 import sys
 import time
@@ -42,7 +43,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # budget was set (local[4], 8 shuffle partitions). A change that lowers
 # a count lowers its bound; one that raises it says why.
 STAGE_JOB_BUDGET = {
-    "ingest": 2, "extract": 4, "link": 2, "canonicalize": 19, "materialize": 8, "metrics": 2,
+    "ingest": 2, "extract": 4, "link": 2, "canonicalize": 14, "materialize": 8,
 }
 
 
@@ -231,6 +232,24 @@ def test_stage_spark_jobs_within_budget(uninterrupted_run):
     assert all(jobs[s] <= STAGE_JOB_BUDGET[s] for s in jobs), (jobs, STAGE_JOB_BUDGET)
 
 
+def test_triples_counters_match_committed_triples(spark, uninterrupted):
+    """extract observes triples_total, docs_with_triples_approx and
+    avg_conf on its triples write; they describe the committed table
+    (the url count within HyperLogLog++'s default 5% error)."""
+    metrics = {
+        r.metric: r for r in SnapshotTable(uninterrupted, "metrics").read(spark).collect()
+    }
+    triples = SnapshotTable(uninterrupted, "triples").read(spark).select("url", "conf").collect()
+    assert metrics["triples_total"].value == len(triples) > 0
+    mean = statistics.fmean(r.conf for r in triples)
+    assert abs(metrics["avg_conf"].value - mean) <= 1e-12 * mean
+    n_docs = len({r.url for r in triples})
+    assert abs(metrics["docs_with_triples_approx"].value - n_docs) <= 0.05 * n_docs
+    for m in ["triples_total", "docs_with_triples_approx", "avg_conf"]:
+        assert metrics[m].stage == "extract", m
+    assert "metrics_wall_ms" not in metrics
+
+
 def test_kill_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
     """Run stages 1-2, 'crash', resume all -> same outputs as a fresh
     uninterrupted run (checkpoint-resume contract, BASELINE.json:L14)."""
@@ -290,15 +309,17 @@ def test_sigkill_mid_commit_resumes_to_uninterrupted(spark, tmp_path, uninterrup
 
 def test_main_rejects_unknown_stage_before_spark(tmp_path):
     """An unknown --stage name is an argument error (exit 2) raised
-    before any Spark session starts or any output is written."""
+    before any Spark session starts or any output is written; the
+    deleted ``metrics`` stage is one."""
     out = tmp_path / "out"
-    proc = subprocess.run(
-        [sys.executable, "main.py", "--out", str(out), "--stage", "ingest,bogus"],
-        cwd=ROOT, capture_output=True, text=True, timeout=300,
-    )
-    assert proc.returncode == 2, proc.stderr
-    assert "bogus" in proc.stderr
-    assert not out.exists()
+    for stage, unknown in [("ingest,bogus", "bogus"), ("metrics", "metrics")]:
+        proc = subprocess.run(
+            [sys.executable, "main.py", "--out", str(out), "--stage", stage],
+            cwd=ROOT, capture_output=True, text=True, timeout=300,
+        )
+        assert proc.returncode == 2, proc.stderr
+        assert f"unknown --stage {unknown}" in proc.stderr
+        assert not out.exists()
 
 
 def test_pipeline_deterministic_across_runs(spark, tmp_path, uninterrupted):
