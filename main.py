@@ -103,9 +103,10 @@ def main() -> None:
     t0 = time.time()
     info = run_pipeline(spark, cfg, stages)
     wall = time.time() - t0
-    # the committed triples, whether extract ran or was resumed
+    # the committed triples, whether extract ran or was resumed; the
+    # rate counts only the triples this run's extract committed
     committed = SnapshotTable(cfg.out, "triples").latest_manifest()
-    triples = committed["n_rows"] if committed else None
+    extracted = info.get("extract", {}).get("triples")
     print(
         json.dumps(
             {
@@ -115,8 +116,10 @@ def main() -> None:
                     for k, v in info.items()
                 },
                 "wall_s": round(wall, 2),
-                "triples_total": triples,
-                "triples_per_sec": round(triples / wall, 1) if triples else None,
+                "triples_total": committed["n_rows"] if committed else None,
+                "triples_per_sec": (
+                    round(extracted["n_rows"] / wall, 1) if extracted else None
+                ),
             }
         )
     )

@@ -8,7 +8,11 @@ converges in O(log n) rounds on star-shaped skew, vs O(diameter) for
 naive label propagation.
 
 Each round shuffles on node id; lineage is cut with localCheckpoint per
-iteration so the plan doesn't grow (SURVEY.md §7.4.2). Determinism: the
+iteration so the plan doesn't grow (SURVEY.md §7.4.2). After a round
+every edge points from a node to a smaller one, and the loop stops on an
+exact test: once the edges are stars, each star is a component centred
+on its minimum. A graph still unconverged after ``MAX_ROUNDS`` rounds
+raises instead of returning a partial labelling. Determinism: the
 component id is the component's minimum node id — content-derived,
 independent of partitioning.
 """
@@ -115,8 +119,20 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 
 
 # safety bound on the large-star/small-star rounds; convergence takes
-# O(log n) rounds, so a graph that reaches it stops unconverged
+# O(log n) rounds, so reaching it is an error, not a result
 MAX_ROUNDS = 20
+
+
+def _is_stars(e: DataFrame) -> bool:
+    """True when no src occurs in a second edge, as src or as dst. As
+    every edge points at a smaller node, the edges are then stars centred
+    on their components' minimums. "No dst is a src" alone is not enough:
+    edges 2->1 and 2->0 pass it, yet join two stars."""
+    ends = e.select(F.col("src").alias("node"), F.lit(1).alias("out")).unionByName(
+        e.select(F.col("dst").alias("node"), F.lit(0).alias("out"))
+    )
+    agg = ends.groupBy("node").agg(F.max("out").alias("out"), F.count(F.lit(1)).alias("n"))
+    return agg.filter((F.col("out") == 1) & (F.col("n") > 1)).isEmpty()
 
 
 def connected_components(
@@ -126,50 +142,27 @@ def connected_components(
 
     Below ``driver_threshold`` edges the graph is solved driver-side
     (union-find); above it the alternating-star iterative joins run
-    distributed. Both paths return identical results (the property tests
-    run both). Isolated nodes (absent from edges) are the caller's
-    concern — union them afterwards with component = their own id.
+    distributed until the edges are stars (an exact test), raising
+    ``RuntimeError`` after ``MAX_ROUNDS`` rounds. Both paths return
+    identical results (the property tests run both). Isolated nodes
+    (absent from edges) are the caller's concern — union them afterwards
+    with component = their own id.
     """
-    def _sig(df: DataFrame) -> tuple[int, int]:
-        """(row count, order-insensitive content hash) in ONE map-side-
-        combined aggregate — the convergence check costs one pass, not
-        the two exceptAll shuffles of the naive set-equality form."""
-        # bit_xor: order-insensitive, overflow-free (edges are distinct
-        # post-_small_star, so xor cancellation of duplicates is moot)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
     # the edge count is observed on the checkpoint's own job
     counted = Observation()
     e = _canonical_edges(edges).observe(counted, F.count(F.lit(1)).alias("n")).localCheckpoint()
     if counted.get["n"] <= driver_threshold:
         return _driver_union_find(e)
-    sig = _sig(e)
-    prev = e
     for _ in range(MAX_ROUNDS):
-        e2 = _small_star(_large_star(e)).localCheckpoint()
-        # converged when the edge multiset is stable (both frames are
-        # (node -> smaller node) maps after a small-star step). The
-        # (count, bit_xor) signature is probabilistic — a 64-bit
-        # collision could stop iteration early — so the break is
-        # CONFIRMED with one exact exceptAll on the final iteration
-        # only (round-1 advisor finding): O(1) extra shuffles total,
-        # not O(rounds).
-        sig2 = _sig(e2)
-        prev, e = e, e2
-        if sig2 == sig:
-            if prev.exceptAll(e).limit(1).count() == 0:
-                break
-        sig = sig2
-    # e now maps every non-root node to its component minimum
+        e = _small_star(_large_star(e)).localCheckpoint()
+        if _is_stars(e):
+            break
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {MAX_ROUNDS} rounds"
+        )
+    # e maps every non-centre node to its component minimum; its dsts
+    # are the centres
     nodes = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = (
-        e.select(F.col("dst").alias("node"))
-        .distinct()
-        .join(e.select(F.col("src").alias("node")).distinct(), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    return nodes.unionByName(roots)
+    roots = e.select(F.col("dst").alias("node")).distinct()
+    return nodes.unionByName(roots.select("node", F.col("node").alias("component")))

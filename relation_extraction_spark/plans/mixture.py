@@ -1,8 +1,8 @@
 """Training-mixture pipeline — the §2.11 ops composed into ONE job.
 
     quality filter → decontaminate → exact dedup → near-dup cluster
-    (keep one per cluster) → sequence packing → snapshot commit +
-    audit metrics
+    (keep one per cluster) → sequence packing → ONE snapshot commit,
+    the audit counts in its manifest
 
 Every stage runs the operator that a DuckDB-checked registry entry
 (plans/queries.py) runs, so this module only composes them:
@@ -28,14 +28,19 @@ Scale shape: the quality filter is narrow (no shuffle);
 decontamination broadcasts the (tiny) eval shingle set; clustering
 shuffles on shingle blocking keys only; packing is the two-pass
 distributed prefix sum (operators/packing.py — no whole-stratum
-reducer). One lakehouse commit at the end, not per stage.
+reducer). One lakehouse commit at the end, made as a KG stage makes it
+(plans/pipeline.py ``commit_stage``): ``mixture_docs`` is replaced, the
+audit counts ride its manifest's ``stage_metrics``, and ``metrics`` and
+``lineage`` are derived from that manifest, so the counts are
+crash-exact and a rerun into the same ``out`` replaces the output.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import quality_filter_exprs
@@ -46,7 +51,7 @@ from ..operators.dedup import (
 )
 from ..operators.packing import pack_offsets_scalable, token_counts
 from ..sources.lakehouse import SnapshotTable
-from .pipeline import METRICS_SCHEMA
+from .pipeline import commit_stage, flush_metrics
 
 EVAL_MAX_DOC_ID = 10  # docs below this id form the eval set
 DECONTAM_NGRAM = 4
@@ -70,9 +75,11 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     the job makes anyway — ONE two-key histogram covers input size,
     the per-rule rejection table and the train-side split; the
     contamination and near-dup numbers come from counting the (tiny)
-    dropped-id frames; the remaining stage sizes are derived by
-    arithmetic. No full-corpus scan exists only to produce a metric.
+    dropped-id frames; the exact-dedup survivors are observed on their
+    own checkpoint, and the output size is the commit's row count. No
+    full-corpus scan exists only to produce a metric.
     """
+    t0 = time.time()
     docs = spark.read.parquet(cfg.input_parquet)
 
     # 1. quality filter — keep verdict + per-rule rejection counts.
@@ -124,10 +131,16 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
     #     shuffle and shrinks the expensive shingle pass's input, so
     #     the near-dup stage only pays for genuinely fuzzy matches.
     #     Column pruning drops exact_dedup's unused n_copies count.
+    #     The checkpoint is eager: an Observation below a lazy
+    #     localCheckpoint never reports.
     keep_ids = exact_dedup(decon).select(F.col("keep_id").alias("doc_id"))
-    exact_kept = decon.join(keep_ids, "doc_id", "left_semi").localCheckpoint(
-        eager=False
+    kept = Observation("exact_kept")
+    exact_kept = (
+        decon.join(keep_ids, "doc_id", "left_semi")
+        .observe(kept, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
+    n_exact_kept = kept.get["n"]
 
     # 3b. near-dup clustering — keep each cluster's component-minimum
     #     representative, drop the rest
@@ -136,19 +149,15 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
         .filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )
-    # drop ⊆ exact_kept (CC nodes are pair endpoints), so stage sizes
-    # derive from this TINY frame: n_exact_kept = n_output + n_dropped
+    # drop ⊆ exact_kept (CC nodes are pair endpoints): TINY to count
     n_near_dup_dropped = drop.count()
     unique = exact_kept.join(drop, "doc_id", "left_anti")
 
     # 4. sequence packing over survivors (two-pass scalable form)
     packed = pack_offsets_scalable(token_counts(unique), budget=PACK_BUDGET)
 
-    # 5. one commit: the mixture table + the audit metrics
-    out_tbl = SnapshotTable(cfg.out, "mixture_docs")
-    manifest = out_tbl.append(packed, stage="mixture")
-    n_out = manifest["n_rows"]
-    n_exact_kept = n_out + n_near_dup_dropped
+    # 5. one commit: the mixture table, its manifest carrying the audit
+    #    counts; metrics and lineage are derived from that manifest
     counts = {
         "n_input": n_input,
         "n_quality_dropped": sum(reason_counts.values()),
@@ -156,20 +165,11 @@ def run_mixture(spark: SparkSession, cfg: MixtureConfig) -> dict:
         "n_contaminated": n_contaminated,
         "n_exact_dup_dropped": n_decon - n_exact_kept,
         "n_near_dup_dropped": n_near_dup_dropped,
-        "n_output": n_out,
         **{f"quality_drop[{k}]": v for k, v in sorted(reason_counts.items())},
     }
-    SnapshotTable(cfg.out, "metrics").append_rows(
-        [
-            {
-                "metric": k,
-                "value": float(v),
-                "stage": "mixture",
-                "run_id": cfg.run_id,
-            }
-            for k, v in counts.items()
-        ],
-        METRICS_SCHEMA,
-        stage="mixture",
+    manifest = commit_stage(
+        SnapshotTable(cfg.out, "mixture_docs"), "mixture", packed, cfg.run_id,
+        t0, "n_output", **counts,
     )
-    return counts
+    flush_metrics(cfg.out, ["mixture_docs"], cfg.run_id)
+    return {**counts, "n_output": manifest["n_rows"]}

@@ -90,80 +90,84 @@ def _ms_since(t0: float) -> int:
     return int((time.time() - t0) * 1000)
 
 
+def commit_stage(
+    table: SnapshotTable,
+    stage: str,
+    df: DataFrame,
+    run_id: str,
+    t0: float | None = None,
+    rows_metric: str | None = None,
+    **metrics: float,
+) -> dict:
+    """Snapshot-commit one output table; its manifest records the run
+    that wrote it. A stage's LAST commit passes ``t0``: its manifest's
+    ``extra`` then also carries the stage's metric rows — ``metrics``,
+    ``rows_metric`` (named for the table's row count) and the stage's
+    wall time up to the write, to which flush_metrics() adds the write's
+    own ``wall_ms``. They are published atomically with the data, so a
+    killed run loses none of them."""
+    extra = {"run_id": run_id}
+    if t0 is not None:
+        extra["stage_metrics"] = {
+            "metrics": metrics,
+            "rows_metric": rows_metric,
+            "wall_ms": _ms_since(t0),
+        }
+    return table.commit(df, stage=stage, extra=extra)
+
+
+def flush_metrics(root: str, tables: list[str], run_id: str) -> None:
+    """Replace-commit ``root``'s ``metrics`` and ``lineage`` tables,
+    derived from the newest manifest of each of ``tables``: driver-side,
+    no Spark job. A resumed run derives the same rows as an
+    uninterrupted one, whichever stages it skipped. Lineage has one row
+    per committed data file (a write task's output), ``file`` relative
+    to ``root``; ``part_key`` is the file's index within its table."""
+    metrics, lineage = [], []
+    for name in tables:
+        m = SnapshotTable(root, name).latest_manifest()
+        if m is None:
+            continue
+        m_run_id = m["extra"].get("run_id", run_id)
+        lineage += [
+            {
+                "run_id": m_run_id,
+                "stage": m["stage"],
+                "part_key": i,
+                "file": f"{name}/{f}",
+                "n_rows": int(n),
+                "wall_ms": m["wall_ms"],
+            }
+            for i, (f, n) in enumerate(sorted(m["file_rows"].items()))
+        ]
+        sm = m["extra"].get("stage_metrics")
+        if sm is None:
+            continue
+        rows = dict(sm["metrics"])
+        if sm["rows_metric"]:
+            rows[sm["rows_metric"]] = m["n_rows"]
+        rows[f"{m['stage']}_wall_ms"] = sm["wall_ms"] + m["wall_ms"]
+        metrics += [
+            {"metric": k, "value": float(v), "stage": m["stage"], "run_id": m_run_id}
+            for k, v in rows.items()
+        ]
+    SnapshotTable(root, "metrics").commit_rows(metrics, METRICS_SCHEMA, stage="run")
+    SnapshotTable(root, "lineage").commit_rows(lineage, LINEAGE_SCHEMA, stage="run")
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
         self.cfg = cfg
-        self.tables = {
-            name: SnapshotTable(cfg.out, name)
-            for name in DATA_TABLES + ["lineage", "metrics"]
-        }
+        self.tables = {name: SnapshotTable(cfg.out, name) for name in DATA_TABLES}
 
     # ------------------------------------------------------------- plumbing
 
-    def _commit(
-        self,
-        stage: str,
-        table: str,
-        df: DataFrame,
-        t0: float | None = None,
-        rows_metric: str | None = None,
-        **metrics: float,
-    ) -> dict:
-        """Snapshot-commit one output table; its manifest records the run
-        that wrote it. A stage's LAST commit passes ``t0``: its manifest's
-        ``extra`` then also carries the stage's metric rows — ``metrics``,
-        ``rows_metric`` (named for the table's row count) and the stage's
-        wall time up to the write, to which flush_metrics() adds the
-        write's own ``wall_ms``. They are published atomically with the
-        data, so a killed run loses none of them."""
-        extra = {"run_id": self.cfg.run_id}
-        if t0 is not None:
-            extra["stage_metrics"] = {
-                "metrics": metrics,
-                "rows_metric": rows_metric,
-                "wall_ms": _ms_since(t0),
-            }
-        return self.tables[table].commit(df, stage=stage, extra=extra)
+    def _commit(self, stage: str, table: str, df: DataFrame, *args, **kwargs) -> dict:
+        return commit_stage(self.tables[table], stage, df, self.cfg.run_id, *args, **kwargs)
 
     def flush_metrics(self) -> None:
-        """Replace-commit the ``metrics`` and ``lineage`` tables, derived
-        from the newest manifest of every data table: driver-side, no
-        Spark job. A resumed run derives the same rows as an
-        uninterrupted one, whichever stages it skipped. Lineage has one
-        row per committed data file (a write task's output), ``file``
-        relative to the pipeline root; ``part_key`` is the file's index
-        within its table."""
-        metrics, lineage = [], []
-        for name in DATA_TABLES:
-            m = self.tables[name].latest_manifest()
-            if m is None:
-                continue
-            run_id = m["extra"].get("run_id", self.cfg.run_id)
-            lineage += [
-                {
-                    "run_id": run_id,
-                    "stage": m["stage"],
-                    "part_key": i,
-                    "file": f"{name}/{f}",
-                    "n_rows": int(n),
-                    "wall_ms": m["wall_ms"],
-                }
-                for i, (f, n) in enumerate(sorted(m["file_rows"].items()))
-            ]
-            sm = m["extra"].get("stage_metrics")
-            if sm is None:
-                continue
-            rows = dict(sm["metrics"])
-            if sm["rows_metric"]:
-                rows[sm["rows_metric"]] = m["n_rows"]
-            rows[f"{m['stage']}_wall_ms"] = sm["wall_ms"] + m["wall_ms"]
-            metrics += [
-                {"metric": k, "value": float(v), "stage": m["stage"], "run_id": run_id}
-                for k, v in rows.items()
-            ]
-        self.tables["metrics"].commit_rows(metrics, METRICS_SCHEMA, stage="run")
-        self.tables["lineage"].commit_rows(lineage, LINEAGE_SCHEMA, stage="run")
+        flush_metrics(self.cfg.out, DATA_TABLES, self.cfg.run_id)
 
     def _done(self, *tables: str) -> bool:
         return all(self.tables[t].exists() for t in tables)
@@ -190,13 +194,16 @@ class Pipeline:
                 skew=self.cfg.skew,
                 dup_frac=self.cfg.dup_frac,
             )
-        # as-of dedup of recrawls: keep latest warc_ts per url (J9).
-        # repartition FIRST: the ranking window requires a hash
-        # distribution on url, and HashPartitioning(url, n_buckets)
-        # satisfies it — window-then-repartition shuffled the full
-        # corpus TWICE on the same key (round-2 plan audit).
+        # as-of dedup of recrawls: keep latest warc_ts per url (J9), the
+        # greater html on a tied warc_ts, so the kept page never depends
+        # on input row order. repartition FIRST: the ranking window
+        # requires a hash distribution on url, and
+        # HashPartitioning(url, n_buckets) satisfies it —
+        # window-then-repartition shuffled the full corpus TWICE on the
+        # same key (round-2 plan audit).
         pages = latest_per_key(
-            raw.repartition(self.cfg.n_buckets, "url"), ["url"], "warc_ts"
+            raw.repartition(self.cfg.n_buckets, "url"), ["url"], "warc_ts",
+            tiebreak="html",
         )
         return {
             "web_pages": self._commit(

@@ -168,22 +168,12 @@ class SnapshotTable:
             parent, snap_id, token, files, t0, "append", stage, df.schema.json()
         )
 
-    def append_rows(self, rows: list[dict], schema: "pa.Schema", stage: str = "") -> dict:
-        """Driver-side fast-append of a handful of rows (metrics/lineage):
-        one pyarrow parquet write + manifest publish, zero Spark jobs.
-        At cluster scale these tiny control-plane writes come from the
-        driver anyway — routing them through executors is pure overhead."""
-        return self.commit_rows(rows, schema, stage, operation="append")
-
-    def commit_rows(
-        self,
-        rows: list[dict],
-        schema: "pa.Schema",
-        stage: str = "",
-        operation: str = "replace",
-    ) -> dict:
-        """Driver-side snapshot of a handful of rows: a full replace, or
-        with ``operation="append"`` the parent's files plus the new one."""
+    def commit_rows(self, rows: list[dict], schema: "pa.Schema", stage: str = "") -> dict:
+        """Driver-side full-replace snapshot of a handful of rows
+        (metrics/lineage): one pyarrow parquet write + manifest publish,
+        zero Spark jobs. At cluster scale these tiny control-plane writes
+        come from the driver anyway — routing them through executors is
+        pure overhead."""
         parent, snap_id, token, data_dir = self._next_snapshot()
         t0 = time.time()
         os.makedirs(data_dir, exist_ok=True)
@@ -191,7 +181,7 @@ class SnapshotTable:
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
         pq.write_table(pa.table(cols, schema=schema), path)
         new_files = [(os.path.relpath(path, self.dir), len(rows))]
-        return self._publish(parent, snap_id, token, new_files, t0, operation, stage)
+        return self._publish(parent, snap_id, token, new_files, t0, "replace", stage)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Read the file list of the newest (or a pinned) snapshot."""

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from relation_extraction_spark.operators.canonicalize import (
@@ -112,6 +113,26 @@ def test_cc_partition_invariance(spark):
     a = sorted(map(tuple, connected_components(df1).collect()))
     b = sorted(map(tuple, connected_components(df8).collect()))
     assert a == b
+
+
+def test_cc_distributed_stops_only_on_stars(spark):
+    """One round turns the path 0-2-3-4-1 into 2->0, 2->1, 3->0, 4->1:
+    no dst is also a src, yet node 2 joins the stars at 0 and 1. The
+    distributed path goes on until every node maps to 0, once."""
+    df = spark.createDataFrame([(2, 0), (3, 2), (4, 1), (4, 3)], "src long, dst long")
+    got = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
+    assert got == [(n, 0) for n in range(5)]
+
+
+def test_cc_distributed_raises_at_max_rounds(spark, monkeypatch):
+    """A graph still unconverged after MAX_ROUNDS rounds raises instead
+    of returning a partial labelling: a 64-node chain needs 6 rounds."""
+    from relation_extraction_spark.operators import connected_components as CC
+
+    monkeypatch.setattr(CC, "MAX_ROUNDS", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(64)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        CC.connected_components(df, driver_threshold=0)
 
 
 def test_canonicalize_merges_near_duplicate_forms(spark):

@@ -95,6 +95,41 @@ class TestMixturePipeline:
         got = dict(zip(m.metric, m.value))
         assert got["n_output"] == c["n_output"]
 
+    def test_rerun_replaces_output_and_metrics(self, spark, sf_dir, tmp_path):
+        """A second run into the same ``out`` replaces ``mixture_docs``
+        and its metric rows instead of adding to them; the metric rows
+        come back from the ``mixture_docs`` manifest alone."""
+        import shutil
+
+        from relation_extraction_spark.sources.lakehouse import SnapshotTable
+
+        def committed(out):
+            docs = SnapshotTable(out, "mixture_docs").read(spark).select("doc_id").collect()
+            metrics = sorted(
+                (r.metric, r.stage, r.run_id,
+                 None if r.metric.endswith("_wall_ms") else r.value)
+                for r in SnapshotTable(out, "metrics").read(spark).collect()
+            )
+            return [r.doc_id for r in docs], metrics
+
+        for _ in range(2):
+            out, c = self._run(spark, sf_dir, tmp_path)
+            ids, metrics = committed(out)
+            assert len(ids) == len(set(ids)) == c["n_output"] > 0
+            names = [m[0] for m in metrics]
+            assert sorted(names) == sorted([*c, "mixture_wall_ms"])
+            assert {m[1:3] for m in metrics} == {("mixture", "t")}
+            assert all(v == c[k] for k, _s, _r, v in metrics if k in c)
+        # crash-exact: the manifest alone re-derives the same rows
+        from relation_extraction_spark.plans.pipeline import flush_metrics
+
+        for t in ("metrics", "lineage"):
+            shutil.rmtree(f"{out}/{t}")
+        flush_metrics(out, ["mixture_docs"], "t")
+        assert committed(out) == (ids, metrics)
+        lineage = SnapshotTable(out, "lineage").read(spark).collect()
+        assert sum(r.n_rows for r in lineage) == c["n_output"]
+
     def test_eval_docs_never_in_output(self, spark, sf_dir, tmp_path):
         from relation_extraction_spark.sources.lakehouse import SnapshotTable
 

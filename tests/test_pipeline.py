@@ -279,8 +279,9 @@ def test_hard_stop_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
 def test_sigkill_mid_commit_resumes_to_uninterrupted(spark, tmp_path, uninterrupted):
     """A real main.py process SIGKILLed between the canonicalize
     mapping commit's data write and its manifest publish, then resumed
-    by a second main.py: same tables, and the dead writer's data
-    directory is gone."""
+    by a second main.py: same tables, the dead writer's data directory
+    is gone, and the resumed run reports no triples rate, since its
+    extract did no work."""
     out = str(tmp_path / "sigkill")
     cmd = [
         sys.executable, "main.py", "--out", out, "--pages", str(N),
@@ -302,9 +303,14 @@ def test_sigkill_mid_commit_resumes_to_uninterrupted(spark, tmp_path, uninterrup
         proc.wait(timeout=60)
     assert SnapshotTable(out, "linked_mentions").exists()
     assert not SnapshotTable(out, "mapping").exists()
-    subprocess.run(cmd, cwd=ROOT, env=env, check=True, timeout=900,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    resumed = subprocess.run(cmd, cwd=ROOT, env=env, check=True, timeout=900,
+                             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     _assert_same_tables(spark, out, uninterrupted)
+    # extract was resumed, not run: the triples are reported, no rate is
+    report = json.loads(resumed.stdout.strip().splitlines()[-1])
+    assert report["stages"]["extract"] == {"skipped": True}
+    assert report["triples_total"] == SnapshotTable(uninterrupted, "triples").latest_manifest()["n_rows"]
+    assert report["triples_per_sec"] is None
 
 
 def test_main_rejects_unknown_stage_before_spark(tmp_path):
@@ -383,14 +389,42 @@ def test_canonicalize_distributed_cc_equals_driver_path(
     assert dist_entities == driver_entities
 
 
+def _write_pages(pages: list[dict], src: str) -> None:
+    """One parquet file of ``make_page`` rows, in list order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([
+        ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
+        ("html", pa.binary()), ("text", pa.string()), ("lang", pa.string()),
+    ])
+    os.makedirs(src)
+    pq.write_table(pa.Table.from_pylist(pages, schema=schema), f"{src}/part-0.parquet")
+
+
+def test_ingest_keeps_greater_html_on_tied_warc_ts(spark, tmp_path):
+    """Two crawls of one url with the same warc_ts: ingest commits the
+    one with the greater html, whatever the input row order and the
+    bucket count."""
+    from relation_extraction_spark.sources.corpus import make_page
+
+    a = make_page(42, 0, skew=0.2, lang_en=1.0)
+    b = dict(a, html=a["html"] + b"<!-- recrawl -->")
+    for k, rows in enumerate([[a, b], [b, a]]):
+        for n_buckets in (1, 4):
+            src, out = (str(tmp_path / f"{d}-{k}-{n_buckets}") for d in ("in", "out"))
+            _write_pages(rows, src)
+            cfg = PipelineConfig(out=out, input_parquet=src, n_buckets=n_buckets, run_id="tie")
+            Pipeline(spark, cfg).stage_ingest()
+            got = SnapshotTable(out, "web_pages").read(spark).select("html").collect()
+            assert [r.html for r in got] == [b["html"]], (k, n_buckets)
+
+
 def test_extract_quarantines_text_mismatches(spark, tmp_path):
     """D1 quarantine: a page whose stored ``text`` differs from
     ``extract_text_py(html)``, and a page whose ``text`` is NULL, are each
     counted once in ``text_invariant_mismatches`` and add no sentences,
     triples or mentions; every other page extracts as usual."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from relation_extraction_spark.functions.segment import segment_py
     from relation_extraction_spark.sources.corpus import make_page
 
@@ -398,13 +432,8 @@ def test_extract_quarantines_text_mismatches(spark, tmp_path):
     pages[1]["text"] += " Tampered text."
     pages[2]["text"] = None
     bad = {pages[1]["url"], pages[2]["url"]}
-    schema = pa.schema([
-        ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
-        ("html", pa.binary()), ("text", pa.string()), ("lang", pa.string()),
-    ])
     src = str(tmp_path / "pages")
-    os.makedirs(src)
-    pq.write_table(pa.Table.from_pylist(pages, schema=schema), f"{src}/part-0.parquet")
+    _write_pages(pages, src)
     out = str(tmp_path / "out")
     info = run_pipeline(
         spark, PipelineConfig(out=out, input_parquet=src, n_buckets=2, run_id="q"),
